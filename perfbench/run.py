@@ -3,11 +3,9 @@
     python3 perfbench/run.py --workload pipeline --seed 1 --seconds 1 --trace 0
 
 Run from anywhere inside a checkout of the repository; the engine is
-imported from the checkout. The first run makes the input tables (and,
-for graph_iterate, the DuckDB oracle hashes) under
-``.bench_build/perfbench/`` and reuses them afterwards. Spark's scratch
-space, warehouse, temp files and event logs stay under the same
-directory.
+imported from the checkout. The inputs are the fixed sf0.1 tables in
+``perfbench/data/``. Spark's scratch space, warehouse, temp files and
+event logs stay under ``.bench_build/perfbench/``.
 
 One run: start a session on ``local[nproc]``, then repeat the workload's
 operation on the sf0.1 tables until ``--seconds`` have passed (at least
@@ -20,7 +18,6 @@ counters instead. The exit code is 0 only if every check passed.
 from __future__ import annotations
 
 import argparse
-import hashlib
 import json
 import os
 import statistics
@@ -31,48 +28,9 @@ import uuid
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 WORK = os.path.join(ROOT, ".bench_build", "perfbench")
-DATA_SEED = 42
-SCALE = 0.1
 #: counters reported for the whole operation; layer spans report all of
 #: spans.COUNTERS except task_retries
 OP_COUNTERS = ("wall_s", "self_s", "jobs", "driver_gap_s", "task_retries")
-
-
-def _data_dir(sf: float) -> str:
-    from datagen import write
-
-    path = os.path.join(WORK, "data", f"sf{sf}")
-    if not os.path.isdir(path):
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        write(path, sf, DATA_SEED)
-    return path
-
-
-def _fingerprint(sf_dir: str) -> str:
-    digest = hashlib.sha256()
-    for name in sorted(os.listdir(sf_dir)):
-        with open(os.path.join(sf_dir, name), "rb") as fh:
-            digest.update(name.encode() + fh.read())
-    return digest.hexdigest()
-
-
-def _oracle(sf_dir: str) -> dict:
-    """DuckDB-twin result hashes for ``sf_dir``: the recorded ones when
-    the tables are the recorded tables, else computed (about a minute)
-    and kept beside the data."""
-    from workloads import oracle_hashes
-
-    with open(os.path.join(HERE, "oracle.json")) as fh:
-        recorded = json.load(fh)
-    if recorded["data_sha256"] == _fingerprint(sf_dir):
-        return recorded["hashes"]
-    path = sf_dir + ".oracle.json"
-    if not os.path.exists(path):
-        with open(path + ".tmp", "w") as fh:
-            json.dump(oracle_hashes(sf_dir), fh)
-        os.rename(path + ".tmp", path)
-    with open(path) as fh:
-        return json.load(fh)
 
 
 def _spark_env(trace: bool, marker: str) -> None:
@@ -199,12 +157,10 @@ def main(argv=None) -> int:
     sys.path.insert(0, HERE)
     import rel_db_to_graph_spark  # noqa: F401  (fail fast without the engine)
     from spans import Tracer
-    from workloads import WORKLOADS
+    from workloads import DATA, WORKLOADS
 
     workload = WORKLOADS[args.workload](args.seed)
-    sf_dir = _data_dir(SCALE)
-    if hasattr(workload, "oracle"):
-        workload.oracle[sf_dir] = _oracle(sf_dir)
+    sf_dir = os.path.join(DATA, "sf0.1")
     marker = uuid.uuid4().hex
     _spark_env(bool(args.trace), marker)
 

@@ -3,8 +3,8 @@ tiny traced run, and the private engine names the benchmark relies on.
 
     python3 -m pytest perfbench/tests -q -p no:cacheprovider
 
-The traced test makes sf0.001 tables in a temporary directory and runs
-both workloads' operations once on ``local[2]`` (about two minutes).
+The traced test runs both workloads' operations once on the sf0.001
+tables in perfbench/data, on ``local[2]`` (about two minutes).
 """
 
 from __future__ import annotations
@@ -93,17 +93,25 @@ def test_private_engine_names_are_where_the_benchmark_expects():
     assert callable(pipeline.mutate_for_inference)
 
 
+def test_recorded_oracle_hashes_are_the_duckdb_twins():
+    """oracle.json holds the hashes of the DuckDB twins' results; checked
+    here on sf0.001 (sf0.1 takes about a minute)."""
+    from workloads import DATA, GraphIterate, oracle_hashes
+
+    recorded = GraphIterate(0).oracle
+    assert set(recorded) == set(os.listdir(DATA))
+    assert recorded["sf0.001"] == oracle_hashes(os.path.join(DATA, "sf0.001"))
+
+
 @pytest.fixture(scope="module")
 def traced(tmp_path_factory):
-    """Both workloads' operations once on sf0.001 tables, traced."""
-    from datagen import write
+    """Both workloads' operations once on the sf0.001 tables, traced."""
     from pyspark.sql import SparkSession
 
-    from workloads import GraphIterate, Pipeline, oracle_hashes
+    from workloads import DATA, GraphIterate, Pipeline
 
-    base = tmp_path_factory.mktemp("perfbench")
-    sf_dir, log_dir = str(base / "sf0.001"), base / "eventlog"
-    write(sf_dir, 0.001)
+    sf_dir = os.path.join(DATA, "sf0.001")
+    log_dir = tmp_path_factory.mktemp("perfbench") / "eventlog"
     log_dir.mkdir()
     spark = (SparkSession.builder.master("local[2]")
              .appName("perfbench-test")
@@ -119,12 +127,14 @@ def traced(tmp_path_factory):
     tracer = Tracer(spark.sparkContext)
     runs = []
     for workload in (Pipeline(7), GraphIterate(7)):
-        workload.install(tracer)
-        with tracer.span("op"):
-            out = workload.op(spark, tracer, sf_dir)
+        undo = workload.install(tracer)
+        try:
+            with tracer.span("op"):
+                out = workload.op(spark, tracer, sf_dir)
+        finally:
+            undo()
         runs.append((workload, out))
     spark.stop()
-    runs[1][0].oracle[sf_dir] = oracle_hashes(sf_dir)
     return {"sf_dir": sf_dir, "runs": runs, "tracer": tracer,
             "log": read_event_log(str(log_dir / app_id))}
 

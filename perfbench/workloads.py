@@ -9,9 +9,10 @@ outside every timed interval, and returns a list of problems.
 from __future__ import annotations
 
 import hashlib
+import json
 import math
+import os
 import random
-from datetime import datetime
 
 #: the link the reference trains and serves: orders -> part
 EDGE = ("orders", "hasPart", "part")
@@ -21,6 +22,10 @@ EPOCHS = 3
 #: DuckDB twins (rel_db_to_graph_spark.oracle.ORACLES) of graph_iterate
 ORACLE_QUERIES = {"pagerank": "pagerank", "components": "dedup_clusters",
                   "triangles": "triangle_count"}
+#: the tables the benchmark reads, one directory per scale factor
+DATA = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data")
+#: recorded hashes of those twins' results, per data directory name
+ORACLE_FILE = os.path.join(os.path.dirname(DATA), "oracle.json")
 
 
 def clear_caches() -> None:
@@ -52,42 +57,22 @@ def force_graph(graph: dict) -> dict:
     return {frames[r.i][0]: r.n for r in counts.collect()}
 
 
-def _canon(v) -> str:
-    """One value in the form tests/oracle_harness.py compares. A copy,
-    because the benchmark does not import the test suite (``tests`` is a
-    namespace package that perfbench/tests would shadow)."""
-    import pandas as pd
-
-    if v is None:
-        return "NULL"
-    if isinstance(v, float):
-        return "nan" if math.isnan(v) else repr(v)
-    if isinstance(v, (pd.Timestamp, datetime)):
-        return pd.Timestamp(v).strftime("%Y-%m-%d %H:%M:%S.%f")
-    if isinstance(v, bool):
-        return str(int(v))
-    return str(v)
-
-
 def result_hash(pdf) -> str:
-    """Order-insensitive hash of a result: columns sorted by name, values
-    canonicalised, rows sorted."""
-    cols = sorted(pdf.columns)
-    rows = sorted(tuple(_canon(v) for v in row)
-                  for row in pdf[cols].itertuples(index=False))
-    return hashlib.sha256(repr((cols, rows)).encode()).hexdigest()
+    """Order-insensitive hash of a result, over the rows in the form
+    tests/oracle_harness.py compares them."""
+    from tests.oracle_harness import canonical_rows
+
+    rows = canonical_rows(pdf)
+    return hashlib.sha256(repr((sorted(pdf.columns), rows)).encode()).hexdigest()
 
 
 def oracle_hashes(sf_dir: str) -> dict[str, str]:
-    """Hashes of the DuckDB twins of graph_iterate's three queries."""
-    import duckdb
-
+    """Hashes of the DuckDB twins of graph_iterate's three queries; the
+    values oracle.json records for each data directory."""
     from rel_db_to_graph_spark.oracle import ORACLES
-    from rel_db_to_graph_spark.sources.catalog import TABLES
+    from tests.oracle_harness import duck_con
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    con = duck_con(sf_dir)
     try:
         return {span: result_hash(con.execute(ORACLES[q]).df())
                 for span, q in ORACLE_QUERIES.items()}
@@ -148,10 +133,14 @@ class Pipeline:
         self.rng = random.Random(seed)
         self._expected: dict[str, dict] = {}
 
-    def install(self, tracer) -> None:
+    def install(self, tracer):
         """Open spans around the trainer and the mutation that
-        ``pipeline.train`` and ``pipeline.recommend`` call."""
+        ``pipeline.train`` and ``pipeline.recommend`` call. Returns a
+        function that puts the original names back."""
         from rel_db_to_graph_spark import pipeline
+
+        originals = {"train_edge_scorer": pipeline.train_edge_scorer,
+                     "mutate_for_inference": pipeline.mutate_for_inference}
 
         def wrap(fn, name):
             def inner(*a, **kw):
@@ -162,6 +151,11 @@ class Pipeline:
                                           "edge_scorer")
         pipeline.mutate_for_inference = wrap(pipeline.mutate_for_inference,
                                              "mutate")
+
+        def undo():
+            for name, fn in originals.items():
+                setattr(pipeline, name, fn)
+        return undo
 
     def op(self, spark, tracer, sf_dir: str) -> dict:
         import pyarrow.parquet as pq
@@ -226,17 +220,19 @@ class GraphIterate:
     over near-duplicate document pairs (``components``) and per-part
     triangle counts on the co-purchase graph (``triangles``). Each
     result is collected in full through Arrow, which evaluates every
-    output column, and is hash-checked against its DuckDB twin. Inputs
-    are fixed, since the oracle hashes are computed once per dataset."""
+    output column, and is hash-checked against the recorded hash of its
+    DuckDB twin. The seed is unused: the inputs are the fixed tables
+    whose twin hashes oracle.json records."""
 
     name = "graph_iterate"
     spans = ("pagerank", "components", "triangles")
 
     def __init__(self, seed: int):
-        self.oracle: dict[str, dict] = {}  # sf_dir -> span -> result hash
+        with open(ORACLE_FILE) as fh:
+            self.oracle = json.load(fh)  # data dir name -> span -> hash
 
-    def install(self, tracer) -> None:
-        pass
+    def install(self, tracer):
+        return lambda: None
 
     def op(self, spark, tracer, sf_dir: str) -> dict:
         from rel_db_to_graph_spark import queries as Q
@@ -251,7 +247,7 @@ class GraphIterate:
         return out
 
     def check(self, sf_dir: str, out: dict) -> list[str]:
-        expected = self.oracle.get(sf_dir)
+        expected = self.oracle.get(os.path.basename(sf_dir))
         if expected is None:
             return [f"no oracle hashes for {sf_dir}"]
         return [f"{span} result differs from its DuckDB twin"
