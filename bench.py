@@ -104,23 +104,11 @@ def main() -> None:
     # steady-state quantity that matters at 100 TB), not one-time
     # compiler latency. Without this, graph_build pays ~8 s of codegen
     # at ANY data size.
-    from rel_db_to_graph_spark.operators.graph_build import _GRAPH_CACHE
-    from rel_db_to_graph_spark.queries import _COPURCHASE_CACHE
-
-    def clear_graph_cache() -> None:
-        for g in _GRAPH_CACHE.values():
-            for df in list(g["nodes"].values()) + list(g["edges"].values()):
-                df.unpersist()
-        _GRAPH_CACHE.clear()
-        for df in _COPURCHASE_CACHE.values():
-            df.unpersist()
-        _COPURCHASE_CACHE.clear()
-
     spark.range(1000).count()
     if warm_dir and warm_dir != sf_dir:
         for name, fn in HEADLINE.items():
             fn(spark, warm_dir)
-        clear_graph_cache()
+        Q.clear_caches()
 
     reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
     # the three noisiest queries (BASELINE.md: ~1.4x host drift on this
@@ -147,7 +135,7 @@ def main() -> None:
     def timed_pass(names) -> None:
         nonlocal pass_no
         pass_no += 1
-        clear_graph_cache()
+        Q.clear_caches()
         for name in names:
             group = f"bench:{name}:p{pass_no}"
             sc.setJobGroup(group, group)

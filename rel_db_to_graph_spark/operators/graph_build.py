@@ -311,55 +311,6 @@ def self_loops(node_ids: DataFrame) -> DataFrame:
                            F.col("node_id").alias("dst"))
 
 
-#: in-flight cap for the concurrent cache materialization below. A small
-#: pool per guide §2.6 — enough jobs in flight to back-fill executor
-#: cores freed by another frame's straggler tail, not so many that they
-#: fight for them. Independent of core count (the jobs themselves scale
-#: with the cluster); override with $SPARK_GRAFT_BUILD_THREADS, 0/1
-#: restores the serial path.
-_DEFAULT_BUILD_THREADS = 8
-
-
-def _materialize_concurrently(frames: list[DataFrame]) -> None:
-    """Materialize persisted frames from a driver thread pool (§2.6).
-
-    The node/edge frames are independent persisted subtrees. Materialized
-    lazily, each cached plan's inner adaptive execution runs ON THE
-    DRIVER THREAD that first touches it, so the 19 cache builds execute
-    as a strictly serial job staircase (measured: 108 sequential jobs
-    for the full assembly) even though no frame depends on another
-    until the final union. Counting each frame from a small thread pool
-    lets the scheduler overlap them: one frame's straggler/tail tasks
-    back-fill with the next frame's stages, and the wall clock drops
-    from the SUM of the subtree times toward their critical path.
-
-    Safe under concurrency: two jobs touching the same un-built cache
-    block on the BlockManager's per-partition cache locks (one computes,
-    the other waits) — never duplicated work, never a torn cache. The
-    frames are listed nodes-first so edge remaps usually find their id
-    maps already cached. ``count()`` on a persisted frame builds the
-    complete cache batches (caching is row-complete per partition
-    regardless of the action's projection).
-    """
-    import os as _os
-    workers = int(_os.environ.get("SPARK_GRAFT_BUILD_THREADS",
-                                  str(_DEFAULT_BUILD_THREADS)))
-    if workers <= 1 or len(frames) <= 1:
-        for df in frames:
-            df.count()
-        return
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    @inheritable_thread_target(frames[0].sparkSession)
-    def _count(df: DataFrame) -> None:
-        df.count()
-
-    with ThreadPoolExecutor(max_workers=min(workers, len(frames))) as pool:
-        list(pool.map(_count, frames))
-
-
 #: (applicationId, sf_dir, scalable_ids) -> built graph dict. The frames
 #: inside are persisted; several driver queries (hetero_counts,
 #: hetero_forward, recommend_gnn) need the same graph, and rebuilding it
@@ -456,15 +407,10 @@ def build_graph(spark: SparkSession, sf_dir: str, out_dir: str | None = None,
         edges[key] = edges_dense(pairs, ids[e["src_table"]],
                                  ids[e["dst_table"]]).persist()
 
-    # Materialize the 9 node-frame + 10 edge-frame caches CONCURRENTLY
-    # (guide §2.6; optimization round 13). They share no lineage until
-    # the degree/union consumers below, but built lazily each cached
-    # subtree's adaptive execution serializes on the driver thread —
-    # the measured 108-job serial staircase. One small thread pool
-    # overlaps them; every downstream consumer (degree joins, the
-    # bench's union-of-counts, the trainers) then reads built caches.
-    # Work and values are identical — only the schedule changes.
-    _materialize_concurrently(list(nodes.values()) + list(edges.values()))
+    # The caches build lazily, on first use by the degree joins below or
+    # by a caller. AQE sizes each one from its shuffle bytes (session.py:
+    # cached-plan coalescing), so at small scale a cache is a few tasks
+    # and has no straggler tail worth overlapping from a thread pool.
 
     # degree features (before reverse/self-loops, C:266). The endpoint
     # counts attach to the node frame DIRECTLY (left join + the same

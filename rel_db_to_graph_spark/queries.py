@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from rel_db_to_graph_spark.functions.vector import sigmoid
 from rel_db_to_graph_spark.operators import dedup as D
+from rel_db_to_graph_spark.operators import graph_build
 from rel_db_to_graph_spark.operators import text as T
 from rel_db_to_graph_spark.operators.events import (
     asof_join, hourly_rollup, range_join, sessionize)
@@ -2441,14 +2442,25 @@ def _copurchase_base(spark: SparkSession, sf_dir: str,
     key = (spark.sparkContext.applicationId, sf_dir, max_basket)
     if key not in _COPURCHASE_CACHE:
         while len(_COPURCHASE_CACHE) >= 2:
-            # release the evicted entry's checkpoint blocks (ADVICE r6:
-            # mirrors clear_graph_cache's _GRAPH_CACHE handling)
+            # release the evicted entry's checkpoint blocks, as
+            # graph_build._evict_graph does for the graph cache
             _COPURCHASE_CACHE.pop(
                 next(iter(_COPURCHASE_CACHE))).unpersist()
         _COPURCHASE_CACHE[key] = copurchase_edges(
             load_table(spark, sf_dir, "lineitem"), min_count=1,
             max_basket=max_basket).localCheckpoint(eager=True)
     return _COPURCHASE_CACHE[key]
+
+
+def clear_caches() -> None:
+    """Unpersist and empty the module-level caches: the built graphs
+    (``graph_build._GRAPH_CACHE``) and the co-purchase projections
+    (``_COPURCHASE_CACHE``). The next ``build_graph`` and the next
+    co-purchase query recompute from the tables."""
+    for key in list(graph_build._GRAPH_CACHE):
+        graph_build._evict_graph(key)
+    while _COPURCHASE_CACHE:
+        _COPURCHASE_CACHE.popitem()[1].unpersist()
 
 
 def q_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:

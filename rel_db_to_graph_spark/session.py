@@ -7,6 +7,16 @@ the ones that matter on a 1000-executor cluster:
     splitting, and dynamic broadcast conversion. At 100 TB the static
     shuffle-partition number is always wrong for some stage; AQE fixes
     it per-stage.
+  * AQE also coalesces cached plans
+    (``optimizer.canChangeCachedPlanOutputPartitioning``; off by default
+    in Spark). Without it every ``persist()``/``cache()`` keeps all
+    ``shuffle.partitions`` partitions however small the frame is, and
+    each later read of the cache pays one task per empty-ish partition.
+    With it, a persisted frame is sized from its measured shuffle bytes,
+    still bounded by AQE's min/advisory partition sizes. The trade-off:
+    a cached frame no longer promises the hash layout of its last
+    exchange, so a consumer that relied on that layout may plan one
+    extra exchange.
   * shuffle.partitions — sized for the local test data; on a real
     cluster this is ~2-3x total cores (AQE coalesces down).
   * Arrow on — every pandas_udf / mapInPandas / toPandas boundary is
@@ -32,6 +42,10 @@ def get_spark(app_name: str = "rel_db_to_graph_spark",
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # let AQE right-size persisted frames too; without it every
+        # cache keeps shuffle.partitions partitions (see module doc)
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
+                "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")

@@ -32,17 +32,6 @@ MARKERS = ["CartesianProduct", "BroadcastNestedLoopJoin",
            "SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin"]
 
 
-def _clear_caches() -> None:
-    from rel_db_to_graph_spark.operators.graph_build import _GRAPH_CACHE
-    for g in _GRAPH_CACHE.values():
-        for df in list(g["nodes"].values()) + list(g["edges"].values()):
-            df.unpersist()
-    _GRAPH_CACHE.clear()
-    for df in Q._COPURCHASE_CACHE.values():
-        df.unpersist()
-    Q._COPURCHASE_CACHE.clear()
-
-
 def main() -> None:
     spark = get_spark(app_name="audit_sf10")
     spark.sparkContext.setLogLevel("ERROR")
@@ -54,7 +43,7 @@ def main() -> None:
     for n, fn in fns.items():
         ts = {}
         for tag, d in (("sf1", SF1), ("sf10", SF10)):
-            _clear_caches()
+            Q.clear_caches()
             t0 = time.time()
             df = fn(spark, d)
             # materialize THROUGH df's own QueryExecution (toRdd shares

@@ -23,14 +23,6 @@ from rel_db_to_graph_spark import get_spark  # noqa: E402
 from rel_db_to_graph_spark import queries as Q  # noqa: E402
 
 
-def _clear_caches() -> None:
-    from rel_db_to_graph_spark.operators.graph_build import _GRAPH_CACHE
-    for g in _GRAPH_CACHE.values():
-        for df in list(g["nodes"].values()) + list(g["edges"].values()):
-            df.unpersist()
-    _GRAPH_CACHE.clear()
-
-
 def main() -> None:
     dirs = sys.argv[1:] or ["/root/repo/benchdata/sf1",
                             "/root/repo/benchdata/sf10"]
@@ -39,7 +31,7 @@ def main() -> None:
     print("== warm @ sf0.001", flush=True)
     Q.q_hetero_link_train_sampled(spark, "/root/testdata/sf0.001").collect()
     for d in dirs:
-        _clear_caches()
+        Q.clear_caches()
         print(f"== one-shot @ {d}", flush=True)
         t0 = time.time()
         Q.q_hetero_link_train_sampled(spark, d).collect()

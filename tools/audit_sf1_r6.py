@@ -33,7 +33,7 @@ def main() -> None:
         ts = {}
         for tag, d in (("sf0.1", "/root/testdata/sf0.1"),
                        ("sf1", "/root/repo/benchdata/sf1")):
-            Q._COPURCHASE_CACHE.clear()
+            Q.clear_caches()
             t0 = time.time()
             fn(spark, d).write.format("noop").mode("overwrite").save()
             ts[tag] = time.time() - t0

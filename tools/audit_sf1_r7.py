@@ -24,17 +24,6 @@ NEW = ["audio_meta", "video_meta", "frame_sample", "bpe_train_raw",
        "hetero_neighbor_sample", "layout_compact"]
 
 
-def _clear_caches() -> None:
-    from rel_db_to_graph_spark.operators.graph_build import _GRAPH_CACHE
-    for g in _GRAPH_CACHE.values():
-        for df in list(g["nodes"].values()) + list(g["edges"].values()):
-            df.unpersist()
-    _GRAPH_CACHE.clear()
-    for df in Q._COPURCHASE_CACHE.values():
-        df.unpersist()
-    Q._COPURCHASE_CACHE.clear()
-
-
 def main() -> None:
     spark = get_spark(app_name="audit_sf1_r7")
     spark.sparkContext.setLogLevel("ERROR")
@@ -47,7 +36,7 @@ def main() -> None:
         ts = {}
         for tag, d in (("sf0.1", "/root/testdata/sf0.1"),
                        ("sf1", "/root/repo/benchdata/sf1")):
-            _clear_caches()
+            Q.clear_caches()
             t0 = time.time()
             fn(spark, d).write.format("noop").mode("overwrite").save()
             ts[tag] = time.time() - t0

@@ -24,14 +24,6 @@ QS = {"hetero": "q_hetero_link_train_sampled",
       "stack": "q_gat_stack_train_sampled"}
 
 
-def _clear_caches() -> None:
-    from rel_db_to_graph_spark.operators.graph_build import _GRAPH_CACHE
-    for g in _GRAPH_CACHE.values():
-        for df in list(g["nodes"].values()) + list(g["edges"].values()):
-            df.unpersist()
-    _GRAPH_CACHE.clear()
-
-
 def main() -> None:
     spark = get_spark(app_name="audit_trainer_phases")
     spark.sparkContext.setLogLevel("ERROR")
@@ -40,7 +32,7 @@ def main() -> None:
         fn = getattr(Q, QS[n])
         print(f"== {n}: warm pass @ sf0.001", flush=True)
         fn(spark, "/root/testdata/sf0.001").collect()
-        _clear_caches()
+        Q.clear_caches()
         print(f"== {n}: one-shot @ sf1", flush=True)
         t0 = time.time()
         fn(spark, "/root/repo/benchdata/sf1").collect()

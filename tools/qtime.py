@@ -17,8 +17,9 @@ import time
 
 sys.path.insert(0, "/root/repo")
 
-import bench  # noqa: E402  (reuses HEADLINE + cache clearing)
+import bench  # noqa: E402  (reuses HEADLINE)
 from rel_db_to_graph_spark import get_spark  # noqa: E402
+from rel_db_to_graph_spark import queries as Q  # noqa: E402
 
 
 def main() -> None:
@@ -29,27 +30,15 @@ def main() -> None:
     spark = get_spark(app_name="qtime")
     spark.sparkContext.setLogLevel("ERROR")
 
-    from rel_db_to_graph_spark.operators.graph_build import _GRAPH_CACHE
-    from rel_db_to_graph_spark.queries import _COPURCHASE_CACHE
-
-    def clear_caches() -> None:
-        for g in _GRAPH_CACHE.values():
-            for df in list(g["nodes"].values()) + list(g["edges"].values()):
-                df.unpersist()
-        _GRAPH_CACHE.clear()
-        for df in _COPURCHASE_CACHE.values():
-            df.unpersist()
-        _COPURCHASE_CACHE.clear()
-
     spark.range(1000).count()
     out = {}
     for name in names:
         fn = bench.HEADLINE[name]
         fn(spark, warm_dir)          # untimed warm (codegen/JIT)
-        clear_caches()
+        Q.clear_caches()
         ts = []
         for _ in range(reps):
-            clear_caches()
+            Q.clear_caches()
             t0 = time.perf_counter()
             fn(spark, sf_dir)
             ts.append(time.perf_counter() - t0)
