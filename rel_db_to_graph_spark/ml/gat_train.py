@@ -1226,36 +1226,24 @@ def train_gat_link(edges: DataFrame, src_feats: DataFrame,
 
 
 def _batch_closure(samp: DataFrame, seeds: dict, edge_types: list,
-                   feats: dict, eager: bool = True,
-                   broadcast_ids: bool = False) -> tuple[dict, dict]:
+                   feats: dict) -> tuple[dict, dict]:
     """(sampled per-type message edges, per-type feature restriction)
-    for one mini-batch: edges grouped back by edge type, and feats cut
-    to the dependency closure (seeds ∪ every endpoint of a sampled
-    edge). Gradients only flow through seed embeddings, so this closure
-    is exactly what the full epoch would touch for these examples.
+    for a closure: edges grouped back by edge type, and feats cut to
+    the dependency closure (seeds ∪ every endpoint of a sampled edge).
+    Gradients only flow through seed embeddings, so this closure is
+    exactly what the full epoch would touch for these examples.
 
-    The whole closure materializes in ONE eager localCheckpoint (a
-    tagged union of every per-type edge/feature frame): an epoch's
-    stats + fused-gradient jobs all root in these frames, and leaving
-    them lazy made each job re-execute the closure filters/joins —
-    measured at ~2x the whole gradient step at sf1 — while
-    checkpointing each frame separately paid ~4 driver jobs of
-    scheduling floor per batch (round 7). The returned sub/fcut frames
-    are plain filters of the RAM-resident union.
-
-    ``eager=False`` (round-8 step diet) defers BOTH materializations
-    into the first job that reads the closure: since the stats sums now
-    ride in the fused gradient-sync collect, a training step runs ONE
-    epoch job, so a dedicated closure job would only add scheduling
-    floor — the union's branches share samp's shuffle stages within
-    that one job, and the lazy checkpoints still cut lineage for any
-    later reader. Keep eager=True for closures REUSED across many jobs
-    (the once-per-run validation closure: one materialization, 2×epochs
-    readers)."""
-    samp = samp.localCheckpoint(eager=eager)  # one sampling pass, k readers
-    allc = _closure_union(samp, seeds, edge_types, feats,
-                          broadcast_ids=broadcast_ids)
-    allc = allc.localCheckpoint(eager=eager)
+    Used for the sampled trainers' once-per-run validation closure (one
+    materialization, up to 2×epochs readers when the distributed val
+    forward runs). The whole closure materializes in ONE eager
+    localCheckpoint (a tagged union of every per-type edge/feature
+    frame): leaving it lazy made each reading job re-execute the
+    closure filters/joins, while checkpointing each frame separately
+    paid ~4 driver jobs of scheduling floor (round 7). The returned
+    sub/fcut frames are plain filters of the RAM-resident union."""
+    samp = samp.localCheckpoint(eager=True)  # one sampling pass, k readers
+    allc = _closure_union(samp, seeds, edge_types, feats)
+    allc = allc.localCheckpoint(eager=True)
     sub = {et: allc.filter((F.col("kind") == "e")
                            & (F.col("tag") == "|".join(et)))
            .select("src", "dst") for et in edge_types}
@@ -1269,8 +1257,9 @@ def _closure_union(samp: DataFrame, seeds: dict, edge_types: list,
     """The tagged union frame behind _batch_closure — (kind, tag, src,
     dst, node_id, emb) rows holding one batch's per-type sampled edges
     (kind='e', deduplicated) and closure-cut features (kind='f').
-    Shared by the DataFrame step path (which splits it back into
-    per-type frames) and the local step engine (which collects it).
+    Shared by _batch_closure (the validation closure, split back into
+    per-type frames) and the local step engine (which collects every
+    training batch's closure).
 
     ``broadcast_ids=True`` forces the feature-cut join's id side into a
     broadcast hash join — correct whenever the closure is BATCH-bounded
@@ -1332,8 +1321,7 @@ def train_hetero_gat_sampled(graph_edges: dict, feats: dict,
                              quantize: bool = False,
                              split_draw: str = "xxhash64",
                              batch_draw: str = "xxhash64",
-                             sample_draw: str = "xxhash64",
-                             step_engine: str = "dataframe") -> TrainResult:
+                             sample_draw: str = "xxhash64") -> TrainResult:
     """Sampled MINI-BATCH training of the full hetero model — the
     LinkNeighborLoader regime the reference actually trains in
     (dataloader.py:24-51, tuning.py:53: per-layer fanout 15, batch 512,
@@ -1350,8 +1338,8 @@ def train_hetero_gat_sampled(graph_edges: dict, feats: dict,
     batch: seeds = the batch's endpoint nodes; the message graph is
     ``sample_incoming_hetero`` (≤ fanout in-edges per node per edge
     type, expanding backward through message flow); features are cut to
-    the sampled closure; the existing ``_hetero_epoch`` runs unchanged
-    on the restricted frames. Per-batch shuffle volume is
+    the sampled closure; the step math runs on the collected closure
+    (see "Step engine" below). Per-batch shuffle volume is
     O(fanout × batch_size), independent of |E|.
 
     Validation runs fanout=-1 (full neighborhoods — the reference's
@@ -1360,10 +1348,9 @@ def train_hetero_gat_sampled(graph_edges: dict, feats: dict,
     independent), so per-epoch val cost is O(|closure|), not O(|E|).
 
     Exactness anchor (tested): with fanout ≥ max in-degree and a single
-    batch, every sampled epoch is bit-for-bit the full-batch epoch —
+    batch, every sampled epoch reproduces the full-batch epoch —
     gradients only flow through seed-node embeddings, so the dropped
-    edges are exactly the zero-gradient ones. The numpy/finite-diff
-    crosschecks of ``_hetero_epoch`` therefore cover this path too.
+    edges are exactly the zero-gradient ones.
 
     ``max_batches`` caps gradient steps per epoch (the driver-runtime
     valve): each epoch then trains on a different content-addressed
@@ -1388,21 +1375,21 @@ def train_hetero_gat_sampled(graph_edges: dict, feats: dict,
     under the hash gate (q_hetero_link_train_sampled_q). md5 draws
     require non-null src/dst (null-dropped edge frames guarantee it).
 
-    ``step_engine='local'`` (round 11 — the stage-count answer to the
-    per-step driver floor, VERDICT r10 `weak`): sampling, membership,
-    split, and closure feature-cuts stay distributed DataFrame ops, but
-    each epoch's sampled closures are then fetched in ONE chunked
-    collect job and the sequential forward/backward/update chain runs
-    in ml/local_step.py's vectorized numpy engine — milliseconds per
-    optimizer step instead of the measured ~5-6 s of per-step Catalyst
-    re-analysis + ~25-stage scheduling, while per-step data stays
-    O(batch × fanout^layers) by the sampling bound (the closures are
-    driver-sized BY CONSTRUCTION at any corpus scale). This is the
-    production configuration; the DataFrame engine remains the default
-    and the hash-gated queries' byte-stable path (engine agreement
-    pinned by tests/test_local_step.py). Validation keeps the
-    distributed forward either way (the full-neighborhood val closure
-    is O(|closure|), not batch-bounded).
+    Step engine: sampling, membership, split, and closure feature-cuts
+    are distributed DataFrame ops; each epoch's sampled closures are
+    then fetched in ONE chunked collect job and the sequential
+    forward/backward/update chain runs in ml/local_step.py's vectorized
+    numpy engine — milliseconds per optimizer step instead of the
+    measured ~5-6 s of per-step Catalyst re-analysis + ~25-stage
+    scheduling that a per-step DataFrame job paid, while per-step data
+    stays O(batch × fanout^layers) by the sampling bound (the closures
+    are driver-sized BY CONSTRUCTION at any corpus scale). The local
+    step math is pinned against ``_hetero_epoch`` (whose numpy and
+    finite-difference crosschecks are the reference) by
+    tests/test_local_step.py. Validation fetches its full-neighborhood
+    closure once and runs locally too, unless the closure exceeds the
+    collect guard (or the run is a single epoch), in which case the
+    distributed ``_hetero_epoch`` forward evaluates it.
     """
     from rel_db_to_graph_spark.operators.sampling import (
         sample_incoming_hetero,
@@ -1463,37 +1450,6 @@ def train_hetero_gat_sampled(graph_edges: dict, feats: dict,
                           .cast("long"), F.lit(n_batches))
         return F.pmod(F.xxhash64("src", "dst", F.lit(seed + epoch)),
                       F.lit(n_batches))
-
-    def _prefetch(epoch: int) -> dict:
-        """All of epoch ``epoch``'s sampled batch closures — ONE tagged
-        seed-frontier collect + the fused multi-batch store sampler.
-        Parameter-independent, so callers may run it on a background
-        thread CONCURRENTLY with the previous epoch's optimizer steps:
-        the steps' jobs read only RAM-checkpointed frames (never the
-        bucketed tables), so the sampler's scoped autoBucketedScan
-        override cannot affect their planning."""
-        tagged = (train.withColumn("_bi", _member(epoch))
-                  .filter(F.col("_bi") < steps))
-        su = (tagged.select("_bi", F.lit(src_type).alias("_t"),
-                            F.col("src").alias("node_id"))
-              .unionByName(tagged.select(
-                  "_bi", F.lit(dst_type).alias("_t"),
-                  F.col("dst").alias("node_id")))
-              .distinct())
-        fr: dict = {bi: {} for bi in range(steps)}
-        for r in su.collect():
-            fr[int(r["_bi"])].setdefault(r["_t"], []).append(r["node_id"])
-        bseeds = {bi: seed + 7919 * epoch + 104729 * bi
-                  for bi in range(steps)}
-        out: dict = {}
-        fuse = _fuse_width(len(edge_types))
-        for lo in range(0, steps, fuse):
-            tags = range(lo, min(lo + fuse, steps))
-            out.update(sample_incoming_hetero_store_multi(
-                examples.sparkSession, edge_tables,
-                {bi: fr[bi] for bi in tags}, fanouts,
-                {bi: bseeds[bi] for bi in tags}, draw=sample_draw))
-        return out
 
     def _prefetch_group(egroup: tuple) -> dict:
         """Round 12 (VERDICT r11 next-step 4 — the per-epoch prefetch
@@ -1597,12 +1553,10 @@ def train_hetero_gat_sampled(graph_edges: dict, feats: dict,
                                                     types)
         return out
 
-    def _epoch_closures_local(epoch: int, samp_by_bi) -> dict:
-        """One epoch's closures (the no-store fallback path) — thin
-        wrapper over the pair-keyed fetch."""
-        sp = (None if samp_by_bi is None
-              else {(epoch, bi): samp_by_bi[bi] for bi in range(steps)})
-        got = _closures_local([(epoch, bi) for bi in range(steps)], sp)
+    def _epoch_closures_local(epoch: int) -> dict:
+        """One epoch's closures, sampled by the direct-scan sampler (the
+        no-store path) — thin wrapper over the pair-keyed fetch."""
+        got = _closures_local([(epoch, bi) for bi in range(steps)], None)
         return {bi: v for (_, bi), v in got.items()}
 
     def _collect_val_closure(vsub, vfcut, val_df, max_rows=5_000_000):
@@ -1654,24 +1608,18 @@ def train_hetero_gat_sampled(graph_edges: dict, feats: dict,
         )
         _scope.enter_context(
             _forced_bucketed_scan(examples.sparkSession))
-        # prefetch depth: the DataFrame engine hides epoch e+1's
-        # sampling behind e's multi-second step jobs, so one in flight
-        # suffices; the LOCAL engine's steps are milliseconds — nothing
-        # to hide behind — so keep a TWO-epoch window of
+        # prefetch depth: the local steps are milliseconds — nothing
+        # to hide sampling behind — so keep a TWO-epoch window of
         # (parameter-independent) sampling + closure fetches in flight,
         # overlapping the run's own startup jobs instead of serializing
         # at each epoch boundary. Round 12: the window is ONE fused
         # pipeline (_prefetch_group), not two concurrent per-epoch
         # pipelines — the store probe scans once for the union
-        # frontier. Memory stays bounded: ≤ depth epochs of
-        # batch-bounded closures.
-        depth = min(2 if step_engine == "local" else 1, epochs)
-        pool = ThreadPoolExecutor(max_workers=max(depth, 1))
-        if step_engine == "local":
-            futs = {0: pool.submit(_prefetch_group,
-                                   tuple(range(min(depth, epochs))))}
-        else:
-            futs = {e: pool.submit(_prefetch, e) for e in range(depth)}
+        # frontier. One group is in flight at a time, and memory stays
+        # bounded: ≤ depth epochs of batch-bounded closures.
+        depth = min(2, epochs)
+        pool = ThreadPoolExecutor(max_workers=1)
+        futs = {0: pool.submit(_prefetch_group, tuple(range(depth)))}
 
     # Per-epoch validation used to forward the FULL graph — the one
     # remaining full-|E| term in the sampled training path (VERDICT r6
@@ -1702,7 +1650,7 @@ def train_hetero_gat_sampled(graph_edges: dict, feats: dict,
                                                edge_types, feats)
     t0 = _tr("val closure", t0)
     val_local = None
-    if step_engine == "local" and n_val and epochs >= 2:
+    if n_val and epochs >= 2:
         # the collect pays off once it replaces ≥2 DataFrame val
         # forwards (measured at sf1 uncapped: collect ~36 s vs ~16 s
         # per distributed forward); single-epoch runs keep the
@@ -1746,84 +1694,38 @@ def train_hetero_gat_sampled(graph_edges: dict, feats: dict,
            else AdamW(lr=lr, weight_decay=weight_decay))
     result = TrainResult(weights=flat(params, b)[:-1], bias=b)
     best = (params, b)
-    pending_local: dict = {}
+    pending: dict = {}
     try:
         for epoch in range(epochs):
             losses, ns = [], []
-            samp_by_bi = None
-            local_closures = None
             if pool is not None:
                 # fused sampling prefetch (VERDICT r8 item 7): batch
                 # membership and hash draws are parameter-independent,
                 # so nothing forces the store path's sampling into the
                 # sequential optimizer loop — this epoch's closures were
-                # drawn on the background thread while the PREVIOUS
-                # epoch's steps ran (bit-identical edges,
-                # tests/test_edge_store.py); kick off the next epoch's
-                # draw before touching a single gradient. In local mode
-                # the prefetch returns a depth-wide GROUP of COLLECTED
-                # closures (round 12) — consume the window, then kick
-                # off the next group.
-                if step_engine == "local":
-                    if epoch in futs:
-                        pending_local.update(futs.pop(epoch).result())
-                        nxt = epoch + depth
-                        if nxt < epochs:
-                            futs[nxt] = pool.submit(
-                                _prefetch_group,
-                                tuple(range(nxt,
-                                            min(nxt + depth, epochs))))
-                    local_closures = pending_local.pop(epoch)
-                    t0 = _tr(f"e{epoch} prefetch join", t0)
-                else:
-                    pre = futs.pop(epoch).result()
+                # drawn and collected on the background thread as part
+                # of a depth-wide GROUP of epochs (round 12;
+                # bit-identical edges, tests/test_edge_store.py).
+                # Consume the window, then kick off the next group.
+                if epoch in futs:
+                    pending.update(futs.pop(epoch).result())
                     nxt = epoch + depth
                     if nxt < epochs:
-                        futs[nxt] = pool.submit(_prefetch, nxt)
-                    t0 = _tr(f"e{epoch} prefetch join", t0)
-                    samp_by_bi = pre
-            if step_engine == "local" and local_closures is None:
-                local_closures = _epoch_closures_local(epoch, None)
+                        futs[nxt] = pool.submit(
+                            _prefetch_group,
+                            tuple(range(nxt, min(nxt + depth, epochs))))
+                closures = pending.pop(epoch)
+                t0 = _tr(f"e{epoch} prefetch join", t0)
+            else:
+                closures = _epoch_closures_local(epoch)
                 t0 = _tr(f"e{epoch} local closure collect", t0)
             for bi in range(steps):
-                if local_closures is not None:
-                    if bi not in local_closures:
-                        continue
-                    stats = hetero_epoch_local(
-                        *local_closures[bi], params, b, src_type,
-                        dst_type, quantize=quantize)
-                    t0 = _tr(f"e{epoch} b{bi} local step", t0)
-                else:
-                    # lazy checkpoint (round-8 step diet): the first
-                    # reader (the fused epoch job) materializes it; a
-                    # dedicated eager job only paid another scheduling
-                    # floor for a filter over the cached train frame
-                    batch = train.filter(
-                        _member(epoch) == bi).localCheckpoint(eager=False)
-                    seeds = {src_type: batch.select(
-                        F.col("src").alias("node_id"))}
-                    dst_seed = batch.select(F.col("dst").alias("node_id"))
-                    if dst_type in seeds:
-                        seeds[dst_type] = seeds[dst_type].unionAll(dst_seed)
-                    else:
-                        seeds[dst_type] = dst_seed
-                    batch_seed = seed + 7919 * epoch + 104729 * bi
-                    if samp_by_bi is not None:
-                        samp = samp_by_bi[bi]
-                    else:
-                        samp = sample_incoming_hetero(
-                            graph_edges, seeds, fanouts, seed=batch_seed,
-                            draw=sample_draw)
-                    # eager=False: the whole step — closure, forward,
-                    # backward, stats — executes as ONE driver job (the
-                    # fused collect)
-                    sub, fcut = _batch_closure(samp, seeds, edge_types,
-                                               feats, eager=False,
-                                               broadcast_ids=True)
-                    stats = _hetero_epoch(sub, fcut, batch, params, b,
-                                          src_type, dst_type,
-                                          quantize=quantize)
-                    t0 = _tr(f"e{epoch} b{bi} epoch collect", t0)
+                if bi not in closures:
+                    continue
+                stats = hetero_epoch_local(
+                    *closures[bi], params, b, src_type, dst_type,
+                    quantize=quantize)
+                t0 = _tr(f"e{epoch} b{bi} local step", t0)
                 if stats["n"] == 0:
                     continue
                 g = stats["grads"]
@@ -1883,22 +1785,21 @@ def train_gat_stack_sampled(edges: DataFrame, feats: DataFrame,
                             quantize: bool = False,
                             split_draw: str = "xxhash64",
                             batch_draw: str = "xxhash64",
-                            sample_draw: str = "xxhash64",
-                            step_engine: str = "dataframe") -> TrainResult:
+                            sample_draw: str = "xxhash64") -> TrainResult:
     """Sampled mini-batch training of the FULL-DEPTH homogeneous GATv2
     stack — per-layer fanouts through k message-passing layers, the
     complete `[num_neighbors] * num_layers` LinkNeighborLoader shape
     (reference dataloader.py:24-51). Same regime as
     ``train_hetero_gat_sampled``: content-addressed batch membership,
-    per-batch k-hop in-edge closure via ``sample_incoming`` (L2),
-    the unchanged ``_stack_epoch`` over the restricted frames, one
-    AdamW step per batch, full-neighborhood validation over the val
-    set's once-computed k-hop dependency closure. Per-batch
+    per-batch k-hop in-edge closure via ``sample_incoming`` (L2), the
+    ``_stack_epoch`` math over the restricted closure, one AdamW step
+    per batch, full-neighborhood validation over the val set's
+    once-computed k-hop dependency closure. Per-batch
     shuffle volume is O(Π-bounded fanout tree × hidden), independent of
     |E|. Exactness anchor (tested): fanouts ≥ max in-degree at every
     hop + a single batch reproduces full-batch ``train_gat_stack``
-    epochs bit-for-bit — sampling drops exactly the edges outside the
-    seeds' k-hop gradient support.
+    epochs — sampling drops exactly the edges outside the seeds' k-hop
+    gradient support.
 
     ``edge_table`` (a dst-bucketed table from
     sources.bucketed.write_edge_table) switches the per-batch probe to
@@ -1914,11 +1815,13 @@ def train_gat_stack_sampled(edges: DataFrame, feats: DataFrame,
     gate (q_gat_stack_train_sampled_q). md5 draws require non-null
     src/dst (the null-dropped edge frames guarantee it).
 
-    ``step_engine='local'``: same round-11 engine split as
-    train_hetero_gat_sampled — distributed sampling/membership/closure
-    cuts, one chunked collect per epoch (depth-2 prefetch), sequential
-    step chain in ml/local_step.py::stack_epoch_local, size-guarded
-    local validation. Hash-gated queries keep the DataFrame engine."""
+    Step engine: the same split as train_hetero_gat_sampled —
+    distributed sampling/membership/closure cuts, one chunked collect
+    per epoch (depth-2 prefetch on the store path), the sequential step
+    chain in ml/local_step.py::stack_epoch_local (pinned against
+    ``_stack_epoch`` by tests/test_local_step.py), and size-guarded
+    local validation with the distributed ``_stack_epoch`` forward as
+    the fallback."""
     from rel_db_to_graph_spark.operators.sampling import (
         sample_incoming,
         sample_incoming_store_multi,
@@ -1974,29 +1877,6 @@ def train_gat_stack_sampled(edges: DataFrame, feats: DataFrame,
         return F.pmod(F.xxhash64("src", "dst", F.lit(seed + epoch)),
                       F.lit(n_batches))
 
-    def _prefetch(epoch: int) -> dict:
-        # all of this epoch's sampled batch closures in O(hops) jobs —
-        # parameter-independent; see train_hetero_gat_sampled._prefetch
-        tagged = (train.withColumn("_bi", _member(epoch))
-                  .filter(F.col("_bi") < steps))
-        su = (tagged.select("_bi", F.col("src").alias("node_id"))
-              .unionByName(tagged.select(
-                  "_bi", F.col("dst").alias("node_id")))
-              .distinct())
-        fr: dict = {bi: [] for bi in range(steps)}
-        for r in su.collect():
-            fr[int(r["_bi"])].append(r["node_id"])
-        bseeds = {bi: seed + 7919 * epoch + 104729 * bi
-                  for bi in range(steps)}
-        out: dict = {}
-        for lo in range(0, steps, _FUSE_BATCHES):
-            tags = range(lo, min(lo + _FUSE_BATCHES, steps))
-            out.update(sample_incoming_store_multi(
-                examples.sparkSession, edge_table,
-                {bi: fr[bi] for bi in tags}, fanouts,
-                {bi: bseeds[bi] for bi in tags}, draw=sample_draw))
-        return out
-
     def _prefetch_group(egroup: tuple) -> dict:
         # round 12: one fused sampling + closure-fetch pipeline for a
         # GROUP of epochs (the store probe scans once for the union
@@ -2036,18 +1916,17 @@ def train_gat_stack_sampled(edges: DataFrame, feats: DataFrame,
                     if (e, bi) in got}
                 for e in egroup}
 
-    def _batch_closure_frame(bi: int, epoch: int, samp_by_bi) -> DataFrame:
+    def _batch_closure_frame(bi: int, epoch: int, samp) -> DataFrame:
         """One batch's homogeneous closure as the tagged (kind, src,
-        dst, node_id, emb) union — the in-loop construction factored so
-        the local engine can fetch a whole epoch in one job (kind='x'
-        rows carry the examples, label riding in node_id)."""
+        dst, node_id, emb) union, so the local engine can fetch a whole
+        epoch in one job (kind='x' rows carry the examples, label
+        riding in node_id). ``samp`` is the store sampler's draw, or
+        None to sample by direct scan."""
         batch = train.filter(_member(epoch) == bi)
         seeds = (batch.select(F.col("src").alias("node_id"))
                  .unionAll(batch.select(F.col("dst").alias("node_id")))
                  .distinct())
-        if samp_by_bi is not None:
-            samp = samp_by_bi[bi]
-        else:
+        if samp is None:
             samp = sample_incoming(
                 edges, seeds, fanouts,
                 seed=seed + 7919 * epoch + 104729 * bi,
@@ -2084,9 +1963,9 @@ def train_gat_stack_sampled(edges: DataFrame, feats: DataFrame,
             u = None
             for pi, (ep, bi) in enumerate(pairs[lo:lo + _FUSE_BATCHES],
                                           start=lo):
-                sbb = (None if samp_by_pair is None
-                       else {bi: samp_by_pair[(ep, bi)]})
-                part = _batch_closure_frame(bi, ep, sbb
+                samp = (None if samp_by_pair is None
+                        else samp_by_pair[(ep, bi)])
+                part = _batch_closure_frame(bi, ep, samp
                                             ).withColumn("_pi", F.lit(pi))
                 u = part if u is None else u.unionByName(part)
             rows_by_pi: dict = {}
@@ -2096,12 +1975,10 @@ def train_gat_stack_sampled(edges: DataFrame, feats: DataFrame,
                 out[pairs[pi]] = parse_stack_closure_rows(rows)
         return out
 
-    def _epoch_closures_local(epoch: int, samp_by_bi) -> dict:
-        """One epoch's closures (the no-store fallback path) — thin
-        wrapper over the pair-keyed fetch."""
-        sp = (None if samp_by_bi is None
-              else {(epoch, bi): samp_by_bi[bi] for bi in range(steps)})
-        got = _closures_local([(epoch, bi) for bi in range(steps)], sp)
+    def _epoch_closures_local(epoch: int) -> dict:
+        """One epoch's closures, sampled by direct scan (the no-store
+        path) — thin wrapper over the pair-keyed fetch."""
+        got = _closures_local([(epoch, bi) for bi in range(steps)], None)
         return {bi: v for (_, bi), v in got.items()}
 
     pool, futs = None, {}
@@ -2115,15 +1992,11 @@ def train_gat_stack_sampled(edges: DataFrame, feats: DataFrame,
         )
         _scope.enter_context(
             _forced_bucketed_scan(examples.sparkSession))
-        # depth 2 in local mode, one FUSED group pipeline (round 12) —
-        # see train_hetero_gat_sampled
-        depth = min(2 if step_engine == "local" else 1, epochs)
-        pool = ThreadPoolExecutor(max_workers=max(depth, 1))
-        if step_engine == "local":
-            futs = {0: pool.submit(_prefetch_group,
-                                   tuple(range(min(depth, epochs))))}
-        else:
-            futs = {e: pool.submit(_prefetch, e) for e in range(depth)}
+        # depth 2, one FUSED group pipeline in flight (round 12) — see
+        # train_hetero_gat_sampled
+        depth = min(2, epochs)
+        pool = ThreadPoolExecutor(max_workers=1)
+        futs = {0: pool.submit(_prefetch_group, tuple(range(depth)))}
 
     # One-time val dependency closure — k hops of FULL in-neighborhoods
     # ([-1] per layer) of the val endpoints; per-epoch validation then
@@ -2144,7 +2017,7 @@ def train_gat_stack_sampled(edges: DataFrame, feats: DataFrame,
                 ).distinct()
         val_fcut = feats.join(vids, "node_id").localCheckpoint(eager=True)
     val_local = None
-    if step_engine == "local" and n_val and epochs >= 2:
+    if n_val and epochs >= 2:
         # fetch the parameter-independent val closure ONCE (size-
         # guarded) so every epoch's val forward is local — see
         # train_hetero_gat_sampled._collect_val_closure. Same
@@ -2195,95 +2068,32 @@ def train_gat_stack_sampled(edges: DataFrame, feats: DataFrame,
            else AdamW(lr=lr, weight_decay=weight_decay))
     result = TrainResult(weights=flat(params, b)[:-1], bias=b)
     best = (params, b)
-    pending_local: dict = {}
+    pending: dict = {}
     try:
         for epoch in range(epochs):
             losses, ns = [], []
-            samp_by_bi = None
-            local_closures = None
             if pool is not None:
-                # this epoch's closures were drawn on the background
-                # thread while the previous epoch's steps ran; kick off
-                # the next draw before the first gradient — see
-                # train_hetero_gat_sampled. In local mode the prefetch
-                # returns a depth-wide GROUP of COLLECTED closures
-                # (round 12).
-                if step_engine == "local":
-                    if epoch in futs:
-                        pending_local.update(futs.pop(epoch).result())
-                        nxt = epoch + depth
-                        if nxt < epochs:
-                            futs[nxt] = pool.submit(
-                                _prefetch_group,
-                                tuple(range(nxt,
-                                            min(nxt + depth, epochs))))
-                    local_closures = pending_local.pop(epoch)
-                    t0 = _tr(f"e{epoch} prefetch join", t0)
-                else:
-                    pre = futs.pop(epoch).result()
+                # this epoch's closures were drawn and collected on the
+                # background thread as part of a depth-wide GROUP of
+                # epochs (round 12); consume the window, then kick off
+                # the next group — see train_hetero_gat_sampled
+                if epoch in futs:
+                    pending.update(futs.pop(epoch).result())
                     nxt = epoch + depth
                     if nxt < epochs:
-                        futs[nxt] = pool.submit(_prefetch, nxt)
-                    t0 = _tr(f"e{epoch} prefetch join", t0)
-                    samp_by_bi = pre
-            if step_engine == "local" and local_closures is None:
-                local_closures = _epoch_closures_local(epoch, None)
+                        futs[nxt] = pool.submit(
+                            _prefetch_group,
+                            tuple(range(nxt, min(nxt + depth, epochs))))
+                closures = pending.pop(epoch)
+                t0 = _tr(f"e{epoch} prefetch join", t0)
+            else:
+                closures = _epoch_closures_local(epoch)
                 t0 = _tr(f"e{epoch} local closure collect", t0)
             for bi in range(steps):
-                if local_closures is not None:
-                    if bi not in local_closures:
-                        continue
-                    stats = stack_epoch_local(*local_closures[bi],
-                                              params, b,
-                                              quantize=quantize)
-                else:
-                    # lazy checkpoints throughout (round-8 step diet):
-                    # with the stats fused into the gradient-sync
-                    # collect, a step runs ONE epoch job —
-                    # batch/samp/closure materialize inside it instead
-                    # of each paying a dedicated driver job of
-                    # scheduling floor
-                    batch = train.filter(
-                        _member(epoch) == bi).localCheckpoint(eager=False)
-                    seeds = (batch.select(F.col("src").alias("node_id"))
-                             .unionAll(batch.select(
-                                 F.col("dst").alias("node_id")))
-                             .distinct())
-                    batch_seed = seed + 7919 * epoch + 104729 * bi
-                    if samp_by_bi is not None:
-                        samp = samp_by_bi[bi]
-                    else:
-                        samp = sample_incoming(
-                            edges, seeds, fanouts, seed=batch_seed,
-                            draw=sample_draw).localCheckpoint(eager=False)
-                    ids = (seeds
-                           .unionAll(samp.select(
-                               F.col("src").alias("node_id")))
-                           .unionAll(samp.select(
-                               F.col("dst").alias("node_id")))
-                           ).distinct()
-                    allc = (samp.select("src", "dst").distinct()
-                            .select(F.lit("e").alias("kind"), "src", "dst",
-                                    F.lit(None).cast("bigint")
-                                    .alias("node_id"),
-                                    F.lit(None).cast("array<double>")
-                                    .alias("emb"))
-                            .unionByName(
-                                # batch-bounded ids -> broadcast join
-                                feats.join(F.broadcast(ids), "node_id")
-                                .select(F.lit("f").alias("kind"),
-                                        F.lit(None).cast("bigint")
-                                        .alias("src"),
-                                        F.lit(None).cast("bigint")
-                                        .alias("dst"),
-                                        "node_id", "emb"))
-                            .localCheckpoint(eager=False))
-                    sub = allc.filter(F.col("kind") == "e").select(
-                        "src", "dst")
-                    fcut = allc.filter(F.col("kind") == "f").select(
-                        "node_id", "emb")
-                    stats = _stack_epoch(sub, fcut, batch, params, b,
-                                         quantize=quantize)
+                if bi not in closures:
+                    continue
+                stats = stack_epoch_local(*closures[bi], params, b,
+                                          quantize=quantize)
                 if stats["n"] == 0:
                     continue
                 gflat = flat([(g[0], g[1], np.array(g[2]))

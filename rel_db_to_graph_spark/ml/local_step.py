@@ -30,16 +30,18 @@ aggr='sum' + self transform in SORTED edge-type order, dot decoder —
 reference model.py:92-94); the ``quantize`` mode reproduces the 6-dp
 float-parity convention exactly (HALF_UP rounding per
 operators/semantic.py's shared rule; DECIMAL partition sums emulated
-as exact int64 sums of the 6-dp-scaled values). Engine agreement with
-the DataFrame epoch is pinned by tests/test_local_step.py: integer
-outputs (n, correct-counts) match exactly, floats to numpy-twin
-tolerances — the residual divergence class is summation order and libm
-ulps, the SAME class the DuckDB oracle twins already absorb.
+as exact int64 sums of the 6-dp-scaled values). Agreement with the
+DataFrame epochs (``_hetero_epoch``, ``_stack_epoch``), which stay the
+reference and the full-batch trainers' math, is pinned by
+tests/test_local_step.py: integer outputs (n, correct-counts) match
+exactly, floats to numpy-twin tolerances — the residual divergence
+class is summation order and libm ulps, the SAME class the DuckDB
+oracle twins already absorb.
 
-The hash-gated queries (q_hetero_link_train_sampled_q,
-q_gat_stack_train_sampled_q) stay on the DataFrame engine so their
-pinned oracle hashes remain byte-stable; the production configurations
-opt in via ``step_engine="local"``.
+This is the sampled trainers' only step engine: every registry
+configuration runs it, including the hash-gated queries
+(q_hetero_link_train_sampled_q, q_gat_stack_train_sampled_q), whose
+DuckDB twins replay the integer-derived history independently.
 """
 
 from __future__ import annotations
@@ -239,10 +241,10 @@ def hetero_epoch_local(edges: dict, feats: dict, examples: tuple,
 
 
 def parse_closure_rows(rows, edge_types, types) -> tuple[dict, dict, tuple]:
-    """Split one batch's collected closure rows — the tagged-union
-    layout _batch_closure builds (kind ∈ {e, f, x}) — into the numpy
-    structures hetero_epoch_local consumes. 'x' rows carry the batch
-    examples with the label riding in node_id."""
+    """Split one batch's collected closure rows — gat_train's
+    _closure_union layout plus example rows (kind ∈ {e, f, x}) — into
+    the numpy structures hetero_epoch_local consumes. 'x' rows carry
+    the batch examples with the label riding in node_id."""
     e_acc: dict = {et: ([], []) for et in edge_types}
     f_acc: dict = {t: ([], []) for t in types}
     xs, xd, xl = [], [], []

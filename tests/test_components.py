@@ -139,6 +139,21 @@ def test_components_edge_partitioning_is_data_sized(spark):
     assert out == [(i, 0) for i in range(501)]
 
 
+def test_checkpointed_bytes_reads_the_block_manager(spark):
+    """Pins the private-API reach-through behind the partition sizing
+    (``_jdf.queryExecution().analyzed().rdd()`` + the storage registry):
+    a Spark upgrade that breaks it would make _checkpointed_bytes return
+    None, and connected components would then silently pay an extra
+    count job per run instead of failing here."""
+    from rel_db_to_graph_spark.operators.components import (
+        _checkpointed_bytes,
+    )
+
+    df = spark.range(1000).localCheckpoint(eager=True)
+    got = _checkpointed_bytes(df)
+    assert isinstance(got, int) and got > 0, got
+
+
 def test_decontaminate_planted_overlap(spark):
     from rel_db_to_graph_spark.operators.dedup import decontaminate
 

@@ -1,14 +1,16 @@
 """The local (collected-closure) step engine (ml/local_step.py) must
 agree with the DataFrame epoch operation for operation — it is the
-stage-count answer to the sampled trainers' per-step driver floor, so
-any drift here is a silent trainer fork. Integer outputs must match
-exactly; floats to the same tolerances the numpy twins already pin
-(the residual class is summation order / libm ulps, which the DuckDB
-oracle twins absorb by construction)."""
+sampled trainers' only step engine, and the DataFrame epochs
+(_hetero_epoch, _stack_epoch) are its reference, so any drift here is
+a silent trainer fork. Integer outputs must match exactly; floats to
+the same tolerances the numpy twins already pin (the residual class is
+summation order / libm ulps, which the DuckDB oracle twins absorb by
+construction)."""
 
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from rel_db_to_graph_spark.ml.local_step import hetero_epoch_local
@@ -155,62 +157,55 @@ def _toy_hetero(spark):
     return edges, feats, ex_df
 
 
-def _histories_agree(a, b):
-    assert len(a) == len(b)
-    for ha, hb in zip(a, b):
-        assert ha["epoch"] == hb["epoch"]
-        assert ha["train_n"] == hb["train_n"], (ha, hb)
-        assert ha["val_acc"] == hb["val_acc"], (ha, hb)
-        assert np.isclose(ha["train_loss"], hb["train_loss"],
-                          rtol=1e-7), (ha, hb)
-        assert np.isclose(ha["val_loss"], hb["val_loss"],
-                          rtol=1e-7), (ha, hb)
-
-
-def test_trainer_local_engine_agrees_quantized_sgd(spark):
-    """The gated configuration's shape (sgd + quantize + md5 draws):
-    the local engine must reproduce the DataFrame engine's history —
-    integer outputs exactly, losses to numpy-twin tolerance. Sampling,
-    split, and membership are engine-independent by construction (the
-    same content-addressed draws run either way)."""
-    from rel_db_to_graph_spark.ml.gat_train import train_hetero_gat_sampled
+@pytest.mark.parametrize("quantize", [False, True])
+def test_closure_fetch_matches_dataframe_closure(spark, quantize):
+    """The trainer's fetch seam: one sampled batch's closure built by
+    _closure_union (broadcast id join), collected, parsed by
+    parse_closure_rows and stepped by hetero_epoch_local must give the
+    stats and grads of _hetero_epoch over the _batch_closure frames of
+    the same draw. Fanout 1 is below the in-degree of four of the six
+    B nodes, so the draw really drops edges."""
+    from rel_db_to_graph_spark.ml.gat_train import (
+        _batch_closure,
+        _closure_union,
+        _hetero_epoch,
+    )
+    from rel_db_to_graph_spark.ml.local_step import parse_closure_rows
+    from rel_db_to_graph_spark.operators.sampling import (
+        sample_incoming_hetero,
+    )
 
     edges, feats, ex_df = _toy_hetero(spark)
-    # epochs=1 (3 batches): quantization + md5 draws are per-step
-    # properties; the cross-epoch membership redraw is pinned by the
-    # adamw test below (optimization round 13 — suite wall time)
-    kw = dict(src_type="A", dst_type="B", hidden=2, fanouts=[1],
-              batch_size=16, epochs=1, lr=0.5, seed=3, optimizer="sgd",
-              quantize=True, split_draw="md5", batch_draw="md5",
-              sample_draw="md5")
-    df_res = train_hetero_gat_sampled(edges, feats, ex_df, **kw)
-    lc_res = train_hetero_gat_sampled(edges, feats, ex_df,
-                                      step_engine="local", **kw)
-    _histories_agree(df_res.history, lc_res.history)
-    assert np.allclose(df_res.weights, lc_res.weights,
-                       rtol=1e-6, atol=1e-10)
-    assert np.isclose(df_res.bias, lc_res.bias, rtol=1e-6, atol=1e-12)
+    ets, types = sorted(edges), sorted(feats)
+    batch = ex_df.filter(F.col("src") < 4)
+    seeds = {"A": batch.select(F.col("src").alias("node_id")),
+             "B": batch.select(F.col("dst").alias("node_id"))}
+    samp = sample_incoming_hetero(edges, seeds, [1], seed=11
+                                  ).localCheckpoint(eager=True)
+    params, b = _params(41), 0.15
 
+    xrows = batch.select(
+        F.lit("x").alias("kind"), F.lit("").alias("tag"), "src", "dst",
+        F.col("label").cast("bigint").alias("node_id"),
+        F.lit(None).cast("array<double>").alias("emb"))
+    rows = (_closure_union(samp, seeds, ets, feats, broadcast_ids=True)
+            .unionByName(xrows).collect())
+    n_ab = sum(1 for r in rows if r["kind"] == "e" and r["tag"] == "A|r|B")
+    assert 0 < n_ab < 10            # 10 A->B edges, all into batch seeds
+    got = hetero_epoch_local(*parse_closure_rows(rows, ets, types),
+                             params, b, "A", "B", quantize=quantize)
 
-def test_trainer_local_engine_agrees_adamw(spark):
-    """The production configuration (AdamW + xxhash64 draws)."""
-    from rel_db_to_graph_spark.ml.gat_train import train_hetero_gat_sampled
-
-    edges, feats, ex_df = _toy_hetero(spark)
-    kw = dict(src_type="A", dst_type="B", hidden=2, fanouts=[2],
-              batch_size=16, epochs=2, lr=0.1, seed=3)
-    df_res = train_hetero_gat_sampled(edges, feats, ex_df, **kw)
-    lc_res = train_hetero_gat_sampled(edges, feats, ex_df,
-                                      step_engine="local", **kw)
-    _histories_agree(df_res.history, lc_res.history)
-    assert np.allclose(df_res.weights, lc_res.weights,
-                       rtol=1e-6, atol=1e-10)
+    sub, fcut = _batch_closure(samp, seeds, ets, feats)
+    want = _hetero_epoch(sub, fcut, batch, params, b, "A", "B",
+                         quantize=quantize)
+    assert want["n"] == 24
+    _assert_stats_close(got, want)
 
 
 def test_trainer_local_engine_agrees_store_path(spark):
-    """Local engine over the dst-bucketed edge-store sampler (the 100 TB
-    probe path) must equal the direct-scan local run — the store/direct
-    bit-identity of the sampler composes with the engine."""
+    """Training over the dst-bucketed edge-store sampler (the 100 TB
+    probe path) must equal the direct-scan run — the store/direct
+    bit-identity of the sampler composes with the step engine."""
     from rel_db_to_graph_spark.ml.gat_train import train_hetero_gat_sampled
     from rel_db_to_graph_spark.sources.bucketed import write_edge_store
 
@@ -219,8 +214,7 @@ def test_trainer_local_engine_agrees_store_path(spark):
     tables = write_edge_store(sub, num_buckets=4,
                               prefix="t_local_engine")
     kw = dict(src_type="A", dst_type="B", hidden=2, fanouts=[2],
-              batch_size=16, epochs=2, lr=0.1, seed=3,
-              step_engine="local")
+              batch_size=16, epochs=2, lr=0.1, seed=3)
     direct = train_hetero_gat_sampled(edges, feats, ex_df, **kw)
     stored = train_hetero_gat_sampled(edges, feats, ex_df,
                                       edge_tables=tables, **kw)
@@ -330,36 +324,23 @@ def _toy_homo(spark):
             spark.createDataFrame(examples, "src long, dst long, label int"))
 
 
-def test_stack_trainer_local_engine_agrees(spark):
-    from rel_db_to_graph_spark.ml.gat_train import train_gat_stack_sampled
-
-    e_df, f_df, ex = _toy_homo(spark)
-    # epochs=1: cross-epoch redraws for the stack family are pinned by
-    # the store-quantized variant below (optimization round 13)
-    kw = dict(hidden=2, layers=2, fanouts=[2, 2], batch_size=64,
-              epochs=1, lr=0.1, seed=3)
-    df_res = train_gat_stack_sampled(e_df, f_df, ex, **kw)
-    lc_res = train_gat_stack_sampled(e_df, f_df, ex,
-                                     step_engine="local", **kw)
-    _histories_agree(df_res.history, lc_res.history)
-    assert np.allclose(df_res.weights, lc_res.weights,
-                       rtol=1e-6, atol=1e-10)
-
-
 def test_stack_trainer_local_engine_agrees_store_quantized(spark):
+    """Stack twin of test_trainer_local_engine_agrees_store_path, in the
+    gated configuration (sgd + quantize + md5 draws, two epochs so the
+    store path's prefetched epoch group is consumed): the edge-table
+    run must equal the direct-scan run exactly."""
     from rel_db_to_graph_spark.ml.gat_train import train_gat_stack_sampled
     from rel_db_to_graph_spark.sources.bucketed import write_edge_table
 
     e_df, f_df, ex = _toy_homo(spark)
     write_edge_table(e_df, "t_local_stack_engine", num_buckets=4)
-    table = "t_local_stack_engine"
     kw = dict(hidden=2, layers=2, fanouts=[2, 2], batch_size=64,
               epochs=2, lr=0.5, seed=3, optimizer="sgd", quantize=True,
               split_draw="md5", batch_draw="md5", sample_draw="md5")
-    df_res = train_gat_stack_sampled(e_df, f_df, ex, edge_table=table,
-                                     **kw)
-    lc_res = train_gat_stack_sampled(e_df, f_df, ex, edge_table=table,
-                                     step_engine="local", **kw)
-    _histories_agree(df_res.history, lc_res.history)
-    assert np.allclose(df_res.weights, lc_res.weights,
-                       rtol=1e-6, atol=1e-10)
+    direct = train_gat_stack_sampled(e_df, f_df, ex, **kw)
+    stored = train_gat_stack_sampled(e_df, f_df, ex,
+                                     edge_table="t_local_stack_engine", **kw)
+    for ha, hb in zip(direct.history, stored.history):
+        assert ha == hb, (ha, hb)
+    assert direct.weights == stored.weights
+    assert direct.bias == stored.bias

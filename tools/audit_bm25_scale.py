@@ -13,10 +13,12 @@ Usage: python tools/audit_bm25_scale.py [reps_per_sf]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from rel_db_to_graph_spark import get_spark  # noqa: E402
 from rel_db_to_graph_spark.queries import q_bm25_retrieval  # noqa: E402
@@ -29,7 +31,8 @@ def main() -> None:
 
     q_bm25_retrieval(spark, "/root/testdata/sf0.001").collect()  # warm
 
-    for sf_dir in ("/root/testdata/sf0.1", "/root/repo/benchdata/sf1"):
+    for sf_dir in ("/root/testdata/sf0.1",
+                   os.path.join(ROOT, "benchdata", "sf1")):
         df = q_bm25_retrieval(spark, sf_dir)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted")

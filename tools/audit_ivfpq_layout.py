@@ -15,16 +15,17 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from rel_db_to_graph_spark import get_spark  # noqa: E402
 from rel_db_to_graph_spark.operators.pq import (  # noqa: E402
     ivfpq_topk_from_index, write_ivfpq_index)
 from rel_db_to_graph_spark.sources.catalog import load_table  # noqa: E402
 
-DIRS = {"sf1": "/root/repo/benchdata/sf1",
-        "sf10": "/root/repo/benchdata/sf10",
-        "sf10d": "/root/repo/benchdata/sf10d"}
+DIRS = {"sf1": os.path.join(ROOT, "benchdata", "sf1"),
+        "sf10": os.path.join(ROOT, "benchdata", "sf10"),
+        "sf10d": os.path.join(ROOT, "benchdata", "sf10d")}
 
 
 def fs_stats(root: str) -> tuple[int, int]:

@@ -19,10 +19,12 @@ contaminated; BASELINE.md round-8 note):
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from rel_db_to_graph_spark import get_spark  # noqa: E402
 from rel_db_to_graph_spark.operators import ivf  # noqa: E402
@@ -58,7 +60,7 @@ def main() -> None:
     semantic_dedup(emb_w, threshold=0.2, n_clusters=8, iters=2,
                    max_cluster=2000).write.format("noop") \
         .mode("overwrite").save()
-    emb = load_table(spark, f"/root/repo/benchdata/{sf}", "embeddings")
+    emb = load_table(spark, os.path.join(ROOT, "benchdata", sf), "embeddings")
     t0 = time.time()
     flags = semantic_dedup(emb, threshold=0.2, n_clusters=k, iters=2,
                            max_cluster=2000)

@@ -14,10 +14,12 @@ Data:  benchdata/sf100d (tools/make_diverse_embeddings.py 1000 sf100d);
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from rel_db_to_graph_spark import get_spark  # noqa: E402
 from rel_db_to_graph_spark.operators.ivf import build_ivf_index  # noqa: E402
@@ -30,7 +32,7 @@ def main() -> None:
     k = int(sys.argv[2]) if len(sys.argv) > 2 else 20_000
     iters = int(sys.argv[3]) if len(sys.argv) > 3 else 2
     data = sys.argv[4] if len(sys.argv) > 4 else "sf100d"
-    DATA = f"/root/repo/benchdata/{data}/embeddings.parquet"
+    DATA = os.path.join(ROOT, "benchdata", data, "embeddings.parquet")
     sample = 200_000 if mode == "sampled" else None
 
     spark = get_spark(app_name=f"audit_kmeans_{mode}")

@@ -12,10 +12,12 @@ Usage: SPARK_GRAFT_DRIVER_MEM=48g python tools/audit_sf10.py [names...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from rel_db_to_graph_spark import get_spark  # noqa: E402
 from rel_db_to_graph_spark import queries as Q  # noqa: E402
@@ -23,8 +25,8 @@ from rel_db_to_graph_spark import queries as Q  # noqa: E402
 TAIL = ["term_cms", "tfidf_keywords", "near_dup_pairs",
         "curation_pipeline", "triangle_count"]
 
-SF1 = "/root/repo/benchdata/sf1"
-SF10 = "/root/repo/benchdata/sf10"
+SF1 = os.path.join(ROOT, "benchdata", "sf1")
+SF10 = os.path.join(ROOT, "benchdata", "sf10")
 
 #: plan markers worth recording: the scale-killers (should stay absent)
 #: and the join strategies actually chosen at sf10

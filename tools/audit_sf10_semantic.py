@@ -27,17 +27,19 @@ Usage: python tools/audit_sf10_semantic.py kaxis [sf1|sf10] [k ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from rel_db_to_graph_spark import get_spark  # noqa: E402
 from rel_db_to_graph_spark.operators.semantic import semantic_dedup  # noqa: E402
 from rel_db_to_graph_spark.sources.catalog import load_table  # noqa: E402
 
-DIRS = {"sf1": "/root/repo/benchdata/sf1",
-        "sf10": "/root/repo/benchdata/sf10",
+DIRS = {"sf1": os.path.join(ROOT, "benchdata", "sf1"),
+        "sf10": os.path.join(ROOT, "benchdata", "sf10"),
         "warm": "/root/testdata/sf0.001"}
 
 

@@ -27,7 +27,7 @@ Probes and what "watermark-bounded" must look like:
 Prints one JSON line per probe:
   {"probe": ..., "batches": n, "state_rows_per_batch": [...],
    "rows_out": n, "secs": s}
-Run from OUTSIDE the repo: `python /root/repo/tools/audit_sf10_streaming.py`.
+Run from OUTSIDE the repo: `python <checkout>/tools/audit_sf10_streaming.py`.
 """
 
 from __future__ import annotations
@@ -38,9 +38,11 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF10_DIR", "/root/repo/benchdata/sf10")
+SF_DIR = os.environ.get("SPARK_GRAFT_SF10_DIR",
+                        os.path.join(ROOT, "benchdata", "sf10"))
 FEED = "/tmp/sf10_stream_feed"
 N_FILES = 10
 

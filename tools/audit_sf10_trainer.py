@@ -17,15 +17,16 @@ import sys
 import time
 
 os.environ["SPARK_GRAFT_TRACE"] = "1"
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from rel_db_to_graph_spark import get_spark  # noqa: E402
 from rel_db_to_graph_spark import queries as Q  # noqa: E402
 
 
 def main() -> None:
-    dirs = sys.argv[1:] or ["/root/repo/benchdata/sf1",
-                            "/root/repo/benchdata/sf10"]
+    dirs = sys.argv[1:] or [os.path.join(ROOT, "benchdata", "sf1"),
+                            os.path.join(ROOT, "benchdata", "sf10")]
     spark = get_spark(app_name="audit_sf10_trainer")
     spark.sparkContext.setLogLevel("ERROR")
     print("== warm @ sf0.001", flush=True)

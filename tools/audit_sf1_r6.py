@@ -1,14 +1,16 @@
 """sf1 scale audit of the round-6 query additions: run each once at
-/root/repo/benchdata/sf1 (and sf0.1 for the ratio), print name, sf0.1 s,
+<checkout>/benchdata/sf1 (and sf0.1 for the ratio), print name, sf0.1 s,
 sf1 s, ratio. Completion + plan survival is the point, not benchmarking
 precision (see BASELINE.md noise notes)."""
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from rel_db_to_graph_spark import get_spark  # noqa: E402
 from rel_db_to_graph_spark import queries as Q  # noqa: E402
@@ -32,7 +34,7 @@ def main() -> None:
     for n, fn in fns.items():
         ts = {}
         for tag, d in (("sf0.1", "/root/testdata/sf0.1"),
-                       ("sf1", "/root/repo/benchdata/sf1")):
+                       ("sf1", os.path.join(ROOT, "benchdata", "sf1"))):
             Q.clear_caches()
             t0 = time.time()
             fn(spark, d).write.format("noop").mode("overwrite").save()

@@ -1,5 +1,5 @@
 """sf1 scale audit of the round-7 query additions/changes: run each
-once at /root/repo/benchdata/sf1 (and sf0.1 for the ratio), print name,
+once at <checkout>/benchdata/sf1 (and sf0.1 for the ratio), print name,
 sf0.1 s, sf1 s, ratio. Completion + plan survival is the point, not
 benchmarking precision (see BASELINE.md noise notes).
 
@@ -11,10 +11,12 @@ variants + the layout-compaction invariant audit).
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from rel_db_to_graph_spark import get_spark  # noqa: E402
 from rel_db_to_graph_spark import queries as Q  # noqa: E402
@@ -35,7 +37,7 @@ def main() -> None:
     for n, fn in fns.items():
         ts = {}
         for tag, d in (("sf0.1", "/root/testdata/sf0.1"),
-                       ("sf1", "/root/repo/benchdata/sf1")):
+                       ("sf1", os.path.join(ROOT, "benchdata", "sf1"))):
             Q.clear_caches()
             t0 = time.time()
             fn(spark, d).write.format("noop").mode("overwrite").save()

@@ -15,7 +15,8 @@ import sys
 import time
 
 os.environ["SPARK_GRAFT_TRACE"] = "1"   # before gat_train import
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from rel_db_to_graph_spark import get_spark  # noqa: E402
 from rel_db_to_graph_spark import queries as Q  # noqa: E402
@@ -35,7 +36,7 @@ def main() -> None:
         Q.clear_caches()
         print(f"== {n}: one-shot @ sf1", flush=True)
         t0 = time.time()
-        fn(spark, "/root/repo/benchdata/sf1").collect()
+        fn(spark, os.path.join(ROOT, "benchdata", "sf1")).collect()
         print(f"== {n}: TOTAL sf1 {time.time() - t0:.1f}s", flush=True)
 
 

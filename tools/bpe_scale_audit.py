@@ -8,10 +8,12 @@ record jobs, wall-clock, and merges/round in BASELINE.md. Usage:
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -32,7 +34,8 @@ def _max_job_id(sc) -> int:
 def main() -> None:
     n_merges = int(sys.argv[1]) if len(sys.argv) > 1 else 2000
     batch = int(sys.argv[2]) if len(sys.argv) > 2 else 32
-    sf_dir = sys.argv[3] if len(sys.argv) > 3 else "/root/repo/benchdata/sf1"
+    sf_dir = (sys.argv[3] if len(sys.argv) > 3
+              else os.path.join(ROOT, "benchdata", "sf1"))
     spark = get_spark(app_name="bpe_scale_audit")
     spark.sparkContext.setLogLevel("ERROR")
     sc = spark.sparkContext

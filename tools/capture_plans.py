@@ -14,12 +14,14 @@ import io
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from rel_db_to_graph_spark import get_spark  # noqa: E402
 from rel_db_to_graph_spark import queries as Q  # noqa: E402
 
-TAG_DIR = os.environ.get("SPARK_GRAFT_PLAN_DIR", "/root/repo/plans/r13")
+TAG_DIR = os.environ.get("SPARK_GRAFT_PLAN_DIR",
+                         os.path.join(ROOT, "plans", "r13"))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 

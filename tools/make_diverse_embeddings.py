@@ -12,7 +12,7 @@ direction and norm per replica) — so k-means at k up to
 reps × 2,000 has ~k populated clusters and the O(k·d) vs O(k) driver
 traffic difference is actually exercised.
 
-Output: /root/repo/benchdata/<dst>/embeddings.parquet (gitignored).
+Output: <checkout>/benchdata/<dst>/embeddings.parquet (gitignored).
 Usage: python tools/make_diverse_embeddings.py [reps] [dst]
 """
 

@@ -11,7 +11,7 @@ character, not just its size). Embedding vectors are copied as-is (the
 headline ANN query is a linear scan; identical vectors don't change its
 cost profile).
 
-Output: /root/repo/benchdata/<dst>/*.parquet (gitignored); dst defaults
+Output: <checkout>/benchdata/<dst>/*.parquet (gitignored); dst defaults
 to sf1. reps=100 + dst=sf10 derives the round-8 sf10 probe dataset
 (~60M lineitem, 500k documents) for the superlinear-tail audit.
 Usage: python tools/make_sf1.py [reps] [dst]

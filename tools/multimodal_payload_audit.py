@@ -11,12 +11,14 @@ from __future__ import annotations
 
 import math
 import struct
+import os
 import sys
 import time
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from rel_db_to_graph_spark.operators.multimodal import parse_avi, parse_wav
 

@@ -15,7 +15,8 @@ import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import bench  # noqa: E402  (reuses HEADLINE)
 from rel_db_to_graph_spark import get_spark  # noqa: E402

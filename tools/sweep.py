@@ -8,11 +8,12 @@ code; redirect to a file instead."""
 from __future__ import annotations
 
 import importlib.util
+import os
 import sys
 import time
 import traceback
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF = "/root/testdata/sf0.01"
 
 
