@@ -21,12 +21,10 @@ Algorithm: iterative min-label propagation with pointer-jumping.
 
 Scale shape (the point): each round is two equi-joins + one groupBy,
 all shuffling (vertex, comp) pairs — never documents, never shingles.
-State per round is bounded by |V| + |E|; every round ends in a
-``localCheckpoint`` so the lineage (and the plan Catalyst must
-re-optimise) stays one round deep instead of growing by three joins per
-iteration. At 100 TB the checkpoint becomes a parquet write of the
-(v, comp) frame — the standard BSP superstep barrier. Driver state is
-one boolean (changed?) per round — no data-sized collect.
+State per round is bounded by |V| + |E|. The edge layout, the
+per-round barrier and the convergence test are operators/bsp.py's
+(``edge_layout`` + ``fixpoint``). Driver state is one scalar per round
+— no data-sized collect.
 
 The DuckDB oracle is a recursive-CTE transitive closure with
 ``min(reachable)`` per vertex — exponentially slower than this
@@ -40,31 +38,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
 
-#: estimated in-flight bytes per symmetrized edge row (two longs + row
-#: overhead) and the per-partition target (guide §2.2: shuffle
-#: partitions in the 100 MB–1 GB band) — used to size the frozen edge
-#: partitioning from the MEASURED edge count, not from the core count.
-_SYM_ROW_BYTES = 24
-_TARGET_PART_BYTES = 128 * 1024 * 1024
+from rel_db_to_graph_spark.operators import bsp
 
 _INTEGRAL_TYPES = (ByteType, ShortType, IntegerType, LongType)
-
-
-def _checkpointed_bytes(df: DataFrame) -> int | None:
-    """Materialized byte size of a just-``localCheckpoint(eager=True)``'d
-    frame, read from the block manager's storage registry — ZERO jobs.
-    The checkpoint's LogicalRDD wraps exactly the persisted RDD, so its
-    id keys the RDDInfo entry. Returns None when the internals shift
-    (py4j accessor path) so callers can fall back to an exact count."""
-    try:
-        rdd_id = df._jdf.queryExecution().analyzed().rdd().id()
-        jsc = df.sparkSession.sparkContext._jsc.sc()
-        for info in jsc.getRDDStorageInfo():
-            if info.id() == rdd_id:
-                return int(info.memSize() + info.diskSize())
-    except Exception:
-        return None
-    return None
 
 
 def connected_components(edges: DataFrame, src: str = "src",
@@ -78,75 +54,18 @@ def connected_components(edges: DataFrame, src: str = "src",
     a doc with no near-dup pair IS its own keeper by default).
 
     Vertex ids may be any orderable type. INTEGRAL ids (the common
-    case) get a cheaper convergence test — see the fast/fallback split
-    below; the result is identical either way.
+    case) get a cheaper convergence test (see ``measure`` below); the
+    result is identical either way.
     """
     e = (edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
          .filter(F.col("a") != F.col("b")))
-    # Symmetrize once so each round is a single directed join, hash-
-    # partitioned on the per-round join key ("b") BEFORE the barrier so
-    # every round's neighbour-min join re-shuffles only the (small)
-    # label state, never the edge list (optimization round 12, guide
-    # §2.4). Optimization round 13: the dedup ``distinct()`` is fused
-    # INTO that layout — rows with equal (a, b) are co-located under
-    # hash(b), so dropDuplicates needs no exchange of its own and the
-    # edge list crosses the network ONCE, not twice (the old shape
-    # shuffled by (a, b) for distinct and again by b for the layout).
-    sc = edges.sparkSession.sparkContext
-    n_floor = sc.defaultParallelism
-    sym = (e.unionByName(e.select(F.col("b").alias("a"),
-                                  F.col("a").alias("b")))
-           .repartition(n_floor, F.col("b"))
-           .dropDuplicates(["a", "b"])
-           .localCheckpoint(eager=True))
-    # Size the FROZEN edge partitioning by the data, not the core count
-    # (optimization round 13, guide §2.2 / r12 verdict item 4): the
-    # checkpointed RDD's partitioning can never be split by AQE, so at
-    # 100 TB |E|/defaultParallelism per partition would be enormous.
-    # The measured size comes from the block manager's registry for the
-    # just-materialized checkpoint (zero jobs; exact-count fallback if
-    # the accessor path breaks); the re-layout shuffle is paid ONLY
-    # when the measured edge bytes outgrow the core floor (never at
-    # test SF, always at cluster scale — exactly when it is essential).
-    sym_bytes = _checkpointed_bytes(sym)
-    if sym_bytes is None:
-        sym_bytes = sym.count() * _SYM_ROW_BYTES
-    n_data = int(sym_bytes // _TARGET_PART_BYTES) + 1
-    if n_data > n_floor:
-        sym = (sym.repartition(n_data, F.col("b"))
-               .localCheckpoint(eager=True))
-
+    # symmetrized once so each round is a single directed join on "b"
+    sym = bsp.edge_layout(e, "b", symmetric=True, dedupe=True)
     labels = (sym.select(F.col("a").alias("v")).distinct()
               .select("v", F.col("v").alias("comp"))
               .localCheckpoint(eager=True))
-    # Convergence: labels only ever DECREASE (min-propagation), so "no
-    # label changed" equals "sum of labels unchanged" — one exact
-    # decimal aggregate over the just-checkpointed state instead of a
-    # join-with-previous + filter + count per round (optimization round
-    # 12, guide §2.4). The sum test is only sound when the cast to
-    # decimal(38,0) is lossless: for non-integral ids (string doc ids,
-    # floats) the cast yields NULL, every round's sum is NULL, and
-    # None == None would return after round one with unconverged labels
-    # (r12 ADVICE). Integral ids use the fast path; anything else — and
-    # any round where a sum comes back NULL (decimal overflow under
-    # non-ANSI semantics) — falls back to the exact join-based
-    # changed-row check.
-    sum_check = isinstance(labels.schema["comp"].dataType, _INTEGRAL_TYPES)
 
-    def label_sum(frame: DataFrame):
-        return frame.agg(
-            F.sum(F.col("comp").cast("decimal(38,0)"))).first()[0]
-
-    def changed(new: DataFrame, old: DataFrame) -> bool:
-        return bool(
-            new.alias("n")
-            .join(old.select(F.col("v"), F.col("comp").alias("_pc")), "v")
-            .filter(F.col("comp") != F.col("_pc"))
-            .limit(1).count())
-
-    prev_sum = label_sum(labels) if sum_check else None
-
-    for _ in range(max_iter):
+    def step(labels: DataFrame) -> DataFrame:
         # (1) neighbour min
         nbr = (sym.join(labels.withColumnRenamed("v", "b"), "b")
                .select(F.col("a").alias("v"), "comp"))
@@ -155,26 +74,20 @@ def connected_components(edges: DataFrame, src: str = "src",
         # (2) pointer jump: comp values are always vertex ids (mins of
         # vertex ids), so the self-join is total; left+coalesce is belt
         # and braces for the round where cand is mid-update
-        jump = (cand.join(cand.select(F.col("v").alias("comp"),
+        return (cand.join(cand.select(F.col("v").alias("comp"),
                                       F.col("comp").alias("_c2")),
                           "comp", "left")
                 .select("v", F.coalesce("_c2", "comp").alias("comp")))
-        new_labels = jump.localCheckpoint(eager=True)
-        if sum_check:
-            new_sum = label_sum(new_labels)
-            if new_sum is not None and prev_sum is not None:
-                converged = new_sum == prev_sum
-            else:          # decimal overflow -> NULL: exact fallback
-                converged = not changed(new_labels, labels)
-            prev_sum = new_sum
-        else:
-            converged = not changed(new_labels, labels)
-        labels = new_labels
-        if converged:
-            return labels
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iter} rounds "
-        f"(diameter > 2^{max_iter}? — that is not a real graph)")
+
+    # Labels only ever DECREASE, so for integral ids "no label changed"
+    # equals "exact decimal sum of labels unchanged" (one aggregate per
+    # round). The cast is only lossless for integral ids: a string id
+    # casts to NULL, so those take bsp.fixpoint's exact fallback.
+    integral = isinstance(labels.schema["comp"].dataType, _INTEGRAL_TYPES)
+    measure = (F.sum(F.col("comp").cast("decimal(38,0)")) if integral
+               else None)
+    return bsp.fixpoint(labels, step, max_iter, measure,
+                        "connected_components")
 
 
 def duplicate_clusters(pairs: DataFrame, id_a: str = "id_a",

@@ -33,11 +33,13 @@ Scale shapes (the point of each implementation):
   the raw co-occurrence graph the wedge volume is what the orientation
   trick above exists to avoid.
 * ``bfs_distances`` — frontier BSP: each level is one equi-join
-  (frontier x adjacency) + one anti-join (drop visited), with a
-  ``localCheckpoint`` per level to keep lineage depth O(1). State per
+  (frontier x adjacency) + one anti-join (drop visited). State per
   level is bounded by |V|; the frontier never materializes paths (the
   DuckDB oracle enumerates bounded-depth paths instead — exact but
   exponential-ish, fine at test SF, which is what an oracle is for).
+
+The iterative loops (BFS, k-core, label propagation, HyperBall, exact
+balls) run on operators/bsp.py's edge layout and superstep driver.
 
 Oracle twins live in oracle.py (TRIANGLES / CLUSTERING_COEFF /
 NODE_JACCARD / GRAPH_BFS / COPURCHASE / CLUSTER_REP): id-ordered triple
@@ -49,6 +51,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from rel_db_to_graph_spark.operators import bsp
 
 
 def copurchase_edges(lineitem: DataFrame, min_count: int = 1,
@@ -233,28 +237,27 @@ def bfs_distances(edges: DataFrame, source, max_depth: int = 4) -> DataFrame:
 
     Per level: frontier ⋈ adjacency (equi-join on the frontier node),
     minus already-visited (left_anti) — no path enumeration, state
-    bounded by |V|, lineage cut per level. max_depth bounds the rounds
-    the same way components.py bounds pointer-jumping.
+    bounded by |V|. One ``bsp.supersteps`` superstep per level; the
+    levels after the frontier empties are no-ops.
     """
-    sym = (edges.select(F.col("u").alias("s"), F.col("v").alias("t"))
-           .unionByName(edges.select(F.col("v").alias("s"),
-                                     F.col("u").alias("t")))
-           .localCheckpoint(eager=True))
-    visited = (sym.sparkSession
-               .createDataFrame([(source, 0)], "node bigint, dist int"))
-    frontier = visited.select("node")
-    for depth in range(1, max_depth + 1):
-        nxt = (frontier.join(sym, frontier.node == sym.s)
-               .select(F.col("t").alias("node")).distinct()
-               .join(visited.select("node"), "node", "left_anti")
-               .localCheckpoint(eager=True))
-        if not nxt.take(1):
-            break
-        visited = (visited.unionByName(
-            nxt.select("node", F.lit(depth).alias("dist")))
-            .localCheckpoint(eager=True))
-        frontier = nxt
-    return visited
+    sym = bsp.edge_layout(
+        edges.select(F.col("u").alias("s"), F.col("v").alias("t")), "s",
+        symmetric=True)
+    seen = sym.sparkSession.createDataFrame(
+        [(source, 0, True)], "node bigint, dist int, _new boolean")
+
+    def step(seen: DataFrame) -> DataFrame:
+        frontier = seen.filter(F.col("_new"))
+        nxt = (sym.join(frontier.select(F.col("node").alias("s"), "dist"),
+                        "s")
+               .select(F.col("t").alias("node"),
+                       (F.col("dist") + 1).alias("dist")).distinct()
+               .join(seen.select("node"), "node", "left_anti"))
+        return (seen.withColumn("_new", F.lit(False))
+                .unionByName(nxt.withColumn("_new", F.lit(True))))
+
+    *_, seen = bsp.supersteps(seen, step, max_depth)
+    return seen.select("node", "dist")
 
 
 def k_core(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
@@ -264,39 +267,27 @@ def k_core(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
     fixpoint.
 
     Each round is one degree aggregation + two semi-joins on the
-    surviving edge set, lineage cut per round; rounds <= the graph's
-    degeneracy ordering depth (small in practice — peeling removes whole
-    shells, not single vertices). Driver state per round is one changed?
-    boolean, no data-sized collect. No SQL oracle (iterative deletion is
-    not expressible in a recursive CTE's monotone-append model); the
-    test suite pins equality against a brute-force Python twin instead.
+    surviving edge set; rounds <= the graph's degeneracy ordering depth
+    (small in practice — peeling removes whole shells, not single
+    vertices). The edge set only shrinks, so convergence is
+    ``bsp.fixpoint`` on its row count: one count job per round. The
+    oracle is oracle.py's ``_k_core_sql``, an unrolled-CTE twin guarded
+    by its own convergence check; the test suite also pins equality
+    against a brute-force Python peeler.
     """
-    cur = (edges.select("u", "v")
-           .filter(F.col("u") != F.col("v"))
-           .distinct()
-           .localCheckpoint(eager=True))
-    converged = False
-    for _ in range(max_iter):
-        deg = degrees(cur)
-        keep = deg.filter(F.col("deg") >= k).select("node")
-        nxt = (cur
-               .join(keep.withColumnRenamed("node", "u"), "u", "left_semi")
-               .join(keep.withColumnRenamed("node", "v"), "v", "left_semi")
-               .select("u", "v")
-               .localCheckpoint(eager=True))
-        if nxt.count() == cur.count():
-            converged = True
-            break
-        cur = nxt
-    if not converged:
-        # mirror components.py pointer-jumping: an exhausted loop means
-        # the survivors may be over-included — refuse to return the
-        # under-peeled set silently (ADVICE r5).
-        raise RuntimeError(
-            f"k_core did not reach its fixpoint in max_iter={max_iter} "
-            f"peeling rounds; raise max_iter (rounds needed <= the "
-            f"graph's degeneracy-shell depth)")
-    return degrees(cur).filter(F.col("deg") >= k).select(
+    cur = bsp.edge_layout(
+        edges.select("u", "v").filter(F.col("u") != F.col("v")), "u",
+        dedupe=True)
+
+    def step(cur: DataFrame) -> DataFrame:
+        keep = degrees(cur).filter(F.col("deg") >= k).select("node")
+        return (cur
+                .join(keep.withColumnRenamed("node", "u"), "u", "left_semi")
+                .join(keep.withColumnRenamed("node", "v"), "v", "left_semi")
+                .select("u", "v"))
+
+    core = bsp.fixpoint(cur, step, max_iter, F.count(F.lit(1)), "k_core")
+    return degrees(core).filter(F.col("deg") >= k).select(
         "node", F.col("deg").alias("core_deg"))
 
 
@@ -394,20 +385,17 @@ def label_propagation(edges: DataFrame, n_iter: int = 5) -> DataFrame:
 
     Per round: one equi-join of labels onto the symmetrized edges, one
     groupBy((node, label)) count (map-side combined), one per-node
-    argmax window over a neighbor-label-bounded partition, lineage cut
-    per round. Shuffle volume per round is O(|E|) label pairs — the
-    same superstep shape as pagerank/components. Isolated nodes keep
-    their own label.
+    argmax window over a neighbor-label-bounded partition — the
+    bsp.py superstep. Shuffle volume per round is O(|E|) label pairs.
+    Isolated nodes keep their own label.
     """
-    sym = (edges.select(F.col("u").alias("n"), F.col("v").alias("m"))
-           .unionByName(edges.select(F.col("v").alias("n"),
-                                     F.col("u").alias("m")))
-           .distinct()
-           .localCheckpoint(eager=True))
+    sym = bsp.edge_layout(
+        edges.select(F.col("u").alias("n"), F.col("v").alias("m")), "m",
+        symmetric=True, dedupe=True)
     verts = sym.select(F.col("n").alias("node")).distinct() \
         .localCheckpoint(eager=True)
-    labels = verts.select("node", F.col("node").alias("community"))
-    for _ in range(n_iter):
+
+    def step(labels: DataFrame) -> DataFrame:
         nbr = (sym.join(labels.select(F.col("node").alias("m"),
                                       F.col("community").alias("_l")), "m")
                .groupBy(F.col("n").alias("node"), F.col("_l"))
@@ -417,11 +405,13 @@ def label_propagation(edges: DataFrame, n_iter: int = 5) -> DataFrame:
         best = (nbr.withColumn("_r", F.row_number().over(w))
                 .filter(F.col("_r") == 1)
                 .select("node", F.col("_l").alias("community")))
-        labels = (verts.join(best, "node", "left")
-                  .select("node",
-                          F.coalesce(F.col("community"), F.col("node"))
-                          .alias("community"))
-                  .localCheckpoint(eager=True))
+        return (verts.join(best, "node", "left")
+                .select("node",
+                        F.coalesce(F.col("community"), F.col("node"))
+                        .alias("community")))
+
+    *_, labels = bsp.supersteps(
+        verts.select("node", F.col("node").alias("community")), step, n_iter)
     return labels
 
 
@@ -437,33 +427,30 @@ def hyperball(edges: DataFrame, radius: int = 2,
 
     Round r: sketch_r(v) = union(sketch_{r-1}(v), sketch_{r-1}(m) for
     each neighbor m) — one join of sketches onto the symmetrized edges
-    + one hll_union_agg groupBy, lineage cut per round. Returns
+    + one hll_union_agg groupBy, a bsp.py superstep. Returns
     (node, est_0..est_radius) with monotone ball estimates. From these,
     harmonic centrality ≈ Σ_r (est_r − est_{r-1}) / r.
     """
-    sym = (edges.select(F.col("u").alias("n"), F.col("v").alias("m"))
-           .unionByName(edges.select(F.col("v").alias("n"),
-                                     F.col("u").alias("m")))
-           .distinct()
-           .localCheckpoint(eager=True))
+    sym = bsp.edge_layout(
+        edges.select(F.col("u").alias("n"), F.col("v").alias("m")), "m",
+        symmetric=True, dedupe=True)
     verts = (sym.select(F.col("n").alias("node")).distinct()
              .localCheckpoint(eager=True))
-    sk = verts.groupBy("node").agg(
-        F.hll_sketch_agg("node", F.lit(int(lgk))).alias("sk"))
-    out = sk.select("node",
-                    F.hll_sketch_estimate("sk").alias("est_0"))
-    for r in range(1, radius + 1):
+
+    def step(sk: DataFrame) -> DataFrame:
         nbr = (sym.join(sk.select(F.col("node").alias("m"),
                                   F.col("sk").alias("_nsk")), "m")
                .select(F.col("n").alias("node"),
                        F.col("_nsk").alias("sk")))
-        sk = (sk.unionByName(nbr)
-              .groupBy("node").agg(F.hll_union_agg("sk").alias("sk"))
-              .localCheckpoint(eager=True))
-        out = out.join(
-            sk.select("node",
-                      F.hll_sketch_estimate("sk").alias(f"est_{r}")),
-            "node")
+        return (sk.unionByName(nbr)
+                .groupBy("node").agg(F.hll_union_agg("sk").alias("sk")))
+
+    sk = verts.groupBy("node").agg(
+        F.hll_sketch_agg("node", F.lit(int(lgk))).alias("sk"))
+    out = None
+    for r, s in enumerate(bsp.supersteps(sk, step, radius)):
+        est = s.select("node", F.hll_sketch_estimate("sk").alias(f"est_{r}"))
+        out = est if out is None else out.join(est, "node")
     return out
 
 
@@ -472,28 +459,26 @@ def ball_sizes_exact(edges: DataFrame, radius: int = 2) -> DataFrame:
     ``hyperball`` (materializes r-ball member sets: fine at test SF,
     which is what an audit is for; quadratic-ish at scale, which is why
     hyperball exists). Returns (node, n_ball_1..n_ball_radius)."""
-    sym = (edges.select(F.col("u").alias("n"), F.col("v").alias("m"))
-           .unionByName(edges.select(F.col("v").alias("n"),
-                                     F.col("u").alias("m")))
-           .distinct()
-           .localCheckpoint(eager=True))
+    sym = bsp.edge_layout(
+        edges.select(F.col("u").alias("n"), F.col("v").alias("m")), "n",
+        symmetric=True, dedupe=True)
     members = (sym.select(F.col("n").alias("node"),
                           F.col("m").alias("x"))
                .unionByName(
                    sym.select(F.col("n").alias("node"),
                               F.col("n").alias("x")))
                .distinct())
+
+    def step(members: DataFrame) -> DataFrame:
+        return (members
+                .join(sym.select(F.col("n").alias("x"),
+                                 F.col("m").alias("_m")), "x")
+                .select("node", F.col("_m").alias("x"))
+                .unionByName(members)
+                .distinct())
+
     out = None
-    for r in range(1, radius + 1):
-        counts = members.groupBy("node").agg(
-            F.count("*").alias(f"n_ball_{r}"))
+    for r, m in enumerate(bsp.supersteps(members, step, radius - 1), 1):
+        counts = m.groupBy("node").agg(F.count("*").alias(f"n_ball_{r}"))
         out = counts if out is None else out.join(counts, "node")
-        if r < radius:
-            members = (members
-                       .join(sym.select(F.col("n").alias("x"),
-                                        F.col("m").alias("_m")), "x")
-                       .select("node", F.col("_m").alias("x"))
-                       .unionByName(members)
-                       .distinct()
-                       .localCheckpoint(eager=True))
     return out

@@ -1,6 +1,6 @@
 """PageRank over an edge list — the canonical iterative graph-analytics
-operator, as a BSP DataFrame loop (same superstep shape as
-operators/components.py).
+operator, as a BSP DataFrame loop on operators/bsp.py's edge layout and
+superstep driver.
 
 Determinism design (what makes an ITERATIVE FLOAT algorithm
 oracle-checkable): every per-iteration contribution is quantized to
@@ -13,9 +13,9 @@ quantized arithmetic.
 Per iteration: one equi-join of (node, rank/out_deg) onto edges + one
 groupBy(dst) sum — shuffles (vertex, decimal) pairs only; dangling-node
 mass is redistributed uniformly (the standard correction) via a 1-row
-aggregate that Spark broadcasts. Lineage is cut per superstep with
-localCheckpoint (a parquet barrier at scale). Driver state: none but
-the loop counter.
+aggregate that Spark broadcasts. The barrier is paid every
+``_CHECKPOINT_EVERY``-th superstep. Driver state: none but the loop
+counter.
 """
 
 from __future__ import annotations
@@ -23,31 +23,30 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from rel_db_to_graph_spark.operators import bsp
+
 #: quantized-decimal type for order-independent accumulation
 _DEC = "decimal(38,12)"
+#: superstep barrier cadence: 2 beat 3 and 5 at sf0.1 (OPTIMIZATION_r13.md,
+#: pagerank), as between barriers each superstep reads the rank state twice
+_CHECKPOINT_EVERY = 2
 
 
 def pagerank(edges: DataFrame, n_iter: int = 5, damping: float = 0.85,
-             src: str = "src", dst: str = "dst",
-             checkpoint_every: int = 2) -> DataFrame:
+             src: str = "src", dst: str = "dst") -> DataFrame:
     """(v, rank) after ``n_iter`` synchronous iterations from a uniform
     start; rank mass sums to ~1. Vertex set = every endpoint. Ranks are
     rounded to 6 places on output (internal arithmetic is exact
-    12-place decimal).
-
-    ``checkpoint_every`` trades barrier cost against plan depth: the
-    superstep barrier (an eager materialization) is paid every k-th
-    iteration instead of every one; between barriers the plan grows by
-    two joins per iteration, which Catalyst absorbs fine for small k.
-    Results are identical for any k (the arithmetic is exact)."""
+    12-place decimal)."""
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     verts = (e.select(F.col("a").alias("v"))
              .unionByName(e.select(F.col("b").alias("v")))
              .distinct())
 
     out_deg = e.groupBy("a").agg(F.count("*").alias("_deg"))
-    # edges annotated with the src out-degree, reused every iteration
-    e_deg = e.join(out_deg, "a").localCheckpoint(eager=True)
+    # edges annotated with the src out-degree, laid out on the
+    # per-iteration join key and reused every iteration
+    e_deg = bsp.edge_layout(e.join(out_deg, "a"), "a")
 
     # optimization round 12 (guide §2.4): the dangling-vertex SET used
     # to be a separate checkpointed anti-join that every iteration
@@ -86,7 +85,7 @@ def pagerank(edges: DataFrame, n_iter: int = 5, damping: float = 0.85,
     # (exactly one zero row per vertex holds the true value).
     zero = vstat.select("v", F.lit(0).cast(_DEC).alias("_c"), "_dang")
 
-    for it in range(n_iter):
+    def step(ranks: DataFrame) -> DataFrame:
         contrib = (e_deg.join(ranks.withColumnRenamed("v", "a")
                               .select("a", "rank"), "a")
                    .select(F.col("b").alias("v"),
@@ -104,10 +103,9 @@ def pagerank(edges: DataFrame, n_iter: int = 5, damping: float = 0.85,
         new_rank = (base + d * (
             F.coalesce(F.col("_in").cast("double"), F.lit(0.0))
             + F.col("_dm").cast("double") / F.lit(float(n))))
-        ranks = (summed.crossJoin(F.broadcast(dangling))
-                 .select("v", new_rank.cast(_DEC).alias("rank"), "_dang"))
-        if (it + 1) % max(checkpoint_every, 1) == 0 or it == n_iter - 1:
-            ranks = ranks.localCheckpoint(eager=True)
+        return (summed.crossJoin(F.broadcast(dangling))
+                .select("v", new_rank.cast(_DEC).alias("rank"), "_dang"))
 
+    *_, ranks = bsp.supersteps(ranks, step, n_iter, every=_CHECKPOINT_EVERY)
     return ranks.select("v", F.round(F.col("rank").cast("double"), 6)
                         .alias("rank"))

@@ -74,6 +74,15 @@ def test_long_chain_converges_in_log_rounds(spark):
     assert {r.comp for r in out} == {0}
 
 
+def test_exhausted_max_iter_raises(spark):
+    """Too few rounds for the chain: the loop must refuse to return the
+    unconverged labels."""
+    edges = [(i, i + 1) for i in range(199)]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    with pytest.raises(RuntimeError, match="connected_components"):
+        connected_components(df, max_iter=2)
+
+
 def test_components_partition_invariance(spark):
     edges = _pseudo_edges("parts", 40, 30)
     df1 = spark.createDataFrame(edges, "src long, dst long").coalesce(1)
@@ -124,7 +133,7 @@ def test_components_edge_partitioning_is_data_sized(spark):
     leaves |E|/cores-sized partitions that AQE can never split at scale
     (r12 verdict item 4). Pin the sizing arithmetic at a tiny target so
     the re-layout branch actually runs."""
-    import rel_db_to_graph_spark.operators.components as C
+    import rel_db_to_graph_spark.operators.bsp as C
 
     edges = [(i, i + 1) for i in range(500)]
     df = spark.createDataFrame(edges, "src long, dst long")
@@ -145,13 +154,33 @@ def test_checkpointed_bytes_reads_the_block_manager(spark):
     a Spark upgrade that breaks it would make _checkpointed_bytes return
     None, and connected components would then silently pay an extra
     count job per run instead of failing here."""
-    from rel_db_to_graph_spark.operators.components import (
+    from rel_db_to_graph_spark.operators.bsp import (
         _checkpointed_bytes,
     )
 
     df = spark.range(1000).localCheckpoint(eager=True)
     got = _checkpointed_bytes(df)
     assert isinstance(got, int) and got > 0, got
+
+
+def test_layout_count_fallback_matches_block_manager(spark, monkeypatch):
+    """When the block-manager accessor breaks, ``_checkpointed_bytes``
+    returns None and the layout sizes itself from an exact row count
+    instead: same partition count, same components."""
+    from rel_db_to_graph_spark.operators import bsp
+
+    df = spark.createDataFrame(_pseudo_edges("fallback", 80, 120),
+                               "src long, dst long")
+    e = df.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+
+    def layout():
+        return bsp.edge_layout(e, "b", symmetric=True, dedupe=True)
+
+    n_parts = layout().rdd.getNumPartitions()
+    want = sorted(map(tuple, connected_components(df).collect()))
+    monkeypatch.setattr(bsp, "_checkpointed_bytes", lambda frame: None)
+    assert layout().rdd.getNumPartitions() == n_parts
+    assert sorted(map(tuple, connected_components(df).collect())) == want
 
 
 def test_decontaminate_planted_overlap(spark):

@@ -3,6 +3,7 @@ invariance."""
 
 from __future__ import annotations
 
+from rel_db_to_graph_spark.operators import bsp
 from rel_db_to_graph_spark.operators.pagerank import pagerank
 
 
@@ -37,9 +38,37 @@ def test_empty_graph(spark):
     assert pagerank(df).count() == 0
 
 
-def test_checkpoint_interval_does_not_change_results(spark):
+def test_checkpoint_interval_does_not_change_results(spark, monkeypatch):
     edges = [(i, (i * 3) % 30) for i in range(100)]
     df = spark.createDataFrame(edges, "src long, dst long")
-    r1 = sorted(map(tuple, pagerank(df, n_iter=4, checkpoint_every=1).collect()))
-    r3 = sorted(map(tuple, pagerank(df, n_iter=4, checkpoint_every=3).collect()))
-    assert r1 == r3
+    supersteps = bsp.supersteps
+
+    def ranks(every):
+        monkeypatch.setattr(
+            bsp, "supersteps",
+            lambda state, step, n, **_: supersteps(state, step, n,
+                                                   every=every))
+        return sorted(map(tuple, pagerank(df, n_iter=4).collect()))
+
+    assert ranks(1) == ranks(3)
+
+
+def test_edge_frame_is_co_partitioned(spark, monkeypatch):
+    """pagerank's per-iteration edge frame keeps the layout's explicit,
+    data-sized partition count; a join-keyed checkpoint is coalesced by
+    AQE to one partition instead."""
+    laid = []
+    edge_layout = bsp.edge_layout
+
+    def spy(*a, **kw):
+        laid.append(edge_layout(*a, **kw))
+        return laid[-1]
+
+    monkeypatch.setattr(bsp, "edge_layout", spy)
+    edges = [(i, (i * 7) % 50) for i in range(200)]
+    pagerank(spark.createDataFrame(edges, "src long, dst long"),
+             n_iter=2).collect()
+    (e_deg,) = laid
+    assert e_deg.columns == ["a", "b", "_deg"]
+    assert (e_deg.rdd.getNumPartitions()
+            >= spark.sparkContext.defaultParallelism > 1)

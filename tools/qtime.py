@@ -3,7 +3,8 @@ $SPARK_GRAFT_SF_DIR (default sf0.1) with the same forcers bench.py
 uses and an untimed warm pass at sf0.001 first. For isolating one
 query's before/after without paying a full bench run (guide §1).
 
-Usage: python tools/qtime.py name [name ...]   (names from bench HEADLINE)
+Usage: python tools/qtime.py name [name ...]   (bench HEADLINE names use
+       their bench forcer; any other ``q_<name>`` query is collected)
        SPARK_GRAFT_QTIME_REPS=5 python tools/qtime.py pagerank
 """
 
@@ -34,7 +35,8 @@ def main() -> None:
     spark.range(1000).count()
     out = {}
     for name in names:
-        fn = bench.HEADLINE[name]
+        fn = bench.HEADLINE.get(name) or (
+            lambda s, d, q=getattr(Q, f"q_{name}"): q(s, d).collect())
         fn(spark, warm_dir)          # untimed warm (codegen/JIT)
         Q.clear_caches()
         ts = []
