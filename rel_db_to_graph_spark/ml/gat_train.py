@@ -42,6 +42,18 @@ per-epoch driver traffic is the gradient cells (h·d values). The
 attention softmax costs the same two scalar shuffles as the frozen
 forward (ml/gat.py). Cross-checked against a from-scratch numpy
 forward/backward twin in tests/test_gat_train.py.
+
+Every trainer here runs on ml/train.py::fit, the one fit loop (split,
+optimizer, per-epoch train hook, val stats, history row, best-val
+checkpoint over the flat parameter vector). The full-batch trainers
+plug in one epoch pass (``_gat_epoch``, ``_stack_epoch``,
+``_hetero_epoch``); the two sampled trainers share ``_sampled_fit``,
+the sampled-epoch driver (batch membership, edge-store prefetch,
+closure fetch, val-closure collect, per-batch local steps), and plug
+in their sampler, closure frame, row parser and local epoch. The stack
+and hetero parameters each have one flat/unflat codec
+(``_stack_flat``/``_stack_unflat``, ``_hetero_flat``/
+``_hetero_unflat``), shared by the full-batch and sampled trainers.
 """
 
 from __future__ import annotations
@@ -49,7 +61,7 @@ from __future__ import annotations
 import os
 import time
 from concurrent.futures import ThreadPoolExecutor
-from contextlib import ExitStack
+from functools import reduce
 
 import numpy as np
 from pyspark.sql import DataFrame, Window
@@ -61,8 +73,14 @@ from rel_db_to_graph_spark.ml.local_step import (
     hetero_epoch_local,
     stack_epoch_local,
 )
-from rel_db_to_graph_spark.ml.train import AdamW, TrainResult
-from rel_db_to_graph_spark.operators.split import hash_split
+from rel_db_to_graph_spark.ml.train import (
+    TrainResult,
+    _flat,
+    _full_batch,
+    _unflat,
+    fit,
+)
+from rel_db_to_graph_spark.operators.split import check_draw
 
 _LEAKY = 0.2
 
@@ -88,11 +106,17 @@ def _fuse_width(n_edge_types: int) -> int:
     return max(1, _FUSE_BATCHES // max(1, n_edge_types))
 
 
-def _tr(label: str, t0: float) -> float:
-    now = time.time()
-    if _TRACE:
-        print(f"    [trace] {label}: {now - t0:.2f}s", flush=True)
-    return now
+def _phase_clock():
+    """``mark(label)``: prints the wall time since the previous mark (or
+    since the clock was made) when SPARK_GRAFT_TRACE=1."""
+    last = [time.time()]
+
+    def mark(label: str) -> None:
+        now = time.time()
+        if _TRACE:
+            print(f"    [trace] {label}: {now - last[0]:.2f}s", flush=True)
+        last[0] = now
+    return mark
 
 
 def _arr_lit(vec) -> F.Column:
@@ -583,6 +607,31 @@ def _stack_epoch(edges: DataFrame, feats: DataFrame, examples: DataFrame,
     return stats
 
 
+def _stack_init(d_in: int, hidden: int, layers: int,
+                seed: int) -> list[tuple]:
+    """Seeded initial [(Wl, Wr, a), ...] of a k-layer GATv2 stack."""
+    rng = np.random.default_rng(seed)
+    params, dim = [], d_in
+    for _ in range(layers):
+        params.append((rng.normal(0, 0.5, size=(hidden, dim)),
+                       rng.normal(0, 0.5, size=(hidden, dim)),
+                       rng.normal(0, 0.5, size=hidden)))
+        dim = hidden
+    return params
+
+
+def _stack_flat(params: list, b: float) -> list[float]:
+    """The stack model's flat vector: per layer Wl, Wr, a, then b. Also
+    flattens a gradient list of the same shape (``a`` may be a list)."""
+    return _flat([x for layer in params for x in layer], b)
+
+
+def _stack_unflat(v: list[float], like: list) -> tuple[list, float]:
+    """Inverse of ``_stack_flat``; ``like`` gives the layer shapes."""
+    arrs, b = _unflat(v, [np.shape(x) for layer in like for x in layer])
+    return [tuple(arrs[i:i + 3]) for i in range(0, len(arrs), 3)], b
+
+
 def train_gat_stack(edges: DataFrame, feats: DataFrame,
                     examples: DataFrame, hidden: int, layers: int = 2,
                     epochs: int = 5, lr: float = 0.05,
@@ -604,73 +653,23 @@ def train_gat_stack(edges: DataFrame, feats: DataFrame,
     under the DuckDB retraining gate (q_gat_stack_train_q): the twin
     unrolls the same epochs, and the integer-derived accuracy history
     is immune to gradient-sum last-ulp divergence (the link_pred_train
-    convention, round 8)."""
-    d_in = len(feats.select("emb").first()["emb"])
-    rng = np.random.default_rng(seed)
-    params = []
-    dim = d_in
-    for _ in range(layers):
-        params.append((rng.normal(0, 0.5, size=(hidden, dim)),
-                       rng.normal(0, 0.5, size=(hidden, dim)),
-                       rng.normal(0, 0.5, size=hidden)))
-        dim = hidden
-    b = 0.0
+    convention, round 8). The loop is ml/train.py::fit, one
+    ``_stack_epoch`` step per epoch."""
+    def prepare():
+        return _stack_init(len(feats.select("emb").first()["emb"]), hidden,
+                           layers, seed)
 
-    split = hash_split(examples, val_frac=val_frac, test_frac=0.0,
-                       seed=seed, draw=split_draw)
-    train = split.filter(F.col("split") == "train").drop("split").cache()
-    val = split.filter(F.col("split") == "val").drop("split").cache()
-    train.count(), val.count()
+    def start(like, train, val, *_):
+        def stats(frame, theta, with_grads):
+            return _stack_epoch(edges, feats, frame,
+                                *_stack_unflat(theta, like),
+                                with_grads=with_grads, quantize=quantize)
+        return _full_batch(_stack_flat(like, 0.0), stats,
+                           lambda s: _stack_flat(s["grads"], s["gb"]),
+                           train, val)
 
-    def flat(params, b):
-        out = []
-        for (Wl, Wr, a) in params:
-            out += [float(x) for x in Wl.ravel()]
-            out += [float(x) for x in Wr.ravel()]
-            out += [float(x) for x in a]
-        return out + [float(b)]
-
-    def unflat(v):
-        out, i, dim = [], 0, d_in
-        for _ in range(layers):
-            nW = hidden * dim
-            Wl = np.array(v[i:i + nW]).reshape(hidden, dim); i += nW
-            Wr = np.array(v[i:i + nW]).reshape(hidden, dim); i += nW
-            a = np.array(v[i:i + hidden]); i += hidden
-            out.append((Wl, Wr, a))
-            dim = hidden
-        return out, float(v[i])
-
-    opt = (None if optimizer == "sgd"
-           else AdamW(lr=lr, weight_decay=weight_decay))
-    result = TrainResult(weights=flat(params, b)[:-1], bias=b)
-    best = (params, b)
-    for epoch in range(epochs):
-        stats = _stack_epoch(edges, feats, train, params, b,
-                             quantize=quantize)
-        gflat = flat([(g[0], g[1], np.array(g[2]))
-                      for g in stats["grads"]], stats["gb"])
-        if opt is None:
-            stepped = [w - lr * g for w, g in zip(flat(params, b), gflat)]
-        else:
-            stepped = opt.step(flat(params, b), gflat)
-        params, b = unflat(stepped)
-        vstats = _stack_epoch(edges, feats, val, params, b,
-                              with_grads=False, quantize=quantize)
-        result.history.append({
-            "epoch": epoch, "train_loss": stats["loss"],
-            "train_acc": stats["acc"], "val_loss": vstats["loss"],
-            "val_acc": vstats["acc"],
-        })
-        if vstats["acc"] >= result.best_val_acc:
-            result.best_val_acc = vstats["acc"]
-            result.best_epoch = epoch
-            best = ([(Wl.copy(), Wr.copy(), a.copy())
-                     for (Wl, Wr, a) in params], b)
-    params, b = best
-    result.weights, result.bias = flat(params, b)[:-1], b
-    train.unpersist(), val.unpersist()
-    return result
+    return fit(examples, prepare, start, epochs, optimizer, lr,
+               weight_decay, val_frac, seed, split_draw)
 
 
 def _apply_WT(G: DataFrame, W: np.ndarray, col: str = "_g") -> DataFrame:
@@ -714,20 +713,17 @@ def _node_outer_grad(G: DataFrame, feats: DataFrame, h: int, d: int,
     return _collect_mat(_outer_cells(G, feats, col).collect(), h, d) / n
 
 
-#: lineage cuts inside the tagged hetero epoch — MEASURED both ways
-#: (round 8): localCheckpoint(eager=False) on a real plan materializes
-#: its AQE shuffle stages at call time (driver-blocking stage-jobs), so
-#: cuts LOOK like pure overhead inside a single fused collect — but
-#: without them each downstream branch re-derives the shared lineage
-#: (branch-specific column pruning makes the duplicated exchanges
-#: non-identical, so ReusedExchange does NOT dedup them) and the step
-#: got ~2x slower (sf0.001 steady 57s -> 116s). Cuts stay ON; the flag
-#: records the A/B for the next person tempted to remove them.
-_EPOCH_LINEAGE_CUTS = True
-
-
 def _cut(df: DataFrame) -> DataFrame:
-    return df.localCheckpoint(eager=False) if _EPOCH_LINEAGE_CUTS else df
+    """Lineage cut inside the tagged hetero epoch — MEASURED both ways
+    (round 8): localCheckpoint(eager=False) on a real plan materializes
+    its AQE shuffle stages at call time (driver-blocking stage-jobs),
+    so cuts LOOK like pure overhead inside a single fused collect — but
+    without them each downstream branch re-derives the shared lineage
+    (branch-specific column pruning makes the duplicated exchanges
+    non-identical, so ReusedExchange does NOT dedup them) and the step
+    got ~2x slower (sf0.001 steady 57 s with the cuts, 116 s
+    without)."""
+    return df.localCheckpoint(eager=False)
 
 
 def _collect_keyed_cells(frames: list) -> dict:
@@ -1064,6 +1060,49 @@ def _hetero_epoch(graph_edges: dict, feats: dict, examples: DataFrame,
     return stats
 
 
+def _hetero_init(dims: dict, edge_types: list, hidden: int,
+                 seed: int) -> dict:
+    """Seeded initial hetero params ({"W0", "Wself", "attn"}, the
+    ``_hetero_epoch`` layout) for node types with input widths
+    ``dims``."""
+    rng = np.random.default_rng(seed)
+    types = sorted(dims)
+    return {
+        "W0": {t: rng.normal(0, 0.5, size=(hidden, dims[t]))
+               for t in types},
+        "Wself": {t: rng.normal(0, 0.5, size=(hidden, hidden))
+                  for t in types},
+        "attn": {et: (rng.normal(0, 0.5, size=(hidden, hidden)),
+                      rng.normal(0, 0.5, size=(hidden, hidden)),
+                      rng.normal(0, 0.5, size=hidden))
+                 for et in sorted(edge_types)},
+    }
+
+
+def _hetero_arrays(ps: dict) -> list:
+    """The hetero arrays in flat-vector order: W0 per sorted type,
+    Wself per sorted type, then (Wl, Wr, a) per sorted edge type."""
+    return ([ps["W0"][t] for t in sorted(ps["W0"])]
+            + [ps["Wself"][t] for t in sorted(ps["Wself"])]
+            + [x for et in sorted(ps["attn"]) for x in ps["attn"][et]])
+
+
+def _hetero_flat(ps: dict, b: float) -> list[float]:
+    """The hetero model's flat vector (also flattens its gradients)."""
+    return _flat(_hetero_arrays(ps), b)
+
+
+def _hetero_unflat(v: list[float], like: dict) -> tuple[dict, float]:
+    """Inverse of ``_hetero_flat``; ``like`` gives the shapes and keys."""
+    arrs, b = _unflat(v, [np.shape(x) for x in _hetero_arrays(like)])
+    it = iter(arrs)
+    types = sorted(like["W0"])
+    return {"W0": {t: next(it) for t in types},
+            "Wself": {t: next(it) for t in types},
+            "attn": {et: (next(it), next(it), next(it))
+                     for et in sorted(like["attn"])}}, b
+
+
 def train_hetero_gat(graph_edges: dict, feats: dict, examples: DataFrame,
                      src_type: str, dst_type: str, hidden: int,
                      epochs: int = 3, lr: float = 0.05,
@@ -1075,88 +1114,25 @@ def train_hetero_gat(graph_edges: dict, feats: dict, examples: DataFrame,
     (the to_hetero training the reference runs, train.py:72-80).
     ``graph_edges``: {(src_type, rel, dst_type): (src, dst) DataFrame};
     ``feats``: {type: (node_id, emb)}; ``examples``: (src, dst, label)
-    between ``src_type`` and ``dst_type`` nodes."""
-    types = sorted(feats)
-    edge_types = sorted(graph_edges)
-    dims = {t: len(feats[t].select("emb").first()["emb"]) for t in types}
-    rng = np.random.default_rng(seed)
-    params = {
-        "W0": {t: rng.normal(0, 0.5, size=(hidden, dims[t]))
-               for t in types},
-        "Wself": {t: rng.normal(0, 0.5, size=(hidden, hidden))
-                  for t in types},
-        "attn": {et: (rng.normal(0, 0.5, size=(hidden, hidden)),
-                      rng.normal(0, 0.5, size=(hidden, hidden)),
-                      rng.normal(0, 0.5, size=hidden))
-                 for et in edge_types},
-    }
-    b = 0.0
+    between ``src_type`` and ``dst_type`` nodes. The loop is
+    ml/train.py::fit, one ``_hetero_epoch`` AdamW step per epoch."""
+    def prepare():
+        return _hetero_init(
+            {t: len(feats[t].select("emb").first()["emb"])
+             for t in sorted(feats)},
+            sorted(graph_edges), hidden, seed)
 
-    split = hash_split(examples, val_frac=val_frac, test_frac=0.0,
-                       seed=seed)
-    train = split.filter(F.col("split") == "train").drop("split").cache()
-    val = split.filter(F.col("split") == "val").drop("split").cache()
-    train.count(), val.count()
+    def start(like, train, val, *_):
+        def stats(frame, theta, with_grads):
+            return _hetero_epoch(graph_edges, feats, frame,
+                                 *_hetero_unflat(theta, like), src_type,
+                                 dst_type, with_grads=with_grads)
+        return _full_batch(_hetero_flat(like, 0.0), stats,
+                           lambda s: _hetero_flat(s["grads"], s["gb"]),
+                           train, val)
 
-    def flat(ps, bias):
-        out = []
-        for t in types:
-            out += [float(x) for x in ps["W0"][t].ravel()]
-        for t in types:
-            out += [float(x) for x in ps["Wself"][t].ravel()]
-        for et in edge_types:
-            Wl, Wr, a = ps["attn"][et]
-            out += [float(x) for x in Wl.ravel()]
-            out += [float(x) for x in Wr.ravel()]
-            out += [float(x) for x in np.asarray(a).ravel()]
-        return out + [float(bias)]
-
-    def unflat(v):
-        ps = {"W0": {}, "Wself": {}, "attn": {}}
-        i = 0
-        for t in types:
-            k = hidden * dims[t]
-            ps["W0"][t] = np.array(v[i:i + k]).reshape(hidden, dims[t])
-            i += k
-        for t in types:
-            k = hidden * hidden
-            ps["Wself"][t] = np.array(v[i:i + k]).reshape(hidden, hidden)
-            i += k
-        for et in edge_types:
-            k = hidden * hidden
-            Wl = np.array(v[i:i + k]).reshape(hidden, hidden); i += k
-            Wr = np.array(v[i:i + k]).reshape(hidden, hidden); i += k
-            a = np.array(v[i:i + hidden]); i += hidden
-            ps["attn"][et] = (Wl, Wr, a)
-        return ps, float(v[i])
-
-    opt = AdamW(lr=lr, weight_decay=weight_decay)
-    result = TrainResult(weights=flat(params, b)[:-1], bias=b)
-    best = (params, b)
-    for epoch in range(epochs):
-        stats = _hetero_epoch(graph_edges, feats, train, params, b,
-                              src_type, dst_type)
-        g = stats["grads"]
-        gparams = {"W0": g["W0"], "Wself": g["Wself"],
-                   "attn": {et: (gg[0], gg[1], np.asarray(gg[2]))
-                            for et, gg in g["attn"].items()}}
-        params, b = unflat(opt.step(flat(params, b),
-                                    flat(gparams, stats["gb"])))
-        vstats = _hetero_epoch(graph_edges, feats, val, params, b,
-                               src_type, dst_type, with_grads=False)
-        result.history.append({
-            "epoch": epoch, "train_loss": stats["loss"],
-            "train_acc": stats["acc"], "val_loss": vstats["loss"],
-            "val_acc": vstats["acc"],
-        })
-        if vstats["acc"] >= result.best_val_acc:
-            result.best_val_acc = vstats["acc"]
-            result.best_epoch = epoch
-            best = (params, b)
-    params, b = best
-    result.weights, result.bias = flat(params, b)[:-1], b
-    train.unpersist(), val.unpersist()
-    return result
+    return fit(examples, prepare, start, epochs, "adamw", lr,
+               weight_decay, val_frac, seed)
 
 
 def train_gat_link(edges: DataFrame, src_feats: DataFrame,
@@ -1171,58 +1147,29 @@ def train_gat_link(edges: DataFrame, src_feats: DataFrame,
     per side. ``examples``: (src, dst, label). Full-batch AdamW with
     best-val-accuracy checkpointing (L9/L11). ``TrainResult.weights``
     is the flat [Wl, Wr, a] vector (driver-size: h·(d_s+d_d)+h floats)
-    so callers/tests can watch the attention parameters move.
+    so callers/tests can watch the attention parameters move. The loop
+    is ml/train.py::fit, one ``_gat_epoch`` step per epoch.
     """
-    d_s = len(src_feats.select("emb").first()["emb"])
-    d_d = len(dst_feats.select("emb").first()["emb"])
-    rng = np.random.default_rng(seed)
-    Wl = rng.normal(0, 0.5, size=(hidden, d_s))
-    Wr = rng.normal(0, 0.5, size=(hidden, d_d))
-    a = rng.normal(0, 0.5, size=hidden)
-    b = 0.0
+    def prepare():
+        d_s = len(src_feats.select("emb").first()["emb"])
+        d_d = len(dst_feats.select("emb").first()["emb"])
+        rng = np.random.default_rng(seed)
+        return [(rng.normal(0, 0.5, size=(hidden, d_s)),
+                 rng.normal(0, 0.5, size=(hidden, d_d)),
+                 rng.normal(0, 0.5, size=hidden))]
 
-    split = hash_split(examples, val_frac=val_frac, test_frac=0.0, seed=seed)
-    train = split.filter(F.col("split") == "train").drop("split").cache()
-    val = split.filter(F.col("split") == "val").drop("split").cache()
-    train.count(), val.count()
+    def start(like, train, val, *_):
+        def stats(frame, theta, with_grads):
+            [(Wl, Wr, a)], b = _stack_unflat(theta, like)
+            return _gat_epoch(edges, src_feats, dst_feats, frame, Wl, Wr,
+                              a, b, with_grads=with_grads)
+        return _full_batch(
+            _stack_flat(like, 0.0), stats,
+            lambda s: _stack_flat([(s["gWl"], s["gWr"], s["ga"])], s["gb"]),
+            train, val)
 
-    def flat(Wl, Wr, a, b):
-        return ([float(x) for x in Wl.ravel()]
-                + [float(x) for x in Wr.ravel()]
-                + [float(x) for x in a] + [float(b)])
-
-    def unflat(v):
-        nWl = hidden * d_s
-        nWr = hidden * d_d
-        return (np.array(v[:nWl]).reshape(hidden, d_s),
-                np.array(v[nWl:nWl + nWr]).reshape(hidden, d_d),
-                np.array(v[nWl + nWr:nWl + nWr + hidden]),
-                float(v[-1]))
-
-    opt = AdamW(lr=lr, weight_decay=weight_decay)
-    result = TrainResult(weights=flat(Wl, Wr, a, b)[:-1], bias=b)
-    best = (Wl, Wr, a, b)
-    for epoch in range(epochs):
-        stats = _gat_epoch(edges, src_feats, dst_feats, train, Wl, Wr, a, b)
-        gflat = ([float(x) for x in stats["gWl"].ravel()]
-                 + [float(x) for x in stats["gWr"].ravel()]
-                 + list(stats["ga"]) + [stats["gb"]])
-        Wl, Wr, a, b = unflat(opt.step(flat(Wl, Wr, a, b), gflat))
-        vstats = _gat_epoch(edges, src_feats, dst_feats, val, Wl, Wr, a, b,
-                            with_grads=False)
-        result.history.append({
-            "epoch": epoch, "train_loss": stats["loss"],
-            "train_acc": stats["acc"], "val_loss": vstats["loss"],
-            "val_acc": vstats["acc"],
-        })
-        if vstats["acc"] >= result.best_val_acc:
-            result.best_val_acc = vstats["acc"]
-            result.best_epoch = epoch
-            best = (Wl.copy(), Wr.copy(), a.copy(), b)
-    Wl, Wr, a, b = best
-    result.weights, result.bias = flat(Wl, Wr, a, b)[:-1], b
-    train.unpersist(), val.unpersist()
-    return result
+    return fit(examples, prepare, start, epochs, "adamw", lr,
+               weight_decay, val_frac, seed)
 
 
 def _batch_closure(samp: DataFrame, seeds: dict, edge_types: list,
@@ -1307,6 +1254,242 @@ def _closure_union(samp: DataFrame, seeds: dict, edge_types: list,
     return allc
 
 
+#: rows the once-per-run val-closure collect may fetch: the val closure
+#: is O(|val| × full neighborhoods), NOT batch-bounded, so past this the
+#: distributed DataFrame forward stays the evaluation path (the
+#: limit+collect is one job; an over-limit fetch is discarded)
+_VAL_COLLECT_ROWS = 5_000_000
+
+
+def _sampled_fit(examples: DataFrame, prep, codec, sample_store,
+                 closure_frame, parse, local_epoch, val_closure, *,
+                 seed_types: tuple, n_edge_types: int, store: bool,
+                 epochs: int, batch_size: int, max_batches: int | None,
+                 lr: float, val_frac: float, seed: int,
+                 weight_decay: float, optimizer: str, split_draw: str,
+                 batch_draw: str, sample_draw: str) -> TrainResult:
+    """The sampled-epoch driver both sampled trainers run on, inside
+    ml/train.py::fit. It moves the data; the model plugs in its own
+    operators:
+
+    * ``prep() -> like``: one-time feature materialization and the
+      seeded initial parameters, run before the split (``fit``'s
+      prepare); ``codec = (flat, unflat)`` maps them to and from the
+      flat vector the stepper updates.
+    * ``sample_store(frontiers, seeds) -> {tag: sampled edges}``: the
+      fused multi-batch edge-store sampler call (``store=True`` only).
+      ``frontiers`` is {tag: {node type: ids}}, an example's endpoints
+      typed by ``seed_types`` = (src type, dst type).
+    * ``closure_frame(batch, samp, bseed)``: one batch's closure as a
+      tagged-row frame (kind='x' rows carry the batch examples, label
+      riding in node_id); ``samp`` None = sample by direct scan with
+      seed ``bseed``.
+    * ``parse(rows)``: collected closure rows → the local engine's
+      arrays; ``local_epoch(closure, params, b, with_grads)`` → stats:
+      the ml/local_step.py forward(+backward).
+    * ``val_closure(val) -> (frame, fallback)``: the val set's
+      full-neighborhood closure as a ``parse``-able frame, and the
+      distributed forward ``fallback(params, b)`` over it.
+
+    Per epoch, batch membership is content-addressed — hash(src, dst,
+    seed+epoch) mod n_batches (ml/train.py's L4 idiom: the reshuffle is
+    deterministic yet differs across epochs; each batch is a FILTER
+    over the cached split; ``batch_draw='md5'`` is the DuckDB-replayable
+    variant, the first-8-hex-chars parse of operators/split.py).
+    ``max_batches`` caps steps per epoch. Each epoch's closures arrive
+    in chunked collect jobs, and every batch takes one optimizer step
+    in the local engine: milliseconds per step instead of the measured
+    ~5-6 s of Catalyst re-analysis + ~25-stage scheduling a per-step
+    DataFrame job paid, while per-step data stays O(batch ×
+    fanout^layers) by the sampling bound.
+
+    Validation forwards the val closure computed ONCE per run (it is
+    parameter-independent): collected once and run locally, unless it
+    exceeds ``_VAL_COLLECT_ROWS`` or the run is a single epoch, in
+    which case the distributed fallback evaluates it."""
+    for draw in (split_draw, batch_draw, sample_draw):
+        check_draw(draw)
+    flat, unflat = codec
+    fuse = _fuse_width(n_edge_types)
+    mark = _phase_clock()
+
+    def prepare():
+        like = prep()
+        mark("feats ckpt + dims")
+        return like
+
+    def start(like, train, val, n_train, n_val, scope):
+        mark("split + counts")
+        n_batches = max(1, -(-n_train // max(1, batch_size)))
+        steps = (n_batches if max_batches is None
+                 else min(n_batches, max_batches))
+
+        def member(epoch: int) -> F.Column:
+            if batch_draw == "md5":
+                dig = F.md5(F.concat_ws(
+                    ":", F.col("src").cast("string"),
+                    F.col("dst").cast("string"), F.lit(str(seed + epoch))))
+                return F.pmod(F.conv(F.substring(dig, 1, 8), 16, 10)
+                              .cast("long"), F.lit(n_batches))
+            return F.pmod(F.xxhash64("src", "dst", F.lit(seed + epoch)),
+                          F.lit(n_batches))
+
+        def fetch(pairs: list, samp_by_pair: dict | None = None) -> dict:
+            """{(epoch, batch): parsed closure} in collect jobs of
+            ``fuse`` closures each, chunked ACROSS epochs (the fuse
+            width bounds Catalyst analysis like the fused sampler's)."""
+            out: dict = {}
+            for lo in range(0, len(pairs), fuse):
+                u = None
+                for pi, (ep, bi) in enumerate(pairs[lo:lo + fuse],
+                                              start=lo):
+                    part = closure_frame(
+                        train.filter(member(ep) == bi),
+                        None if samp_by_pair is None
+                        else samp_by_pair[(ep, bi)],
+                        seed + 7919 * ep + 104729 * bi
+                    ).withColumn("_pi", F.lit(pi))
+                    u = part if u is None else u.unionByName(part)
+                rows_by_pi: dict = {}
+                for r in u.collect():
+                    rows_by_pi.setdefault(int(r["_pi"]), []).append(r)
+                for pi, rows in rows_by_pi.items():
+                    out[pairs[pi]] = parse(rows)
+            return out
+
+        def prefetch_group(egroup: tuple) -> dict:
+            """Round 12: ONE fused sampling + closure-fetch pipeline for
+            a GROUP of epochs. Membership and hash draws are
+            parameter-independent across epochs exactly as across
+            batches, so the store probe scans ONCE per hop for the
+            union frontier (two concurrent per-epoch pipelines measured
+            17.3+17.7 s overlapped at sf1). Per-(epoch, batch) draws are
+            bit-identical: the store-multi samplers restrict each tag
+            by its own frontier and literal seed whichever tags share
+            the probe (tests/test_edge_store.py). Returns {epoch: {bi:
+            closure}}."""
+            tick = _phase_clock()
+            label = f"e{list(egroup)} prefetch"
+            tagged = None
+            for e in egroup:
+                te = (train.withColumn("_bi", member(e))
+                      .filter(F.col("_bi") < steps)
+                      .withColumn("_e", F.lit(int(e))))
+                tagged = te if tagged is None else tagged.unionByName(te)
+            src, dst = (tagged.select("_e", "_bi", F.lit(t).alias("_t"),
+                                      F.col(c).alias("node_id"))
+                        for t, c in zip(seed_types, ("src", "dst")))
+            su = src.unionByName(dst).distinct()
+            pairs = [(e, bi) for e in egroup for bi in range(steps)]
+            fr: dict = {p: {} for p in pairs}
+            for r in su.collect():
+                fr[(int(r["_e"]), int(r["_bi"]))].setdefault(
+                    r["_t"], []).append(r["node_id"])
+            tick(f"{label}: membership collect")
+            tagof = {p: i for i, p in enumerate(pairs)}  # dense tags
+            samp: dict = {}
+            for lo in range(0, len(pairs), fuse):
+                chunk = pairs[lo:lo + fuse]
+                res = sample_store(
+                    {tagof[p]: fr[p] for p in chunk},
+                    {tagof[p]: seed + 7919 * p[0] + 104729 * p[1]
+                     for p in chunk})
+                samp.update({p: res[tagof[p]] for p in chunk})
+            tick(f"{label}: store sampler")
+            got = fetch(pairs, samp)
+            tick(f"{label}: closure fetch")
+            return {e: {bi: got[(e, bi)] for bi in range(steps)
+                        if (e, bi) in got}
+                    for e in egroup}
+
+        pool, futs, pending = None, {}, {}
+        depth = min(2, epochs)
+        if store:
+            # The bucket-scan planner override is held for the WHOLE
+            # run (session confs are not thread-local — per-prefetch
+            # set/unset from the background thread would flicker under
+            # the main thread's planning; inside the trainer the only
+            # bucketed-table scans are the store probes, which want it
+            # off anyway). The local steps are milliseconds — nothing
+            # to hide sampling behind — so a TWO-epoch window of
+            # sampling + closure fetches stays in flight as one fused
+            # group: epochs 0-1 overlap the val-closure build below,
+            # each later group the epochs before it. Memory stays
+            # bounded: ≤ depth epochs of batch-bounded closures.
+            from rel_db_to_graph_spark.operators.sampling import (
+                _forced_bucketed_scan,
+            )
+            scope.enter_context(_forced_bucketed_scan(examples.sparkSession))
+            pool = ThreadPoolExecutor(max_workers=1)
+            scope.callback(pool.shutdown, wait=True)
+            futs[0] = pool.submit(prefetch_group, tuple(range(depth)))
+
+        # an empty val split scores 0 loss / 0 accuracy, as the
+        # distributed forward over no examples does
+        fallback, val_local = (lambda *_: {"loss": 0.0, "acc": 0.0}), None
+        if n_val:
+            vframe, fallback = val_closure(val)
+            mark("val closure")
+            if epochs >= 2:
+                # the collect pays off once it replaces ≥2 distributed
+                # val forwards (measured at sf1 uncapped: collect ~36 s
+                # vs ~16 s per distributed forward — ADVICE r11)
+                rows = vframe.limit(_VAL_COLLECT_ROWS + 1).collect()
+                if len(rows) <= _VAL_COLLECT_ROWS:
+                    val_local = parse(rows)
+                mark("val closure collect (local)")
+
+        def train_epoch(epoch, theta, step):
+            if pool is None:
+                closures = {bi: c for (_, bi), c in fetch(
+                    [(epoch, bi) for bi in range(steps)]).items()}
+                mark(f"e{epoch} local closure collect")
+            else:
+                if epoch in futs:
+                    pending.update(futs.pop(epoch).result())
+                    nxt = epoch + depth
+                    if nxt < epochs:
+                        futs[nxt] = pool.submit(
+                            prefetch_group,
+                            tuple(range(nxt, min(nxt + depth, epochs))))
+                closures = pending.pop(epoch)
+                mark(f"e{epoch} prefetch join")
+            losses, ns = [], []
+            for bi, closure in sorted(closures.items()):
+                stats = local_epoch(closure, *unflat(theta, like), True)
+                mark(f"e{epoch} b{bi} local step")
+                if stats["n"] == 0:
+                    continue
+                theta = step(theta, flat(stats["grads"], stats["gb"]))
+                losses.append(stats["loss"] * stats["n"])
+                ns.append(stats["n"])
+            n_seen = sum(ns)
+            return theta, {
+                "train_loss": (sum(losses) / n_seen) if n_seen else 0.0,
+                "train_n": n_seen}
+
+        def val_stats(theta):
+            params, b = unflat(theta, like)
+            stats = (fallback(params, b) if val_local is None
+                     else local_epoch(val_local, params, b, False))
+            mark("val forward")
+            return stats
+
+        return flat(like, 0.0), train_epoch, val_stats
+
+    return fit(examples, prepare, start, epochs, optimizer, lr,
+               weight_decay, val_frac, seed, split_draw)
+
+
+def _typed_seeds(df: DataFrame, src_type: str, dst_type: str) -> dict:
+    """{node type: node_id frame} of an example frame's endpoints."""
+    seeds = {src_type: df.select(F.col("src").alias("node_id"))}
+    dst = df.select(F.col("dst").alias("node_id"))
+    seeds[dst_type] = (seeds[dst_type].unionAll(dst)
+                       if dst_type in seeds else dst)
+    return seeds
+
+
 def train_hetero_gat_sampled(graph_edges: dict, feats: dict,
                              examples: DataFrame, src_type: str,
                              dst_type: str, hidden: int,
@@ -1331,30 +1514,26 @@ def train_hetero_gat_sampled(graph_edges: dict, feats: dict,
     mini-batch over a sampled dependency subgraph, which is what makes
     GNN training tractable once the graph no longer fits an epoch.
 
-    Per epoch: batch membership is content-addressed —
-    hash(src, dst, epoch) mod n_batches (ml/train.py's L4 idiom: the
-    per-epoch reshuffle is deterministic yet differs across epochs, and
-    each batch is a FILTER over the cached split, no repartition). Per
-    batch: seeds = the batch's endpoint nodes; the message graph is
-    ``sample_incoming_hetero`` (≤ fanout in-edges per node per edge
-    type, expanding backward through message flow); features are cut to
-    the sampled closure; the step math runs on the collected closure
-    (see "Step engine" below). Per-batch shuffle volume is
-    O(fanout × batch_size), independent of |E|.
+    The epoch loop is ``_sampled_fit`` (content-addressed batches,
+    edge-store prefetch, chunked closure fetch, local steps, val
+    closure). Per batch: seeds = the batch's endpoint nodes; the
+    message graph is ``sample_incoming_hetero`` (≤ fanout in-edges per
+    node per edge type, expanding backward through message flow);
+    features are cut to the sampled closure (``_closure_union``); the
+    step runs in ml/local_step.py::hetero_epoch_local, pinned against
+    ``_hetero_epoch`` (whose numpy and finite-difference crosschecks
+    are the reference) by tests/test_local_step.py. Per-batch shuffle
+    volume is O(fanout × batch_size), independent of |E|.
 
     Validation runs fanout=-1 (full neighborhoods — the reference's
     eval mode, dataloader.py:33) with no grads, restricted to the val
-    set's dependency closure computed ONCE per run (it is parameter-
-    independent), so per-epoch val cost is O(|closure|), not O(|E|).
+    set's dependency closure, so per-epoch val cost is O(|closure|),
+    not O(|E|); the distributed fallback is ``_hetero_epoch``.
 
     Exactness anchor (tested): with fanout ≥ max in-degree and a single
     batch, every sampled epoch reproduces the full-batch epoch —
     gradients only flow through seed-node embeddings, so the dropped
     edges are exactly the zero-gradient ones.
-
-    ``max_batches`` caps gradient steps per epoch (the driver-runtime
-    valve): each epoch then trains on a different content-addressed
-    subset, still valid SGD.
 
     ``edge_tables`` ({edge_type: table_name} from
     sources.bucketed.write_edge_store) switches the per-batch probe to
@@ -1374,23 +1553,8 @@ def train_hetero_gat_sampled(graph_edges: dict, feats: dict,
     per-batch plain-GD steps, putting the whole sampled hetero loop
     under the hash gate (q_hetero_link_train_sampled_q). md5 draws
     require non-null src/dst (null-dropped edge frames guarantee it).
-
-    Step engine: sampling, membership, split, and closure feature-cuts
-    are distributed DataFrame ops; each epoch's sampled closures are
-    then fetched in ONE chunked collect job and the sequential
-    forward/backward/update chain runs in ml/local_step.py's vectorized
-    numpy engine — milliseconds per optimizer step instead of the
-    measured ~5-6 s of per-step Catalyst re-analysis + ~25-stage
-    scheduling that a per-step DataFrame job paid, while per-step data
-    stays O(batch × fanout^layers) by the sampling bound (the closures
-    are driver-sized BY CONSTRUCTION at any corpus scale). The local
-    step math is pinned against ``_hetero_epoch`` (whose numpy and
-    finite-difference crosschecks are the reference) by
-    tests/test_local_step.py. Validation fetches its full-neighborhood
-    closure once and runs locally too, unless the closure exceeds the
-    collect guard (or the run is a single epoch), in which case the
-    distributed ``_hetero_epoch`` forward evaluates it.
     """
+    from rel_db_to_graph_spark.ml.local_step import parse_closure_rows
     from rel_db_to_graph_spark.operators.sampling import (
         sample_incoming_hetero,
         sample_incoming_hetero_store_multi,
@@ -1399,246 +1563,51 @@ def train_hetero_gat_sampled(graph_edges: dict, feats: dict,
     fanouts = list(fanouts) if fanouts is not None else [15]
     types = sorted(feats)
     edge_types = sorted(graph_edges)
-    t0 = time.time()
-    # materialize the feature frames ONCE per run (round-8 step diet):
-    # every per-batch closure joins feats, and a lazy plan would
-    # re-materialize the whole upstream feature lineage's AQE stages on
-    # every batch (measured ~30 stage-jobs per closure at sf0.01)
-    feats = {t: f.localCheckpoint(eager=True) for t, f in feats.items()}
-    dims = {t: len(feats[t].select("emb").first()["emb"]) for t in types}
-    t0 = _tr("feats ckpt + dims", t0)
-    rng = np.random.default_rng(seed)
-    params = {
-        "W0": {t: rng.normal(0, 0.5, size=(hidden, dims[t]))
-               for t in types},
-        "Wself": {t: rng.normal(0, 0.5, size=(hidden, hidden))
-                  for t in types},
-        "attn": {et: (rng.normal(0, 0.5, size=(hidden, hidden)),
-                      rng.normal(0, 0.5, size=(hidden, hidden)),
-                      rng.normal(0, 0.5, size=hidden))
-                 for et in edge_types},
-    }
-    b = 0.0
 
-    split = hash_split(examples, val_frac=val_frac, test_frac=0.0,
-                       seed=seed, draw=split_draw)
-    train = split.filter(F.col("split") == "train").drop("split").cache()
-    val = split.filter(F.col("split") == "val").drop("split").cache()
-    # both split sizes in ONE job (two .count()s were pure floor) —
-    # counted THROUGH the cached frames so the job also fills both
-    # caches before the background prefetch and the val-closure build
-    # race to read them
-    cnt = {r["_s"]: r["n"] for r in
-           (train.select(F.lit("train").alias("_s"))
-            .unionByName(val.select(F.lit("val").alias("_s")))
-            .groupBy("_s").agg(F.count("*").alias("n"))).collect()}
-    n_train = int(cnt.get("train", 0))
-    n_val = int(cnt.get("val", 0))
-    n_batches = max(1, -(-n_train // max(1, batch_size)))
-    steps = (n_batches if max_batches is None
-             else min(n_batches, max_batches))
-    t0 = _tr("split + counts", t0)
+    def prep():
+        nonlocal feats
+        # materialize the feature frames ONCE per run (round-8 step
+        # diet): every per-batch closure joins feats, and a lazy plan
+        # would re-materialize the whole upstream feature lineage's AQE
+        # stages on every batch (measured ~30 stage-jobs per closure at
+        # sf0.01)
+        feats = {t: f.localCheckpoint(eager=True) for t, f in feats.items()}
+        return _hetero_init(
+            {t: len(feats[t].select("emb").first()["emb"]) for t in types},
+            edge_types, hidden, seed)
 
-    def _member(epoch: int) -> F.Column:
-        # content-addressed batch membership; 'md5' is the
-        # DuckDB-replayable variant (train_gat_stack_sampled's _member)
-        if batch_draw == "md5":
-            dig = F.md5(F.concat_ws(
-                ":", F.col("src").cast("string"),
-                F.col("dst").cast("string"), F.lit(str(seed + epoch))))
-            return F.pmod(F.conv(F.substring(dig, 1, 8), 16, 10)
-                          .cast("long"), F.lit(n_batches))
-        return F.pmod(F.xxhash64("src", "dst", F.lit(seed + epoch)),
-                      F.lit(n_batches))
+    def sample_store(frontiers, seeds):
+        return sample_incoming_hetero_store_multi(
+            examples.sparkSession, edge_tables, frontiers, fanouts, seeds,
+            draw=sample_draw)
 
-    def _prefetch_group(egroup: tuple) -> dict:
-        """Round 12 (VERDICT r11 next-step 4 — the per-epoch prefetch
-        join was the local engine's remaining exposed Spark cost): ONE
-        fused sampling + closure-fetch pipeline for a GROUP of epochs.
-        Batch membership and hash draws are parameter-independent
-        across epochs exactly as they are across batches, so the
-        depth-2 window that previously ran TWO concurrent per-epoch
-        pipelines (each scanning the bucketed store once per hop —
-        measured 17.3+17.7 s overlapped at sf1) becomes one pipeline
-        whose per-hop probe scans the store ONCE for the union
-        frontier. Per-(epoch, batch) draws are bit-identical: the
-        store-multi sampler's branch pipelines restrict by each tag's
-        own frontier and literal seed regardless of which tags share
-        the probe (tests/test_edge_store.py), and membership stays the
-        per-epoch literal hash. Returns {epoch: {bi: closures}}."""
-        tp = time.time()
-        tagged = None
-        for e in egroup:
-            te = (train.withColumn("_bi", _member(e))
-                  .filter(F.col("_bi") < steps)
-                  .withColumn("_e", F.lit(int(e))))
-            tagged = te if tagged is None else tagged.unionByName(te)
-        su = (tagged.select("_e", "_bi", F.lit(src_type).alias("_t"),
-                            F.col("src").alias("node_id"))
-              .unionByName(tagged.select(
-                  "_e", "_bi", F.lit(dst_type).alias("_t"),
-                  F.col("dst").alias("node_id")))
-              .distinct())
-        fr: dict = {(e, bi): {} for e in egroup for bi in range(steps)}
-        for r in su.collect():
-            fr[(int(r["_e"]), int(r["_bi"]))].setdefault(
-                r["_t"], []).append(r["node_id"])
-        tp = _tr(f"e{list(egroup)} prefetch: membership collect", tp)
-        pairs = [(e, bi) for e in egroup for bi in range(steps)]
-        bseeds = {(e, bi): seed + 7919 * e + 104729 * bi
-                  for (e, bi) in pairs}
-        tagof = {p: i for i, p in enumerate(pairs)}  # dense sampler tags
-        samp: dict = {}
-        fuse = _fuse_width(len(edge_types))
-        for lo in range(0, len(pairs), fuse):
-            chunk = pairs[lo:lo + fuse]
-            res = sample_incoming_hetero_store_multi(
-                examples.sparkSession, edge_tables,
-                {tagof[p]: fr[p] for p in chunk}, fanouts,
-                {tagof[p]: bseeds[p] for p in chunk}, draw=sample_draw)
-            samp.update({p: res[tagof[p]] for p in chunk})
-        tp = _tr(f"e{list(egroup)} prefetch: store sampler", tp)
-        got = _closures_local(pairs, samp)
-        _tr(f"e{list(egroup)} prefetch: closure fetch", tp)
-        return {e: {bi: got[(e, bi)] for bi in range(steps)
-                    if (e, bi) in got}
-                for e in egroup}
+    def x_rows(df):
+        return df.select(
+            F.lit("x").alias("kind"), F.lit("").alias("tag"), "src", "dst",
+            F.col("label").cast("bigint").alias("node_id"),
+            F.lit(None).cast("array<double>").alias("emb"))
 
-    def _closures_local(pairs: list, samp_by_pair) -> dict:
-        """Round 11/12 (local step engine): fetch the sampled closure +
-        examples of every (epoch, batch) pair in chunked collect jobs —
-        kind='x' rows carry the batch examples with the label riding in
-        node_id. Chunked at the branch-normalized fuse width per job
-        to bound Catalyst analysis, like the fused sampler; round 12
-        chunks ACROSS epochs, so a depth-2 window needs half the
-        collect jobs. Each closure is O(batch × fanout^layers) rows by
-        the sampling bound, so the fetch is driver-sized by
-        construction."""
-        from rel_db_to_graph_spark.ml.local_step import parse_closure_rows
-        xnull = F.lit(None).cast("array<double>")
-        out: dict = {}
-        fuse = _fuse_width(len(edge_types))
-        for lo in range(0, len(pairs), fuse):
-            u = None
-            for pi, (ep, bi) in enumerate(pairs[lo:lo + fuse], start=lo):
-                batch = train.filter(_member(ep) == bi)
-                seeds = {src_type: batch.select(
-                    F.col("src").alias("node_id"))}
-                dst_seed = batch.select(F.col("dst").alias("node_id"))
-                seeds[dst_type] = (seeds[dst_type].unionAll(dst_seed)
-                                   if dst_type in seeds else dst_seed)
-                if samp_by_pair is not None:
-                    samp = samp_by_pair[(ep, bi)]
-                else:
-                    samp = sample_incoming_hetero(
-                        graph_edges, seeds, fanouts,
-                        seed=seed + 7919 * ep + 104729 * bi,
-                        draw=sample_draw)
-                allc = _closure_union(samp.localCheckpoint(eager=False),
-                                      seeds, edge_types, feats,
-                                      broadcast_ids=True)
-                xrows = batch.select(
-                    F.lit("x").alias("kind"), F.lit("").alias("tag"),
-                    "src", "dst",
-                    F.col("label").cast("bigint").alias("node_id"),
-                    xnull.alias("emb"))
-                part = allc.unionByName(xrows).withColumn(
-                    "_pi", F.lit(pi))
-                u = part if u is None else u.unionByName(part)
-            rows_by_pi: dict = {}
-            for r in u.collect():
-                rows_by_pi.setdefault(int(r["_pi"]), []).append(r)
-            for pi, rows in rows_by_pi.items():
-                out[pairs[pi]] = parse_closure_rows(rows, edge_types,
-                                                    types)
-        return out
+    def closure_frame(batch, samp, bseed):
+        seeds = _typed_seeds(batch, src_type, dst_type)
+        if samp is None:
+            samp = sample_incoming_hetero(graph_edges, seeds, fanouts,
+                                          seed=bseed, draw=sample_draw)
+        return _closure_union(samp.localCheckpoint(eager=False), seeds,
+                              edge_types, feats, broadcast_ids=True
+                              ).unionByName(x_rows(batch))
 
-    def _epoch_closures_local(epoch: int) -> dict:
-        """One epoch's closures, sampled by the direct-scan sampler (the
-        no-store path) — thin wrapper over the pair-keyed fetch."""
-        got = _closures_local([(epoch, bi) for bi in range(steps)], None)
-        return {bi: v for (_, bi), v in got.items()}
+    def local_epoch(closure, params, b, with_grads):
+        return hetero_epoch_local(*closure, params, b, src_type, dst_type,
+                                  with_grads=with_grads, quantize=quantize)
 
-    def _collect_val_closure(vsub, vfcut, val_df, max_rows=5_000_000):
-        """Round 11 (local step engine): the per-epoch validation
-        forward re-reads the SAME parameter-independent closure every
-        epoch — fetch it once and run the forward-only epoch locally
-        too. Size-guarded: the val closure is O(|val| × full
-        neighborhoods), NOT batch-bounded, so past ``max_rows`` the
-        distributed DataFrame forward stays the evaluation path (the
-        limit+collect is one job; an over-limit fetch is discarded)."""
-        from rel_db_to_graph_spark.ml.local_step import parse_closure_rows
-        arr_null = F.lit(None).cast("array<double>")
-        long_null = F.lit(None).cast("bigint")
-        parts = []
-        for et in edge_types:
-            parts.append(vsub[et].select(
-                F.lit("e").alias("kind"),
-                F.lit("|".join(et)).alias("tag"), "src", "dst",
-                long_null.alias("node_id"), arr_null.alias("emb")))
-        for t in types:
-            parts.append(vfcut[t].select(
-                F.lit("f").alias("kind"), F.lit(t).alias("tag"),
-                long_null.alias("src"), long_null.alias("dst"),
-                "node_id", "emb"))
-        parts.append(val_df.select(
-            F.lit("x").alias("kind"), F.lit("").alias("tag"),
-            "src", "dst", F.col("label").cast("bigint").alias("node_id"),
-            arr_null.alias("emb")))
-        u = parts[0]
-        for p in parts[1:]:
-            u = u.unionByName(p)
-        rows = u.limit(max_rows + 1).collect()
-        if len(rows) > max_rows:
-            return None
-        return parse_closure_rows(rows, edge_types, types)
-
-    pool, futs = None, {}
-    _scope = ExitStack()
-    if edge_tables is not None:
-        # epoch 0's sampling overlaps the val-closure build below;
-        # epoch e+1's sampling overlaps epoch e's gradient steps.
-        # The bucket-scan planner override is held for the WHOLE run
-        # (session confs are not thread-local — per-prefetch set/unset
-        # from the background thread would flicker under the main
-        # thread's planning; inside the trainer the only bucketed-table
-        # scans are the store probes, which want it off anyway)
-        from rel_db_to_graph_spark.operators.sampling import (
-            _forced_bucketed_scan,
-        )
-        _scope.enter_context(
-            _forced_bucketed_scan(examples.sparkSession))
-        # prefetch depth: the local steps are milliseconds — nothing
-        # to hide sampling behind — so keep a TWO-epoch window of
-        # (parameter-independent) sampling + closure fetches in flight,
-        # overlapping the run's own startup jobs instead of serializing
-        # at each epoch boundary. Round 12: the window is ONE fused
-        # pipeline (_prefetch_group), not two concurrent per-epoch
-        # pipelines — the store probe scans once for the union
-        # frontier. One group is in flight at a time, and memory stays
-        # bounded: ≤ depth epochs of batch-bounded closures.
-        depth = min(2, epochs)
-        pool = ThreadPoolExecutor(max_workers=1)
-        futs = {0: pool.submit(_prefetch_group, tuple(range(depth)))}
-
-    # Per-epoch validation used to forward the FULL graph — the one
-    # remaining full-|E| term in the sampled training path (VERDICT r6
-    # item 4; sf1 wall-clock was validation-dominated). The val
-    # forward's dependency closure is PARAMETER-independent, so compute
-    # it once: full in-neighborhoods ([-1] fanouts — the reference's
-    # eval semantics, dataloader.py:33) of the val endpoints, one hop
-    # per layer, restricted to the edges/features that forward actually
-    # reads. Identical val stats (the same per-dst edge sets feed every
-    # softmax/sum — pinned by the exactness-anchor tests and
-    # test_val_closure_matches_full_graph), but per-epoch cost is
-    # O(|closure|) instead of O(|E|): the full edge frames are scanned
-    # once here, not once per epoch.
-    val_sub, val_fcut = graph_edges, feats
-    if n_val:
-        vseeds = {src_type: val.select(F.col("src").alias("node_id"))}
-        vdst = val.select(F.col("dst").alias("node_id"))
-        vseeds[dst_type] = (vseeds[dst_type].unionAll(vdst)
-                            if dst_type in vseeds else vdst)
+    def val_closure(val):
+        # full in-neighborhoods ([-1] fanouts) of the val endpoints, one
+        # hop per layer, restricted to what the forward reads: the same
+        # per-dst edge sets feed every softmax/sum as the full graph
+        # (test_val_closure_matches_full_graph), and the full edge
+        # frames are scanned once here, not once per epoch
+        vseeds = _typed_seeds(val, src_type, dst_type)
+        sub, fcut = graph_edges, feats
         try:
             vsamp = sample_incoming_hetero(
                 graph_edges, vseeds, [-1] * len(fanouts), seed=seed)
@@ -1646,129 +1615,32 @@ def train_hetero_gat_sampled(graph_edges: dict, feats: dict,
             vsamp = None
         if vsamp is not None:
             # _batch_closure RAM-checkpoints every returned frame
-            val_sub, val_fcut = _batch_closure(vsamp, vseeds,
-                                               edge_types, feats)
-    t0 = _tr("val closure", t0)
-    val_local = None
-    if n_val and epochs >= 2:
-        # the collect pays off once it replaces ≥2 DataFrame val
-        # forwards (measured at sf1 uncapped: collect ~36 s vs ~16 s
-        # per distributed forward); single-epoch runs keep the
-        # distributed path
-        val_local = _collect_val_closure(val_sub, val_fcut, val)
-        t0 = _tr("val closure collect (local)", t0)
+            sub, fcut = _batch_closure(vsamp, vseeds, edge_types, feats)
+        arr_null = F.lit(None).cast("array<double>")
+        long_null = F.lit(None).cast("bigint")
+        parts = [sub[et].select(
+            F.lit("e").alias("kind"), F.lit("|".join(et)).alias("tag"),
+            "src", "dst", long_null.alias("node_id"), arr_null.alias("emb"))
+            for et in edge_types]
+        parts += [fcut[t].select(
+            F.lit("f").alias("kind"), F.lit(t).alias("tag"),
+            long_null.alias("src"), long_null.alias("dst"), "node_id", "emb")
+            for t in types]
+        u = reduce(DataFrame.unionByName, parts + [x_rows(val)])
+        return u, lambda params, b: _hetero_epoch(
+            sub, fcut, val, params, b, src_type, dst_type,
+            with_grads=False, quantize=quantize)
 
-    def flat(ps, bias):
-        out = []
-        for t in types:
-            out += [float(x) for x in ps["W0"][t].ravel()]
-        for t in types:
-            out += [float(x) for x in ps["Wself"][t].ravel()]
-        for et in edge_types:
-            Wl, Wr, a = ps["attn"][et]
-            out += [float(x) for x in Wl.ravel()]
-            out += [float(x) for x in Wr.ravel()]
-            out += [float(x) for x in np.asarray(a).ravel()]
-        return out + [float(bias)]
-
-    def unflat(v):
-        ps = {"W0": {}, "Wself": {}, "attn": {}}
-        i = 0
-        for t in types:
-            k = hidden * dims[t]
-            ps["W0"][t] = np.array(v[i:i + k]).reshape(hidden, dims[t])
-            i += k
-        for t in types:
-            k = hidden * hidden
-            ps["Wself"][t] = np.array(v[i:i + k]).reshape(hidden, hidden)
-            i += k
-        for et in edge_types:
-            k = hidden * hidden
-            Wl = np.array(v[i:i + k]).reshape(hidden, hidden); i += k
-            Wr = np.array(v[i:i + k]).reshape(hidden, hidden); i += k
-            a = np.array(v[i:i + hidden]); i += hidden
-            ps["attn"][et] = (Wl, Wr, a)
-        return ps, float(v[i])
-
-    opt = (None if optimizer == "sgd"
-           else AdamW(lr=lr, weight_decay=weight_decay))
-    result = TrainResult(weights=flat(params, b)[:-1], bias=b)
-    best = (params, b)
-    pending: dict = {}
-    try:
-        for epoch in range(epochs):
-            losses, ns = [], []
-            if pool is not None:
-                # fused sampling prefetch (VERDICT r8 item 7): batch
-                # membership and hash draws are parameter-independent,
-                # so nothing forces the store path's sampling into the
-                # sequential optimizer loop — this epoch's closures were
-                # drawn and collected on the background thread as part
-                # of a depth-wide GROUP of epochs (round 12;
-                # bit-identical edges, tests/test_edge_store.py).
-                # Consume the window, then kick off the next group.
-                if epoch in futs:
-                    pending.update(futs.pop(epoch).result())
-                    nxt = epoch + depth
-                    if nxt < epochs:
-                        futs[nxt] = pool.submit(
-                            _prefetch_group,
-                            tuple(range(nxt, min(nxt + depth, epochs))))
-                closures = pending.pop(epoch)
-                t0 = _tr(f"e{epoch} prefetch join", t0)
-            else:
-                closures = _epoch_closures_local(epoch)
-                t0 = _tr(f"e{epoch} local closure collect", t0)
-            for bi in range(steps):
-                if bi not in closures:
-                    continue
-                stats = hetero_epoch_local(
-                    *closures[bi], params, b, src_type, dst_type,
-                    quantize=quantize)
-                t0 = _tr(f"e{epoch} b{bi} local step", t0)
-                if stats["n"] == 0:
-                    continue
-                g = stats["grads"]
-                gparams = {"W0": g["W0"], "Wself": g["Wself"],
-                           "attn": {et: (gg[0], gg[1], np.asarray(gg[2]))
-                                    for et, gg in g["attn"].items()}}
-                gflat = flat(gparams, stats["gb"])
-                if opt is None:
-                    stepped = [w - lr * g
-                               for w, g in zip(flat(params, b), gflat)]
-                else:
-                    stepped = opt.step(flat(params, b), gflat)
-                params, b = unflat(stepped)
-                losses.append(stats["loss"] * stats["n"])
-                ns.append(stats["n"])
-            n_seen = sum(ns)
-            if val_local is not None:
-                vstats = hetero_epoch_local(
-                    *val_local, params, b, src_type, dst_type,
-                    with_grads=False, quantize=quantize)
-            else:
-                vstats = _hetero_epoch(val_sub, val_fcut, val, params, b,
-                                       src_type, dst_type,
-                                       with_grads=False, quantize=quantize)
-            t0 = _tr(f"e{epoch} val forward", t0)
-            result.history.append({
-                "epoch": epoch,
-                "train_loss": (sum(losses) / n_seen) if n_seen else 0.0,
-                "train_n": n_seen,
-                "val_loss": vstats["loss"], "val_acc": vstats["acc"],
-            })
-            if vstats["acc"] >= result.best_val_acc:
-                result.best_val_acc = vstats["acc"]
-                result.best_epoch = epoch
-                best = (params, b)
-    finally:
-        if pool is not None:
-            pool.shutdown(wait=True)
-        _scope.close()
-    params, b = best
-    result.weights, result.bias = flat(params, b)[:-1], b
-    train.unpersist(), val.unpersist()
-    return result
+    return _sampled_fit(
+        examples, prep, (_hetero_flat, _hetero_unflat), sample_store,
+        closure_frame, lambda rows: parse_closure_rows(rows, edge_types,
+                                                       types),
+        local_epoch, val_closure, seed_types=(src_type, dst_type),
+        n_edge_types=len(edge_types), store=edge_tables is not None,
+        epochs=epochs, batch_size=batch_size, max_batches=max_batches,
+        lr=lr, val_frac=val_frac, seed=seed, weight_decay=weight_decay,
+        optimizer=optimizer, split_draw=split_draw, batch_draw=batch_draw,
+        sample_draw=sample_draw)
 
 
 def train_gat_stack_sampled(edges: DataFrame, feats: DataFrame,
@@ -1789,12 +1661,14 @@ def train_gat_stack_sampled(edges: DataFrame, feats: DataFrame,
     """Sampled mini-batch training of the FULL-DEPTH homogeneous GATv2
     stack — per-layer fanouts through k message-passing layers, the
     complete `[num_neighbors] * num_layers` LinkNeighborLoader shape
-    (reference dataloader.py:24-51). Same regime as
-    ``train_hetero_gat_sampled``: content-addressed batch membership,
-    per-batch k-hop in-edge closure via ``sample_incoming`` (L2), the
-    ``_stack_epoch`` math over the restricted closure, one AdamW step
-    per batch, full-neighborhood validation over the val set's
-    once-computed k-hop dependency closure. Per-batch
+    (reference dataloader.py:24-51). Same regime and the same
+    ``_sampled_fit`` driver as ``train_hetero_gat_sampled``: per-batch
+    k-hop in-edge closure via ``sample_incoming`` (L2), the
+    ml/local_step.py::stack_epoch_local step (pinned against
+    ``_stack_epoch`` by tests/test_local_step.py) over the restricted
+    closure, one AdamW step per batch, full-neighborhood validation
+    over the val set's once-computed k-hop dependency closure with the
+    distributed ``_stack_epoch`` forward as the fallback. Per-batch
     shuffle volume is O(Π-bounded fanout tree × hidden), independent of
     |E|. Exactness anchor (tested): fanouts ≥ max in-degree at every
     hop + a single batch reproduces full-batch ``train_gat_stack``
@@ -1813,15 +1687,8 @@ def train_gat_stack_sampled(edges: DataFrame, feats: DataFrame,
     neighbor draws, every quantized forward, and the per-batch GD
     steps, putting the sampled training loop itself under the hash
     gate (q_gat_stack_train_sampled_q). md5 draws require non-null
-    src/dst (the null-dropped edge frames guarantee it).
-
-    Step engine: the same split as train_hetero_gat_sampled —
-    distributed sampling/membership/closure cuts, one chunked collect
-    per epoch (depth-2 prefetch on the store path), the sequential step
-    chain in ml/local_step.py::stack_epoch_local (pinned against
-    ``_stack_epoch`` by tests/test_local_step.py), and size-guarded
-    local validation with the distributed ``_stack_epoch`` forward as
-    the fallback."""
+    src/dst (the null-dropped edge frames guarantee it)."""
+    from rel_db_to_graph_spark.ml.local_step import parse_stack_closure_rows
     from rel_db_to_graph_spark.operators.sampling import (
         sample_incoming,
         sample_incoming_store_multi,
@@ -1831,305 +1698,80 @@ def train_gat_stack_sampled(edges: DataFrame, feats: DataFrame,
     if len(fanouts) != layers:
         raise ValueError(f"fanouts {fanouts} must have one entry per "
                          f"layer ({layers})")
-    t0 = time.time()
-    # one-time feature materialization — see train_hetero_gat_sampled
-    feats = feats.localCheckpoint(eager=True)
-    d_in = len(feats.select("emb").first()["emb"])
-    rng = np.random.default_rng(seed)
-    params = []
-    dim = d_in
-    for _ in range(layers):
-        params.append((rng.normal(0, 0.5, size=(hidden, dim)),
-                       rng.normal(0, 0.5, size=(hidden, dim)),
-                       rng.normal(0, 0.5, size=hidden)))
-        dim = hidden
-    b = 0.0
 
-    split = hash_split(examples, val_frac=val_frac, test_frac=0.0, seed=seed,
-                       draw=split_draw)
-    train = split.filter(F.col("split") == "train").drop("split").cache()
-    val = split.filter(F.col("split") == "val").drop("split").cache()
-    # both split sizes in ONE job (two .count()s were pure floor) —
-    # counted THROUGH the cached frames so the job also fills both
-    # caches before the background prefetch and the val-closure build
-    # race to read them
-    cnt = {r["_s"]: r["n"] for r in
-           (train.select(F.lit("train").alias("_s"))
-            .unionByName(val.select(F.lit("val").alias("_s")))
-            .groupBy("_s").agg(F.count("*").alias("n"))).collect()}
-    n_train = int(cnt.get("train", 0))
-    n_val = int(cnt.get("val", 0))
-    n_batches = max(1, -(-n_train // max(1, batch_size)))
-    steps = (n_batches if max_batches is None
-             else min(n_batches, max_batches))
-    t0 = _tr("split + counts", t0)
+    def prep():
+        nonlocal feats
+        # every batch closure joins feats: materialize them once per run
+        feats = feats.localCheckpoint(eager=True)
+        return _stack_init(len(feats.select("emb").first()["emb"]), hidden,
+                           layers, seed)
 
-    def _member(epoch: int) -> F.Column:
-        # content-addressed batch membership; 'md5' is the
-        # DuckDB-replayable variant (same first-8-hex-chars parse as
-        # operators/split.py's md5 draw)
-        if batch_draw == "md5":
-            dig = F.md5(F.concat_ws(
-                ":", F.col("src").cast("string"),
-                F.col("dst").cast("string"), F.lit(str(seed + epoch))))
-            return F.pmod(F.conv(F.substring(dig, 1, 8), 16, 10)
-                          .cast("long"), F.lit(n_batches))
-        return F.pmod(F.xxhash64("src", "dst", F.lit(seed + epoch)),
-                      F.lit(n_batches))
+    def sample_store(frontiers, seeds):
+        return sample_incoming_store_multi(
+            examples.sparkSession, edge_table,
+            {tag: fr.get("node", []) for tag, fr in frontiers.items()},
+            fanouts, seeds, draw=sample_draw)
 
-    def _prefetch_group(egroup: tuple) -> dict:
-        # round 12: one fused sampling + closure-fetch pipeline for a
-        # GROUP of epochs (the store probe scans once for the union
-        # frontier); draws bit-identical per the store-multi branch
-        # contract — see train_hetero_gat_sampled._prefetch_group
-        tp = time.time()
-        tagged = None
-        for e in egroup:
-            te = (train.withColumn("_bi", _member(e))
-                  .filter(F.col("_bi") < steps)
-                  .withColumn("_e", F.lit(int(e))))
-            tagged = te if tagged is None else tagged.unionByName(te)
-        su = (tagged.select("_e", "_bi", F.col("src").alias("node_id"))
-              .unionByName(tagged.select(
-                  "_e", "_bi", F.col("dst").alias("node_id")))
-              .distinct())
-        fr: dict = {(e, bi): [] for e in egroup for bi in range(steps)}
-        for r in su.collect():
-            fr[(int(r["_e"]), int(r["_bi"]))].append(r["node_id"])
-        tp = _tr(f"e{list(egroup)} prefetch: membership collect", tp)
-        pairs = [(e, bi) for e in egroup for bi in range(steps)]
-        bseeds = {(e, bi): seed + 7919 * e + 104729 * bi
-                  for (e, bi) in pairs}
-        tagof = {p: i for i, p in enumerate(pairs)}
-        samp: dict = {}
-        for lo in range(0, len(pairs), _FUSE_BATCHES):
-            chunk = pairs[lo:lo + _FUSE_BATCHES]
-            res = sample_incoming_store_multi(
-                examples.sparkSession, edge_table,
-                {tagof[p]: fr[p] for p in chunk}, fanouts,
-                {tagof[p]: bseeds[p] for p in chunk}, draw=sample_draw)
-            samp.update({p: res[tagof[p]] for p in chunk})
-        tp = _tr(f"e{list(egroup)} prefetch: store sampler", tp)
-        got = _closures_local(pairs, samp)
-        _tr(f"e{list(egroup)} prefetch: closure fetch", tp)
-        return {e: {bi: got[(e, bi)] for bi in range(steps)
-                    if (e, bi) in got}
-                for e in egroup}
+    def tagged_rows(sub, fcut, ex):
+        """(kind, src, dst, node_id, emb): edges, features, examples."""
+        arr_null = F.lit(None).cast("array<double>")
+        long_null = F.lit(None).cast("bigint")
+        return (sub.select(F.lit("e").alias("kind"), "src", "dst",
+                           long_null.alias("node_id"), arr_null.alias("emb"))
+                .unionByName(fcut.select(
+                    F.lit("f").alias("kind"), long_null.alias("src"),
+                    long_null.alias("dst"), "node_id", "emb"))
+                .unionByName(ex.select(
+                    F.lit("x").alias("kind"), "src", "dst",
+                    F.col("label").cast("bigint").alias("node_id"),
+                    arr_null.alias("emb"))))
 
-    def _batch_closure_frame(bi: int, epoch: int, samp) -> DataFrame:
-        """One batch's homogeneous closure as the tagged (kind, src,
-        dst, node_id, emb) union, so the local engine can fetch a whole
-        epoch in one job (kind='x' rows carry the examples, label
-        riding in node_id). ``samp`` is the store sampler's draw, or
-        None to sample by direct scan."""
-        batch = train.filter(_member(epoch) == bi)
+    def endpoints(seeds, samp):
+        return (seeds
+                .unionAll(samp.select(F.col("src").alias("node_id")))
+                .unionAll(samp.select(F.col("dst").alias("node_id")))
+                ).distinct()
+
+    def closure_frame(batch, samp, bseed):
         seeds = (batch.select(F.col("src").alias("node_id"))
                  .unionAll(batch.select(F.col("dst").alias("node_id")))
                  .distinct())
         if samp is None:
-            samp = sample_incoming(
-                edges, seeds, fanouts,
-                seed=seed + 7919 * epoch + 104729 * bi,
-                draw=sample_draw).localCheckpoint(eager=False)
-        ids = (seeds
-               .unionAll(samp.select(F.col("src").alias("node_id")))
-               .unionAll(samp.select(F.col("dst").alias("node_id")))
-               ).distinct()
-        return (samp.select("src", "dst").distinct()
-                .select(F.lit("e").alias("kind"), "src", "dst",
-                        F.lit(None).cast("bigint").alias("node_id"),
-                        F.lit(None).cast("array<double>").alias("emb"))
-                .unionByName(
-                    # batch-bounded id set -> force the broadcast join
-                    # (see _closure_union's broadcast_ids note)
-                    feats.join(F.broadcast(ids), "node_id")
-                    .select(F.lit("f").alias("kind"),
-                            F.lit(None).cast("bigint").alias("src"),
-                            F.lit(None).cast("bigint").alias("dst"),
-                            "node_id", "emb"))
-                .unionByName(batch.select(
-                    F.lit("x").alias("kind"), "src", "dst",
-                    F.col("label").cast("bigint").alias("node_id"),
-                    F.lit(None).cast("array<double>").alias("emb"))))
+            samp = sample_incoming(edges, seeds, fanouts, seed=bseed,
+                                   draw=sample_draw
+                                   ).localCheckpoint(eager=False)
+        # batch-bounded id set -> force the broadcast join (see
+        # _closure_union's broadcast_ids note)
+        return tagged_rows(
+            samp.select("src", "dst").distinct(),
+            feats.join(F.broadcast(endpoints(seeds, samp)), "node_id"),
+            batch)
 
-    def _closures_local(pairs: list, samp_by_pair) -> dict:
-        """Fetch every (epoch, batch) pair's bounded closure in chunked
-        collect jobs, across epochs — see train_hetero_gat_sampled."""
-        from rel_db_to_graph_spark.ml.local_step import (
-            parse_stack_closure_rows,
-        )
-        out: dict = {}
-        for lo in range(0, len(pairs), _FUSE_BATCHES):
-            u = None
-            for pi, (ep, bi) in enumerate(pairs[lo:lo + _FUSE_BATCHES],
-                                          start=lo):
-                samp = (None if samp_by_pair is None
-                        else samp_by_pair[(ep, bi)])
-                part = _batch_closure_frame(bi, ep, samp
-                                            ).withColumn("_pi", F.lit(pi))
-                u = part if u is None else u.unionByName(part)
-            rows_by_pi: dict = {}
-            for r in u.collect():
-                rows_by_pi.setdefault(int(r["_pi"]), []).append(r)
-            for pi, rows in rows_by_pi.items():
-                out[pairs[pi]] = parse_stack_closure_rows(rows)
-        return out
+    def local_epoch(closure, params, b, with_grads):
+        return stack_epoch_local(*closure, params, b, with_grads=with_grads,
+                                 quantize=quantize)
 
-    def _epoch_closures_local(epoch: int) -> dict:
-        """One epoch's closures, sampled by direct scan (the no-store
-        path) — thin wrapper over the pair-keyed fetch."""
-        got = _closures_local([(epoch, bi) for bi in range(steps)], None)
-        return {bi: v for (_, bi), v in got.items()}
-
-    pool, futs = None, {}
-    _scope = ExitStack()
-    if edge_table is not None:
-        # epoch 0's sampling overlaps the val-closure build below;
-        # epoch e+1's sampling overlaps epoch e's gradient steps; the
-        # planner override is run-scoped — see train_hetero_gat_sampled
-        from rel_db_to_graph_spark.operators.sampling import (
-            _forced_bucketed_scan,
-        )
-        _scope.enter_context(
-            _forced_bucketed_scan(examples.sparkSession))
-        # depth 2, one FUSED group pipeline in flight (round 12) — see
-        # train_hetero_gat_sampled
-        depth = min(2, epochs)
-        pool = ThreadPoolExecutor(max_workers=1)
-        futs = {0: pool.submit(_prefetch_group, tuple(range(depth)))}
-
-    # One-time val dependency closure — k hops of FULL in-neighborhoods
-    # ([-1] per layer) of the val endpoints; per-epoch validation then
-    # forwards O(|closure|) instead of O(|E|). Same rationale and
-    # exactness argument as train_hetero_gat_sampled above.
-    val_sub, val_fcut = edges, feats
-    if n_val:
+    def val_closure(val):
+        # k hops of FULL in-neighborhoods ([-1] per layer) of the val
+        # endpoints: the edges and features the val forward reads
         vseeds = (val.select(F.col("src").alias("node_id"))
                   .unionAll(val.select(F.col("dst").alias("node_id")))
                   .distinct())
         vsamp = sample_incoming(edges, vseeds, [-1] * layers, seed=seed
                                 ).localCheckpoint(eager=True)
-        val_sub = (vsamp.select("src", "dst").distinct()
-                   .localCheckpoint(eager=True))
-        vids = (vseeds
-                .unionAll(vsamp.select(F.col("src").alias("node_id")))
-                .unionAll(vsamp.select(F.col("dst").alias("node_id")))
-                ).distinct()
-        val_fcut = feats.join(vids, "node_id").localCheckpoint(eager=True)
-    val_local = None
-    if n_val and epochs >= 2:
-        # fetch the parameter-independent val closure ONCE (size-
-        # guarded) so every epoch's val forward is local — see
-        # train_hetero_gat_sampled._collect_val_closure. Same
-        # epochs >= 2 amortization guard as the hetero trainer: the
-        # collect pays off only once it replaces at least two
-        # DataFrame val forwards (measured ~36 s collect vs ~16 s per
-        # distributed forward at sf1 — ADVICE r11)
-        from rel_db_to_graph_spark.ml.local_step import (
-            parse_stack_closure_rows,
-        )
-        arr_null = F.lit(None).cast("array<double>")
-        long_null = F.lit(None).cast("bigint")
-        u = (val_sub.select(F.lit("e").alias("kind"), "src", "dst",
-                            long_null.alias("node_id"),
-                            arr_null.alias("emb"))
-             .unionByName(val_fcut.select(
-                 F.lit("f").alias("kind"), long_null.alias("src"),
-                 long_null.alias("dst"), "node_id", "emb"))
-             .unionByName(val.select(
-                 F.lit("x").alias("kind"), "src", "dst",
-                 F.col("label").cast("bigint").alias("node_id"),
-                 arr_null.alias("emb"))))
-        vrows = u.limit(5_000_001).collect()
-        if len(vrows) <= 5_000_000:
-            val_local = parse_stack_closure_rows(vrows)
-        t0 = _tr("val closure collect (local)", t0)
+        sub = (vsamp.select("src", "dst").distinct()
+               .localCheckpoint(eager=True))
+        fcut = (feats.join(endpoints(vseeds, vsamp), "node_id")
+                .localCheckpoint(eager=True))
+        return tagged_rows(sub, fcut, val), lambda params, b: _stack_epoch(
+            sub, fcut, val, params, b, with_grads=False, quantize=quantize)
 
-    def flat(ps, bias):
-        out = []
-        for (Wl, Wr, a) in ps:
-            out += [float(x) for x in Wl.ravel()]
-            out += [float(x) for x in Wr.ravel()]
-            out += [float(x) for x in np.asarray(a).ravel()]
-        return out + [float(bias)]
-
-    def unflat(v):
-        out, i, dim = [], 0, d_in
-        for _ in range(layers):
-            nW = hidden * dim
-            Wl = np.array(v[i:i + nW]).reshape(hidden, dim); i += nW
-            Wr = np.array(v[i:i + nW]).reshape(hidden, dim); i += nW
-            a = np.array(v[i:i + hidden]); i += hidden
-            out.append((Wl, Wr, a))
-            dim = hidden
-        return out, float(v[i])
-
-    opt = (None if optimizer == "sgd"
-           else AdamW(lr=lr, weight_decay=weight_decay))
-    result = TrainResult(weights=flat(params, b)[:-1], bias=b)
-    best = (params, b)
-    pending: dict = {}
-    try:
-        for epoch in range(epochs):
-            losses, ns = [], []
-            if pool is not None:
-                # this epoch's closures were drawn and collected on the
-                # background thread as part of a depth-wide GROUP of
-                # epochs (round 12); consume the window, then kick off
-                # the next group — see train_hetero_gat_sampled
-                if epoch in futs:
-                    pending.update(futs.pop(epoch).result())
-                    nxt = epoch + depth
-                    if nxt < epochs:
-                        futs[nxt] = pool.submit(
-                            _prefetch_group,
-                            tuple(range(nxt, min(nxt + depth, epochs))))
-                closures = pending.pop(epoch)
-                t0 = _tr(f"e{epoch} prefetch join", t0)
-            else:
-                closures = _epoch_closures_local(epoch)
-                t0 = _tr(f"e{epoch} local closure collect", t0)
-            for bi in range(steps):
-                if bi not in closures:
-                    continue
-                stats = stack_epoch_local(*closures[bi], params, b,
-                                          quantize=quantize)
-                if stats["n"] == 0:
-                    continue
-                gflat = flat([(g[0], g[1], np.array(g[2]))
-                              for g in stats["grads"]], stats["gb"])
-                if opt is None:
-                    stepped = [w - lr * g
-                               for w, g in zip(flat(params, b), gflat)]
-                else:
-                    stepped = opt.step(flat(params, b), gflat)
-                params, b = unflat(stepped)
-                losses.append(stats["loss"] * stats["n"])
-                ns.append(stats["n"])
-            n_seen = sum(ns)
-            if val_local is not None:
-                vstats = stack_epoch_local(*val_local, params, b,
-                                           with_grads=False,
-                                           quantize=quantize)
-            else:
-                vstats = _stack_epoch(val_sub, val_fcut, val, params, b,
-                                      with_grads=False, quantize=quantize)
-            result.history.append({
-                "epoch": epoch,
-                "train_loss": (sum(losses) / n_seen) if n_seen else 0.0,
-                "train_n": n_seen,
-                "val_loss": vstats["loss"], "val_acc": vstats["acc"],
-            })
-            if vstats["acc"] >= result.best_val_acc:
-                result.best_val_acc = vstats["acc"]
-                result.best_epoch = epoch
-                best = ([(Wl.copy(), Wr.copy(), a.copy())
-                         for (Wl, Wr, a) in params], b)
-    finally:
-        if pool is not None:
-            pool.shutdown(wait=True)
-        _scope.close()
-    params, b = best
-    result.weights, result.bias = flat(params, b)[:-1], b
-    train.unpersist(), val.unpersist()
-    return result
+    return _sampled_fit(
+        examples, prep, (_stack_flat, _stack_unflat), sample_store,
+        closure_frame, parse_stack_closure_rows, local_epoch, val_closure,
+        seed_types=("node", "node"), n_edge_types=1,
+        store=edge_table is not None, epochs=epochs, batch_size=batch_size,
+        max_batches=max_batches, lr=lr, val_frac=val_frac, seed=seed,
+        weight_decay=weight_decay, optimizer=optimizer,
+        split_draw=split_draw, batch_draw=batch_draw,
+        sample_draw=sample_draw)

@@ -17,17 +17,25 @@ model.py:118). Metrics per epoch (L8). Best-epoch weight checkpointing
 on val accuracy (L11, train.py:63-68). Full-batch gradient descent:
 deterministic, no per-row randomness — reproducibility is a property,
 not a seed-hope (the reference pins seeds everywhere, setup.py:7-21).
+
+``fit`` is the one fit loop every trainer runs on (this module's two
+and the five GNN trainers in ml/gat_train.py): hash split, optimizer,
+then per epoch the model's train hook, val stats, a history row and
+the best-val checkpoint — the reference's single Lightning loop
+(train.py:63-80). A trainer supplies only its epoch math.
 """
 
 from __future__ import annotations
 
+from contextlib import ExitStack
 from dataclasses import dataclass, field
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rel_db_to_graph_spark.functions.vector import dot, sigmoid
-from rel_db_to_graph_spark.operators.split import hash_split
+from rel_db_to_graph_spark.operators.split import check_draw, hash_split
 
 
 @dataclass
@@ -80,6 +88,96 @@ def _make_stepper(optimizer: str, lr: float, weight_decay: float):
         opt = AdamW(lr=lr, weight_decay=weight_decay)
         return opt.step
     raise ValueError(f"unknown optimizer {optimizer!r}")
+
+
+def _flat(arrays, bias: float) -> list[float]:
+    """The flat parameter vector the steppers update: every array
+    raveled row-major in the given order, then the bias."""
+    return [float(x) for arr in arrays for x in np.ravel(arr)] + [float(bias)]
+
+
+def _unflat(v: list[float], shapes) -> tuple[list[np.ndarray], float]:
+    """Inverse of ``_flat`` for arrays of the given shapes."""
+    out, i = [], 0
+    for shape in shapes:
+        k = int(np.prod(shape))
+        out.append(np.array(v[i:i + k]).reshape(shape))
+        i += k
+    return out, float(v[i])
+
+
+def _cached_split(examples: DataFrame, val_frac: float, seed: int,
+                  draw: str):
+    """(train, val, n_train, n_val): the hash split into cached frames,
+    both sizes counted in ONE job that reads THROUGH the caches, so it
+    also fills them before any later reader (a sampled trainer's
+    background prefetch and its val-closure build) races to."""
+    split = hash_split(examples, val_frac=val_frac, test_frac=0.0,
+                       seed=seed, draw=draw)
+    train = split.filter(F.col("split") == "train").drop("split").cache()
+    val = split.filter(F.col("split") == "val").drop("split").cache()
+    cnt = {r["_s"]: r["n"] for r in
+           (train.select(F.lit("train").alias("_s"))
+            .unionByName(val.select(F.lit("val").alias("_s")))
+            .groupBy("_s").agg(F.count("*").alias("n"))).collect()}
+    return train, val, int(cnt.get("train", 0)), int(cnt.get("val", 0))
+
+
+def fit(examples: DataFrame, prepare, start, epochs: int, optimizer: str,
+        lr: float, weight_decay: float, val_frac: float, seed: int,
+        split_draw: str = "xxhash64") -> TrainResult:
+    """The fit loop (L9-L11, train.py:63-80). The optimizer name and the
+    split draw are checked before any Spark job. ``prepare()`` then runs
+    the model's one-time setup (feature checkpoints, input widths,
+    seeded parameters) BEFORE the split, and its result is handed to
+    ``start(state, train, val, n_train, n_val, scope)`` after the hash
+    split into cached train/val frames. The order is kept: a
+    cache-filling job moved across the split changes later shuffle
+    layouts and so the last bits of the float sums. ``start`` returns
+    ``(theta, train_epoch, val_stats)``: the initial flat parameter
+    vector (bias last), ``train_epoch(epoch, theta, step) -> (theta,
+    row)`` stepping with the sgd/adamw stepper, and ``val_stats(theta)
+    -> {loss, acc, ...}``. Each epoch appends ``{epoch, **row,
+    val_loss, val_acc}`` to the history and keeps the best-val-accuracy
+    parameters (``>=``, so ties go to the later epoch —
+    monitor=val_accuracy, mode=max, save_top_k=1). ``scope`` is an
+    ExitStack closed when the loop ends, for a trainer's run-scoped
+    resources. ``theta`` is never mutated in place."""
+    step = _make_stepper(optimizer, lr, weight_decay)
+    check_draw(split_draw)
+    state = prepare()
+    train, val, n_train, n_val = _cached_split(examples, val_frac, seed,
+                                               split_draw)
+    result = TrainResult(weights=[], bias=0.0)
+    with ExitStack() as scope:
+        theta, train_epoch, val_stats = start(state, train, val, n_train,
+                                              n_val, scope)
+        best = theta
+        for epoch in range(epochs):
+            theta, row = train_epoch(epoch, theta, step)
+            vstats = val_stats(theta)
+            result.history.append({"epoch": epoch, **row,
+                                   "val_loss": vstats["loss"],
+                                   "val_acc": vstats["acc"]})
+            if vstats["acc"] >= result.best_val_acc:
+                result.best_val_acc = vstats["acc"]
+                result.best_epoch = epoch
+                best = theta
+    result.weights, result.bias = best[:-1], best[-1]
+    train.unpersist(), val.unpersist()
+    return result
+
+
+def _full_batch(theta: list[float], stats, grads, train: DataFrame,
+                val: DataFrame):
+    """``fit`` hooks for one full-batch step per epoch: ``stats(frame,
+    theta, with_grads)`` is the model's epoch pass and ``grads(stats)``
+    its flat gradient, in ``theta``'s order."""
+    def train_epoch(epoch, theta, step):
+        s = stats(train, theta, True)
+        return (step(theta, grads(s)),
+                {"train_loss": s["loss"], "train_acc": s["acc"]})
+    return theta, train_epoch, lambda theta: stats(val, theta, False)
 
 
 def _epoch_stats(df: DataFrame, w: list[float], b: float) -> dict:
@@ -138,48 +236,33 @@ def train_edge_scorer(examples: DataFrame, dim: int, epochs: int = 20,
     content-addressed — hash(src, dst, epoch) mod n_batches — so the
     per-epoch "shuffle" is deterministic yet differs across epochs, and
     each batch is a FILTER over the cached frame (no repartition per
-    batch). One gradient job per batch per epoch.
+    batch). One gradient job per batch per epoch. The loop is ``fit``.
     """
-    split = hash_split(examples, val_frac=val_frac, test_frac=0.0, seed=seed,
-                       draw=split_draw)
-    train = split.filter(F.col("split") == "train").drop("split").cache()
-    val = split.filter(F.col("split") == "val").drop("split").cache()
-    train.count(), val.count()
+    def stats(frame, theta, with_grads=True):
+        return _epoch_stats(frame, theta[:-1], theta[-1])
 
-    w, b = [0.0] * dim, 0.0
-    step = _make_stepper(optimizer, lr, weight_decay)
-    result = TrainResult(weights=w, bias=b)
-    best = (w, b)
-    for epoch in range(epochs):
-        if n_batches > 1:
+    def grads(s):
+        return s["gw"] + [s["gb"]]
+
+    def start(state, train, val, *_):
+        hooks = _full_batch([0.0] * (dim + 1), stats, grads, train, val)
+        if n_batches <= 1:
+            return hooks
+
+        def train_epoch(epoch, theta, step):
             for bi in range(n_batches):
                 batch = train.filter(
                     F.pmod(F.xxhash64("src", "dst", F.lit(seed + epoch)),
                            F.lit(n_batches)) == bi)
-                bstats = _epoch_stats(batch, w, b)
-                if bstats["n"] == 0:
-                    continue
-                *w, b = step(w + [b], bstats["gw"] + [bstats["gb"]])
-            stats = _epoch_stats(train, w, b)
-        else:
-            stats = _epoch_stats(train, w, b)
-            *w, b = step(w + [b], stats["gw"] + [stats["gb"]])
-        vstats = _epoch_stats(val, w, b)
-        result.history.append({
-            "epoch": epoch, "train_loss": stats["loss"],
-            "train_acc": stats["acc"], "val_loss": vstats["loss"],
-            "val_acc": vstats["acc"],
-        })
-        # L11: keep the best-val-accuracy parameters (monitor=val_accuracy,
-        # mode=max, save_top_k=1 — train.py:63-68)
-        if vstats["acc"] >= result.best_val_acc:
-            result.best_val_acc = vstats["acc"]
-            result.best_epoch = epoch
-            best = (list(w), b)
+                bstats = stats(batch, theta)
+                if bstats["n"]:
+                    theta = step(theta, grads(bstats))
+            s = stats(train, theta)
+            return theta, {"train_loss": s["loss"], "train_acc": s["acc"]}
+        return hooks[0], train_epoch, hooks[2]
 
-    result.weights, result.bias = best
-    train.unpersist(), val.unpersist()
-    return result
+    return fit(examples, lambda: None, start, epochs, optimizer, lr,
+               weight_decay, val_frac, seed, split_draw)
 
 
 def _proj_epoch_stats(df: DataFrame, Ws: list[list[float]],
@@ -256,48 +339,23 @@ def train_link_projection(examples: DataFrame, hidden: int,
 
     ``examples``: (src, dst, e_src array<double>, e_dst array<double>,
     label int). Identity-initialized projections so epoch 0 scores are
-    the raw dot-product decoder. Best-val-accuracy checkpointing (L11).
-    ``TrainResult.weights`` is [Ws flattened, Wd flattened].
+    the raw dot-product decoder. Best-val-accuracy checkpointing (L11)
+    by ``fit``. ``TrainResult.weights`` is [Ws flattened, Wd flattened].
     """
-    split = hash_split(examples, val_frac=val_frac, test_frac=0.0, seed=seed)
-    train = split.filter(F.col("split") == "train").drop("split").cache()
-    val = split.filter(F.col("split") == "val").drop("split").cache()
-    train.count(), val.count()
+    shapes = [(hidden, hidden)] * 2
 
-    eye = [[1.0 if i == j else 0.0 for j in range(hidden)]
-           for i in range(hidden)]
-    Ws, Wd, b = [r[:] for r in eye], [r[:] for r in eye], 0.0
-    opt = AdamW(lr=lr, weight_decay=weight_decay)
-    h2 = hidden * hidden
+    def stats(frame, theta, with_grads=True):
+        (Ws, Wd), b = _unflat(theta, shapes)
+        return _proj_epoch_stats(frame, Ws, Wd, b)
 
-    def flatten(ws, wd, bias):
-        return ([x for row in ws for x in row]
-                + [x for row in wd for x in row] + [bias])
+    def start(state, train, val, *_):
+        eye = np.eye(hidden)
+        return _full_batch(_flat([eye, eye], 0.0), stats,
+                          lambda s: _flat([s["gWs"], s["gWd"]], s["gb"]),
+                          train, val)
 
-    result = TrainResult(weights=flatten(Ws, Wd, b)[:-1], bias=b)
-    best = (Ws, Wd, b)
-    for epoch in range(epochs):
-        stats = _proj_epoch_stats(train, Ws, Wd, b)
-        gflat = flatten(stats["gWs"], stats["gWd"], stats["gb"])
-        new = opt.step(flatten(Ws, Wd, b), gflat)
-        Ws = [new[i * hidden:(i + 1) * hidden] for i in range(hidden)]
-        Wd = [new[h2 + i * hidden:h2 + (i + 1) * hidden]
-              for i in range(hidden)]
-        b = new[2 * h2]
-        vstats = _proj_epoch_stats(val, Ws, Wd, b)
-        result.history.append({
-            "epoch": epoch, "train_loss": stats["loss"],
-            "train_acc": stats["acc"], "val_loss": vstats["loss"],
-            "val_acc": vstats["acc"],
-        })
-        if vstats["acc"] >= result.best_val_acc:
-            result.best_val_acc = vstats["acc"]
-            result.best_epoch = epoch
-            best = ([r[:] for r in Ws], [r[:] for r in Wd], b)
-    Ws, Wd, b = best
-    result.weights, result.bias = flatten(Ws, Wd, b)[:-1], b
-    train.unpersist(), val.unpersist()
-    return result
+    return fit(examples, lambda: None, start, epochs, "adamw", lr,
+               weight_decay, val_frac, seed)
 
 
 def edge_examples(edges_labeled: DataFrame, node_features: DataFrame,

@@ -21,6 +21,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: the content-addressed hash draws every split, batch-membership and
+#: neighbor-sampling expression implements
+DRAWS = ("xxhash64", "md5")
+
+
+def check_draw(draw: str) -> None:
+    """Raise ``ValueError`` for a draw name outside ``DRAWS`` — before
+    any Column is built, so a typo never runs as the default hash."""
+    if draw not in DRAWS:
+        raise ValueError(f"unknown draw {draw!r}; expected one of {DRAWS}")
+
 
 def hash_split(edges: DataFrame, val_frac: float = 0.15,
                test_frac: float = 0.0, seed: int = 42,
@@ -39,6 +50,7 @@ def hash_split(edges: DataFrame, val_frac: float = 0.15,
     Spark-side while the twin's '||' propagates them); the registry
     queries feed null-dropped edge frames, and the xxhash64 default
     has no such precondition."""
+    check_draw(draw)
     if draw == "md5":
         digest = F.md5(F.concat_ws(
             ":", F.col(src).cast("string"), F.col(dst).cast("string"),

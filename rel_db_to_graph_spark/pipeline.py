@@ -53,17 +53,20 @@ def train(graph: dict, edge_type: tuple, epochs: int = 5,
     dst_ids = graph["nodes"][dst_t].select("node_id")
     labeled = negative_sample(train_edges, dst_ids, ratio=1, seed=seed)
 
+    def cols(t: str) -> list[str]:
+        return [c for c in graph["nodes"][t].columns
+                if c not in ("node_id", "pk")]
+
     def side(t: str, role: str) -> DataFrame:
         nf = graph["nodes"][t]
-        cols = [c for c in nf.columns if c not in ("node_id", "pk")]
         # max-abs scale each feature to [-1, 1]: unscaled magnitudes
         # (o_totalprice ~1e5) blow up full-batch gradient steps
         maxes = nf.agg(*[F.max(F.abs(F.col(c).cast("double"))).alias(c)
-                         for c in cols]).collect()[0]
+                         for c in cols(t)]).collect()[0]
         return nf.select(
             F.col("node_id").alias(role),
             F.array(*[F.col(c).cast("double") / float(maxes[c] or 1.0)
-                      for c in cols]).alias(f"_{role}_arr"))
+                      for c in cols(t)]).alias(f"_{role}_arr"))
 
     ex = (labeled.join(side(src_t, "src"), "src")
           .join(side(dst_t, "dst"), "dst"))
@@ -71,7 +74,9 @@ def train(graph: dict, edge_type: tuple, epochs: int = 5,
     # types have different lengths, and zip_with pads with nulls
     feats = F.concat(F.col("_src_arr"), F.col("_dst_arr"))
     examples = ex.select("src", "dst", "label", feats.alias("features"))
-    dim = len(examples.select("features").first()["features"])
+    # the vector width is known from the column lists: reading it off a
+    # row would run the negatives-and-joins lineage an extra time
+    dim = len(cols(src_t)) + len(cols(dst_t))
     return train_edge_scorer(examples, dim=dim, epochs=epochs, seed=seed)
 
 

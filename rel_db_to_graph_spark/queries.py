@@ -529,18 +529,8 @@ def q_hetero_link_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     AdamW over orders→customer positives + binary negatives. Returns
     the epoch history; train BCE must decrease."""
     from rel_db_to_graph_spark.ml.gat_train import train_hetero_gat
-    from rel_db_to_graph_spark.ml.hetero import node_features_normalized
 
-    g = build_graph(spark, sf_dir)
-    pos = g["edges"][("orders", "hasCust", "customer")]
-    labeled = negative_sample(pos, g["nodes"]["customer"].select("node_id"),
-                              ratio=1, seed=42)
-    feats_raw = node_features_normalized(
-        {t: g["nodes"][t] for t in ("orders", "customer")})
-    feats = {t: feats_raw[t][0] for t in feats_raw}
-    sub_edges = {et: df.select("src", "dst")
-                 for et, df in g["edges"].items()
-                 if et[0] in feats and et[2] in feats}
+    sub_edges, feats, labeled = _hetero_link_fixture(spark, sf_dir)
     res = train_hetero_gat(sub_edges, feats, labeled,
                            src_type="orders", dst_type="customer",
                            hidden=2, epochs=3, lr=0.05, seed=42)
@@ -590,18 +580,8 @@ def q_hetero_link_train_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     answer to the ~6 s/step driver floor). The hash-gated md5/quantized
     sibling below runs the same engine."""
     from rel_db_to_graph_spark.ml.gat_train import train_hetero_gat_sampled
-    from rel_db_to_graph_spark.ml.hetero import node_features_normalized
 
-    g = build_graph(spark, sf_dir)
-    pos = g["edges"][("orders", "hasCust", "customer")]
-    labeled = negative_sample(pos, g["nodes"]["customer"].select("node_id"),
-                              ratio=1, seed=42)
-    feats_raw = node_features_normalized(
-        {t: g["nodes"][t] for t in ("orders", "customer")})
-    feats = {t: feats_raw[t][0] for t in feats_raw}
-    sub_edges = {et: df.select("src", "dst")
-                 for et, df in g["edges"].items()
-                 if et[0] in feats and et[2] in feats}
+    sub_edges, feats, labeled = _hetero_link_fixture(spark, sf_dir)
     # dst-bucketed store (VERDICT r5 item 3): one write per snapshot,
     # then every per-batch probe is an In(dst, frontier) bucket-pruned
     # scan instead of a full |E| pass — the sampled edges are
@@ -650,18 +630,8 @@ def q_hetero_link_train_sampled_q(spark: SparkSession,
     the engine production runs reproduces the exact integer history
     the independent replay derives."""
     from rel_db_to_graph_spark.ml.gat_train import train_hetero_gat_sampled
-    from rel_db_to_graph_spark.ml.hetero import node_features_normalized
 
-    g = build_graph(spark, sf_dir)
-    pos = g["edges"][("orders", "hasCust", "customer")]
-    labeled = negative_sample(pos, g["nodes"]["customer"].select("node_id"),
-                              ratio=1, seed=42, draw="md5")
-    feats_raw = node_features_normalized(
-        {t: g["nodes"][t] for t in ("orders", "customer")})
-    feats = {t: feats_raw[t][0] for t in feats_raw}
-    sub_edges = {et: df.select("src", "dst")
-                 for et, df in g["edges"].items()
-                 if et[0] in feats and et[2] in feats}
+    sub_edges, feats, labeled = _hetero_link_fixture(spark, sf_dir, "md5")
     res = train_hetero_gat_sampled(
         sub_edges, feats, labeled, src_type="orders", dst_type="customer",
         hidden=2, fanouts=[1], batch_size=512, max_batches=2,
@@ -671,6 +641,28 @@ def q_hetero_link_train_sampled_q(spark: SparkSession,
         [(h["epoch"], int(h["train_n"]), float(h["val_acc"]))
          for h in res.history],
         "epoch int, train_n long, val_acc double")
+
+
+def _hetero_link_fixture(spark: SparkSession, sf_dir: str,
+                         draw: str = "xxhash64"):
+    """Shared fixture of the three hetero trainer queries: (sub_edges,
+    feats, labeled) — the orders↔customer message graph (every built
+    edge type between the two node types: hasCust, REVERSE_hasCust and
+    both SELF_LOOPs), max-abs normalized node features, and the
+    orders→customer positives with ``draw`` binary negatives."""
+    from rel_db_to_graph_spark.ml.hetero import node_features_normalized
+
+    g = build_graph(spark, sf_dir)
+    pos = g["edges"][("orders", "hasCust", "customer")]
+    labeled = negative_sample(pos, g["nodes"]["customer"].select("node_id"),
+                              ratio=1, seed=42, draw=draw)
+    feats_raw = node_features_normalized(
+        {t: g["nodes"][t] for t in ("orders", "customer")})
+    feats = {t: feats_raw[t][0] for t in feats_raw}
+    sub_edges = {et: df.select("src", "dst")
+                 for et, df in g["edges"].items()
+                 if et[0] in feats and et[2] in feats}
+    return sub_edges, feats, labeled
 
 
 def _ring_stride_fixture(spark: SparkSession, sf_dir: str):
