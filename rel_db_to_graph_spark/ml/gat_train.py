@@ -39,9 +39,11 @@ Hand-derived backward, each step one aggregation (n = #examples):
 Scale shape: shuffles touch (node, dim) or (dst, scalar) pairs only,
 all partially aggregated map-side; no feature matrix is ever collected;
 per-epoch driver traffic is the gradient cells (h·d values). The
-attention softmax costs the same two scalar shuffles as the frozen
-forward (ml/gat.py). Cross-checked against a from-scratch numpy
-forward/backward twin in tests/test_gat_train.py.
+forward is ml/gat.py::attention_layer, the same DataFrame layer the
+frozen forwards run (one window shuffle for the softmax, one groupBy
+for the messages); its backward is ``_backward_layer_frames``.
+Cross-checked against a from-scratch numpy forward/backward twin in
+tests/test_gat_train.py.
 
 Every trainer here runs on ml/train.py::fit, the one fit loop (split,
 optimizer, per-epoch train hook, val stats, history row, best-val
@@ -68,6 +70,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from rel_db_to_graph_spark.functions.vector import dot, sigmoid
+from rel_db_to_graph_spark.ml.gat import _LEAKY, _arr_lit, attention_layer
 from rel_db_to_graph_spark.ml.gnn import linear_layer
 from rel_db_to_graph_spark.ml.local_step import (
     hetero_epoch_local,
@@ -81,8 +84,6 @@ from rel_db_to_graph_spark.ml.train import (
     fit,
 )
 from rel_db_to_graph_spark.operators.split import check_draw
-
-_LEAKY = 0.2
 
 #: phase tracer for the sampled-trainer scale audits (SPARK_GRAFT_TRACE=1):
 #: prints wall-clock per trainer phase so the per-step scheduling floor
@@ -119,242 +120,11 @@ def _phase_clock():
     return mark
 
 
-def _arr_lit(vec) -> F.Column:
-    return F.array(*[F.lit(float(v)) for v in vec])
-
-
-def _collect_vec(rows, size: int, val: str = "v") -> list[float]:
-    by_pos = {r.pos: r[val] for r in rows}
-    return [float(by_pos.get(i, 0.0)) for i in range(size)]
-
-
 def _collect_mat(rows, n_rows: int, n_cols: int) -> np.ndarray:
     out = np.zeros((n_rows, n_cols))
     for r in rows:
         out[r.r, r.c] = r.v
     return out
-
-
-def _gat_epoch(edges: DataFrame, src_feats: DataFrame, dst_feats: DataFrame,
-               examples: DataFrame, Wl: np.ndarray, Wr: np.ndarray,
-               a: np.ndarray, b: float,
-               with_grads: bool = True) -> dict:
-    """One full-batch forward(+backward) pass; returns loss/acc/n and —
-    when ``with_grads`` — the parameter gradients (already /n)."""
-    h = Wl.shape[0]
-    a_lit = _arr_lit(a)
-
-    sp = src_feats.select(
-        F.col("node_id").alias("src"), F.col("emb").alias("_xs"),
-        linear_layer(F.col("emb"), Wl, activation=None).alias("_s"))
-    tp = dst_feats.select(
-        F.col("node_id").alias("dst"), F.col("emb").alias("_xd"),
-        linear_layer(F.col("emb"), Wr, activation=None).alias("_t"))
-
-    ef = (edges.join(sp.drop("_xs"), "src").join(tp.drop("_xd"), "dst")
-          .withColumn("_q", F.zip_with("_s", "_t", lambda s, t: s + t))
-          .withColumn("_r", F.transform(
-              "_q", lambda x: F.when(x > 0, x).otherwise(x * F.lit(_LEAKY))))
-          .withColumn("_e", dot(F.col("_r"), a_lit)))
-
-    mx = ef.groupBy("dst").agg(F.max("_e").alias("_mx"))
-    wtd = ef.join(mx, "dst").withColumn("_w", F.exp(F.col("_e") - F.col("_mx")))
-    z = wtd.groupBy("dst").agg(F.sum("_w").alias("_z"))
-    al = (wtd.join(z, "dst")
-          .withColumn("_alpha", F.col("_w") / F.col("_z"))
-          .localCheckpoint(eager=False))
-
-    per_dim = (al.select("dst", "_alpha", F.posexplode("_s").alias("pos", "x"))
-               .groupBy("dst", "pos")
-               .agg(F.sum(F.col("_alpha") * F.col("x")).alias("v")))
-    M = (per_dim.groupBy("dst")
-         .agg(F.transform(F.array_sort(F.collect_list(F.struct("pos", "v"))),
-                          lambda s: s["v"]).alias("_m"))
-         .withColumn("_h", F.transform("_m", lambda x: sigmoid(x)))
-         .localCheckpoint(eager=False))
-
-    zeros = F.array_repeat(F.lit(0.0), h)
-    ex = (examples
-          .join(sp.select("src", F.col("_s").alias("_su")), "src")
-          .join(M.select(F.col("dst"), F.col("_h").alias("_hv")),
-                "dst", "left")
-          .withColumn("_hv", F.coalesce("_hv", zeros)))
-    zcol = dot(F.col("_su"), F.col("_hv")) + F.lit(float(b))
-    p = sigmoid(F.greatest(F.least(zcol, F.lit(30.0)), F.lit(-30.0)))
-    y = F.col("label").cast("double")
-    ex = ex.select(
-        "src", "dst", "_su", "_hv", y.alias("_y"), (p - y).alias("_err"),
-        (-(y * F.log(p) + (1 - y) * F.log(1 - p))).alias("_loss"),
-        (p > 0.5).cast("int").alias("_yhat"),
-    ).localCheckpoint(eager=False)
-
-    row = ex.agg(
-        F.sum("_loss").alias("loss_sum"), F.sum("_err").alias("gb_sum"),
-        F.count("*").alias("n"),
-        F.sum((F.col("_yhat") == F.col("_y").cast("int")).cast("long"))
-        .alias("correct")).first()
-    n = row.n or 0
-    if n == 0:
-        d_s, d_d = Wl.shape[1], Wr.shape[1]
-        return {"loss": 0.0, "acc": 0.0, "n": 0, "gb": 0.0,
-                "ga": [0.0] * h, "gWl": np.zeros((h, d_s)),
-                "gWr": np.zeros((h, d_d))}
-    stats = {"loss": row.loss_sum / n, "acc": row.correct / n, "n": n,
-             "gb": row.gb_sum / n}
-    if not with_grads:
-        return stats
-
-    # ∂L/∂h per dst node (decoder path), then the sigmoid chain gm + c
-    gd = (ex.select(F.col("dst"),
-                    F.posexplode(F.transform(
-                        "_su", lambda x: F.col("_err") * x))
-                    .alias("pos", "gx"))
-          .groupBy("dst", "pos").agg(F.sum("gx").alias("v")))
-    Gd = (gd.groupBy("dst")
-          .agg(F.transform(F.array_sort(F.collect_list(F.struct("pos", "v"))),
-                           lambda s: s["v"]).alias("_g")))
-    GM = (Gd.join(M, "dst")
-          .withColumn("_gm", F.expr(
-              "zip_with(_g, _h, (g, hh) -> g * hh * (1d - hh))"))
-          .withColumn("_c", dot(F.col("_gm"), F.col("_m")))
-          .select("dst", "_gm", "_c")
-          .localCheckpoint(eager=False))
-
-    # per-edge softmax/attention backward (edges into dsts with no
-    # example-gradient drop out via the inner join — their gm is 0)
-    eb = (al.join(GM, "dst")
-          .withColumn("_ge", F.col("_alpha")
-                      * (dot(F.col("_gm"), F.col("_s")) - F.col("_c")))
-          .withColumn("_dq", F.zip_with(
-              "_q", a_lit,
-              lambda q, ak: F.col("_ge") * ak
-              * F.when(q > 0, F.lit(1.0)).otherwise(F.lit(_LEAKY))))
-          .localCheckpoint(eager=False))
-
-    ga_rows = (eb.select(F.posexplode(F.expr(
-        "zip_with(_r, _q, (r, q) -> _ge * r)")).alias("pos", "gx"))
-        .groupBy("pos").agg(F.sum("gx").alias("v")).collect())
-    ga = [v / n for v in _collect_vec(ga_rows, h)]
-
-    # ∂L/∂s per src node: message paths (α·gm + dq) ⊕ decoder path
-    ds_edges = eb.select(
-        F.col("src").alias("node_id"),
-        F.posexplode(F.expr(
-            "zip_with(transform(_gm, g -> _alpha * g), _dq,"
-            " (mg, dq) -> mg + dq)")).alias("pos", "gx"))
-    ds_dec = ex.select(
-        F.col("src").alias("node_id"),
-        F.posexplode(F.transform("_hv", lambda x: F.col("_err") * x))
-        .alias("pos", "gx"))
-    DS = (ds_edges.unionByName(ds_dec)
-          .groupBy("node_id", "pos").agg(F.sum("gx").alias("gs")))
-    gWl_rows = (DS
-                .join(src_feats.select("node_id", F.col("emb").alias("_x")),
-                      "node_id")
-                .select(F.col("pos").alias("r"), "gs",
-                        F.posexplode("_x").alias("c", "xc"))
-                .groupBy("r", "c")
-                .agg(F.sum(F.col("gs") * F.col("xc")).alias("v")).collect())
-
-    DT = (eb.select(F.col("dst").alias("node_id"),
-                    F.posexplode("_dq").alias("pos", "gx"))
-          .groupBy("node_id", "pos").agg(F.sum("gx").alias("gs")))
-    gWr_rows = (DT
-                .join(dst_feats.select("node_id", F.col("emb").alias("_x")),
-                      "node_id")
-                .select(F.col("pos").alias("r"), "gs",
-                        F.posexplode("_x").alias("c", "xc"))
-                .groupBy("r", "c")
-                .agg(F.sum(F.col("gs") * F.col("xc")).alias("v")).collect())
-
-    stats["ga"] = ga
-    stats["gWl"] = _collect_mat(gWl_rows, h, Wl.shape[1]) / n
-    stats["gWr"] = _collect_mat(gWr_rows, h, Wr.shape[1]) / n
-    return stats
-
-
-def _to_array(long_df: DataFrame, id_col: str, pos_col: str, val_col: str,
-              out_col: str) -> DataFrame:
-    """(id, pos, val) long-form -> (id, out_col array<double>)."""
-    return (long_df.groupBy(id_col)
-            .agg(F.transform(
-                F.array_sort(F.collect_list(F.struct(pos_col, val_col))),
-                lambda s: s[val_col]).alias(out_col)))
-
-
-def _forward_layer(edges: DataFrame, emb: DataFrame, Wl: np.ndarray,
-                   Wr: np.ndarray, a: np.ndarray,
-                   dst_emb: DataFrame | None = None,
-                   activation: str = "sigmoid",
-                   quantize: bool = False):
-    """One attention layer forward: returns (al, H) where ``al`` is the
-    per-edge frame (src, dst, _s, _q, _r, _alpha) and ``H`` is
-    (node_id, _m, _h) for ALL dst-side nodes — zeros for nodes with no
-    in-edges (the gat_layer coalesce convention, which also zeroes
-    their gradient). ``dst_emb`` switches to the bipartite / hetero
-    per-edge-type case (src projected from ``emb``, dst from
-    ``dst_emb``); ``activation`` 'sigmoid' or 'none' (hetero edge-type
-    messages combine pre-activation, so they run 'none').
-
-    ``quantize=True`` applies the repo's 6-dp float-parity convention
-    to the layer's order-dependent reductions (the gat_layer contract:
-    round(exp(e-max), 6) numerators + DECIMAL partition sum, round
-    (α·s_i, 6) message terms + DECIMAL sum, round(sigmoid, 6) output) —
-    what lets a DuckDB twin REPLAY the trainer's forwards
-    (oracle.py::_gat_stack_train_q_sql)."""
-    h = Wl.shape[0]
-    a_lit = _arr_lit(a)
-    demb = emb if dst_emb is None else dst_emb
-    sp = emb.select(F.col("node_id").alias("src"),
-                    linear_layer(F.col("emb"), Wl, activation=None)
-                    .alias("_s"))
-    tp = demb.select(F.col("node_id").alias("dst"),
-                     linear_layer(F.col("emb"), Wr, activation=None)
-                     .alias("_t"))
-    ef = (edges.join(sp, "src").join(tp, "dst")
-          .withColumn("_q", F.zip_with("_s", "_t", lambda s, t: s + t))
-          .withColumn("_r", F.transform(
-              "_q", lambda x: F.when(x > 0, x).otherwise(x * F.lit(_LEAKY))))
-          .withColumn("_e", dot(F.col("_r"), a_lit)))
-    # softmax over each dst's in-edges in ONE shuffle: an unordered
-    # whole-partition window computes max and sum together, where the
-    # groupBy+join×2 form paid three extra exchanges per layer —
-    # per-stage overhead was the measured wall-clock dominator of a
-    # sampled gradient step (round-7 stage diet)
-    wd = Window.partitionBy("dst")
-    w_raw = F.exp(F.col("_e") - F.col("_mx"))
-    al = (ef.withColumn("_mx", F.max("_e").over(wd))
-          .withColumn("_w", F.round(w_raw, 6) if quantize else w_raw)
-          .withColumn("_z",
-                      F.sum(F.col("_w").cast("decimal(27,6)")).over(wd)
-                      .cast("double") if quantize
-                      else F.sum("_w").over(wd))
-          .withColumn("_alpha", F.col("_w") / F.col("_z"))
-          .localCheckpoint(eager=False))
-    # message aggregation as h fixed-width column sums — no posexplode
-    # row blow-up, no (dst, pos) shuffle, no collect_list rebuild.
-    # h is a small compile-time constant (model width), so h aggregate
-    # expressions stay comfortably inside one codegen stage.
-    def mterm(i):
-        ax = F.col("_alpha") * F.col("_s").getItem(i)
-        return (F.sum(F.round(ax, 6).cast("decimal(27,6)")).cast("double")
-                if quantize else F.sum(ax))
-    msum = al.groupBy("dst").agg(
-        *[mterm(i).alias(f"_m{i}") for i in range(h)])
-    zeros = F.array_repeat(F.lit(0.0), h)
-    sact = ((lambda x: F.round(sigmoid(x), 6)) if quantize
-            else (lambda x: sigmoid(x)))
-    act = ((lambda c: F.transform(c, sact))
-           if activation == "sigmoid" else (lambda c: F.col(c)))
-    H = (demb.select("node_id")
-         .join(msum.select(F.col("dst").alias("node_id"),
-                           F.array(*[F.col(f"_m{i}") for i in range(h)])
-                           .alias("_m")), "node_id", "left")
-         .select("node_id",
-                 F.coalesce("_m", zeros).alias("_m"),
-                 F.coalesce(act("_m"), zeros).alias("_h"))
-         .localCheckpoint(eager=False))
-    return al, H
 
 
 def _wgrad_cells(D: DataFrame, side_feats: DataFrame) -> DataFrame:
@@ -432,8 +202,9 @@ def _backward_layer_frames(al: DataFrame, H: DataFrame, G: DataFrame,
     gWr_cells, DSDT): the cell frames are (r, c, v) partial sums ready
     for the fused gradient-sync collect, and DSDT = (node_id, _dsa,
     _dta) is the node-level (∂L/∂s, ∂L/∂t) pair a deeper layer needs to
-    continue the chain (∂L/∂emb_in = Wlᵀ·_dsa + Wrᵀ·_dta).
-    ``dst_emb_in`` / ``activation`` mirror _forward_layer's bipartite +
+    continue the chain (∂L/∂emb_in = Wlᵀ·_dsa + Wrᵀ·_dta), left lazy so
+    only a caller that chains pays for it.
+    ``dst_emb_in`` / ``activation`` mirror attention_layer's bipartite +
     pre-activation modes ('none' → gm = g directly, no sigmoid
     chain)."""
     h = Wl.shape[0]
@@ -486,29 +257,68 @@ def _backward_layer_frames(al: DataFrame, H: DataFrame, G: DataFrame,
     DSDT = (ds_arr.join(dt_arr, "node_id", "full")
             .select("node_id",
                     F.coalesce("_dsa", zeros).alias("_dsa"),
-                    F.coalesce("_dta", zeros).alias("_dta"))
-            .localCheckpoint(eager=False))
+                    F.coalesce("_dta", zeros).alias("_dta")))
     return ga_cells, gWl_cells, gWr_cells, DSDT
 
 
-def _backward_layer(al: DataFrame, H: DataFrame, G: DataFrame,
-                    emb_in: DataFrame, Wl: np.ndarray, Wr: np.ndarray,
-                    a: np.ndarray, n: int,
-                    dst_emb_in: DataFrame | None = None,
-                    activation: str = "sigmoid"):
-    """Collected form of ``_backward_layer_frames`` (kept for the
-    single-layer ``_gat_epoch`` path): returns (gWl, gWr, ga, DSDT)
-    with gradients already normalized by ``n``."""
+def _gat_epoch(edges: DataFrame, src_feats: DataFrame, dst_feats: DataFrame,
+               examples: DataFrame, Wl: np.ndarray, Wr: np.ndarray,
+               a: np.ndarray, b: float,
+               with_grads: bool = True) -> dict:
+    """One full-batch forward(+backward) pass of the bipartite layer +
+    dot decoder; returns loss/acc/n/gb and — when ``with_grads`` — the
+    parameter gradients ga/gWl/gWr (already /n). The layer is
+    ``attention_layer`` and its backward ``_backward_layer_frames``;
+    the decoder z = s_u·h_v + b adds one ∂L/∂W_l path of its own
+    (Σ_v err·h_v per src u), reduced as one more cell frame. Stats and
+    every cell come back in one collect."""
     h = Wl.shape[0]
-    ga_cells, gWl_cells, gWr_cells, DSDT = _backward_layer_frames(
-        al, H, G, emb_in, Wl, Wr, a, dst_emb_in=dst_emb_in,
-        activation=activation)
-    got = _collect_tagged_cells([("ga", ga_cells), ("Wl", gWl_cells),
-                                 ("Wr", gWr_cells)])
-    ga = [float(x) for x in _collect_mat(got["ga"], h, 1)[:, 0] / n]
-    gWl = _collect_mat(got["Wl"], h, Wl.shape[1]) / n
-    gWr = _collect_mat(got["Wr"], h, Wr.shape[1]) / n
-    return gWl, gWr, ga, DSDT
+    al, H = attention_layer(edges, src_feats, Wl, Wr, a, dst_emb=dst_feats)
+    zeros = F.array_repeat(F.lit(0.0), h)
+    ex = (examples
+          .join(src_feats.select(
+              F.col("node_id").alias("src"),
+              linear_layer(F.col("emb"), Wl, activation=None).alias("_su")),
+              "src")
+          .join(H.select(F.col("node_id").alias("dst"),
+                         F.col("_h").alias("_hv")), "dst", "left")
+          .withColumn("_hv", F.coalesce("_hv", zeros)))
+    zcol = dot(F.col("_su"), F.col("_hv")) + F.lit(float(b))
+    p = sigmoid(F.greatest(F.least(zcol, F.lit(30.0)), F.lit(-30.0)))
+    y = F.col("label").cast("double")
+    ex = ex.select(
+        "src", "dst", "_su", "_hv", y.alias("_y"), (p - y).alias("_err"),
+        (-(y * F.log(p) + (1 - y) * F.log(1 - p))).alias("_loss"),
+        (p > 0.5).cast("int").alias("_yhat"),
+    ).localCheckpoint(eager=False)
+    if not with_grads:
+        return _parse_stats(_stats_cells(ex).collect())
+
+    # decoder: ∂L/∂h_v = Σ err·s_u per dst feeds the layer backward;
+    # ∂L/∂s_u = Σ err·h_v adds its own ∂L/∂W_l cells
+    G = (ex.groupBy(F.col("dst").alias("node_id")).agg(
+        *[F.sum(F.col("_err") * F.col("_su").getItem(i)).alias(f"_g{i}")
+          for i in range(h)])
+        .select("node_id",
+                F.array(*[F.col(f"_g{i}") for i in range(h)]).alias("_g")))
+    ga_c, gWl_c, gWr_c, _ = _backward_layer_frames(
+        al, H, G, src_feats, Wl, Wr, a, dst_emb_in=dst_feats)
+    dec_c = _wgrad_cells(
+        ex.select(F.col("src").alias("node_id"),
+                  F.posexplode(F.transform(
+                      "_hv", lambda x: F.col("_err") * x))
+                  .alias("pos", "gs")), src_feats)
+    got = _collect_tagged_cells([
+        ("stats", _stats_cells(ex)), ("ga", ga_c), ("Wl", gWl_c),
+        ("Wr", gWr_c), ("dec", dec_c)])
+    stats = _parse_stats(got["stats"])
+    n = stats["n"] or 1        # n = 0: every cell list is empty → zeros
+    d_s, d_d = Wl.shape[1], Wr.shape[1]
+    stats["ga"] = [float(x) for x in _collect_mat(got["ga"], h, 1)[:, 0] / n]
+    stats["gWl"] = (_collect_mat(got["Wl"], h, d_s)
+                    + _collect_mat(got["dec"], h, d_s)) / n
+    stats["gWr"] = _collect_mat(got["Wr"], h, d_d) / n
+    return stats
 
 
 def _stack_epoch(edges: DataFrame, feats: DataFrame, examples: DataFrame,
@@ -523,8 +333,8 @@ def _stack_epoch(edges: DataFrame, feats: DataFrame, examples: DataFrame,
     embs = [feats]           # layer inputs; embs[l] feeds layer l
     layers = []              # (al, H) per layer
     for (Wl, Wr, a) in params:
-        al, H = _forward_layer(edges, embs[-1], Wl, Wr, a,
-                               quantize=quantize)
+        al, H = attention_layer(edges, embs[-1], Wl, Wr, a,
+                                quantize=quantize)
         layers.append((al, H))
         embs.append(H.select("node_id", F.col("_h").alias("emb")))
 
@@ -546,15 +356,7 @@ def _stack_epoch(edges: DataFrame, feats: DataFrame, examples: DataFrame,
         (-(y * F.log(p) + (1 - y) * F.log(1 - p))).alias("_loss"),
         (p > 0.5).cast("int").alias("_yhat")).localCheckpoint(eager=False)
     if not with_grads:
-        row = ex.agg(
-            F.sum("_loss").alias("loss_sum"), F.sum("_err").alias("gb_sum"),
-            F.count("*").alias("n"),
-            F.sum((F.col("_yhat") == F.col("_y").cast("int")).cast("long"))
-            .alias("correct")).first()
-        n = row.n or 0
-        return {"loss": (row.loss_sum / n) if n else 0.0,
-                "acc": (row.correct / n) if n else 0.0, "n": n,
-                "gb": (row.gb_sum / n) if n else 0.0}
+        return _parse_stats(_stats_cells(ex).collect())
 
     # symmetric decoder: ∂L/∂h_x = Σ err·h_other over both endpoint
     # roles — hdim fixed-width column sums in one shuffle (stage diet)
@@ -582,7 +384,7 @@ def _stack_epoch(edges: DataFrame, feats: DataFrame, examples: DataFrame,
                    (f"L{li}:Wr", gWr_c)]
         if li > 0:
             # chain to the previous layer's output h^{l-1}
-            G = DSDT.select(
+            G = DSDT.localCheckpoint(eager=False).select(
                 "node_id",
                 F.zip_with(
                     linear_layer(F.col("_dsa"), Wl.T, activation=None),
@@ -672,47 +474,6 @@ def train_gat_stack(edges: DataFrame, feats: DataFrame,
                weight_decay, val_frac, seed, split_draw)
 
 
-def _apply_WT(G: DataFrame, W: np.ndarray, col: str = "_g") -> DataFrame:
-    """(node_id, col) -> (node_id, _g = Wᵀ·col) — the chain-rule hop
-    back through a linear projection, as a per-node codegen map."""
-    return G.select("node_id",
-                    linear_layer(F.col(col), W.T, activation=None)
-                    .alias("_g"))
-
-
-def _add_G(g1: DataFrame | None, g2: DataFrame, h: int) -> DataFrame:
-    """Element-wise sum of two (node_id, _g) gradient frames (full outer
-    join, zero-coalesced)."""
-    if g1 is None:
-        return g2
-    zeros = F.array_repeat(F.lit(0.0), h)
-    return (g1.withColumnRenamed("_g", "_g1")
-            .join(g2.withColumnRenamed("_g", "_g2"), "node_id", "full")
-            .select("node_id",
-                    F.zip_with(F.coalesce("_g1", zeros),
-                               F.coalesce("_g2", zeros),
-                               lambda x, y: x + y).alias("_g")))
-
-
-def _outer_cells(G: DataFrame, feats: DataFrame,
-                 col: str = "_g") -> DataFrame:
-    """(r, c, v) cell partial sums of Σ_nodes g ⊗ x — the ∂L/∂W
-    reduction for any per-node linear map, returned UNcollected for the
-    fused gradient-sync job."""
-    return (G.select("node_id", F.posexplode(col).alias("r", "gv"))
-            .join(feats.select("node_id", F.col("emb").alias("_x")),
-                  "node_id")
-            .select("r", "gv", F.posexplode("_x").alias("c", "xc"))
-            .groupBy("r", "c")
-            .agg(F.sum(F.col("gv") * F.col("xc")).alias("v")))
-
-
-def _node_outer_grad(G: DataFrame, feats: DataFrame, h: int, d: int,
-                     n: int, col: str = "_g") -> np.ndarray:
-    """Collected form of ``_outer_cells`` (one job)."""
-    return _collect_mat(_outer_cells(G, feats, col).collect(), h, d) / n
-
-
 def _cut(df: DataFrame) -> DataFrame:
     """Lineage cut inside the tagged hetero epoch — MEASURED both ways
     (round 8): localCheckpoint(eager=False) on a real plan materializes
@@ -774,7 +535,7 @@ def _hetero_epoch(graph_edges: dict, feats: dict, examples: DataFrame,
 
     ``quantize=True`` (round 10 — the hetero sampled trainer's turn
     under the hash gate) applies the repo's 6-dp float-parity
-    convention at every order-dependent reduction, the _forward_layer
+    convention at every order-dependent reduction, the attention_layer
     contract carried to the tagged-union plan: round(sigmoid, 6) input
     projections, round(exp(e-max), 6) softmax numerators + DECIMAL
     partition sums, round(α·s_i, 6) message terms + DECIMAL sums,
@@ -909,15 +670,7 @@ def _hetero_epoch(graph_edges: dict, feats: dict, examples: DataFrame,
         (p > 0.5).cast("int").alias("_yhat"))
     ex = _cut(ex)
     if not with_grads:
-        row = ex.agg(
-            F.sum("_loss").alias("loss_sum"), F.sum("_err").alias("gb_sum"),
-            F.count("*").alias("n"),
-            F.sum((F.col("_yhat") == F.col("_y").cast("int")).cast("long"))
-            .alias("correct")).first()
-        n = row.n or 0
-        return {"loss": (row.loss_sum / n) if n else 0.0,
-                "acc": (row.correct / n) if n else 0.0, "n": n,
-                "gb": (row.gb_sum / n) if n else 0.0}
+        return _parse_stats(_stats_cells(ex).collect())
 
     # ---- backward: every reduction keyed by its own (k, r, c, v) tag,
     # stats included, ONE fused collect ----

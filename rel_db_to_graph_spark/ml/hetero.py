@@ -16,8 +16,8 @@ Edge-type set includes REVERSE_* and SELF_LOOP types exactly as the
 reference's metadata does (the graph carries them from G6/G7, and
 add_self_loops=False in the conv because of that — train.py:45).
 
-Scale: each edge type contributes one endpoint join + two scalar
-shuffles + one per-(node, dim) aggregation per layer — the per-type
+Scale: each edge type contributes the endpoint joins, one softmax
+window shuffle and one per-dst message groupBy per layer — the per-type
 plans are independent until the final per-type sum, so a scheduler can
 run them concurrently; lineage is checkpointed per layer.
 """
@@ -66,10 +66,10 @@ def hetero_gat_forward(graph: dict, hidden: int = 4, layers: int = 1,
     params.yaml).
 
     ``quantize=True`` applies the repo's 6-dp float-parity convention
-    at every order-dependent reduction (the gat_layer softmax/message
-    sums) and to each sigmoid output, making the whole forward
-    DuckDB-replayable (oracle.py::_hetero_forward_q_sql): everything
-    that is NOT quantized — input max-abs scaling, the seeded linear
+    at every order-dependent reduction (the gat.py::attention_layer
+    softmax/message sums) and to each sigmoid output, making the whole
+    forward DuckDB-replayable (oracle.py::_hetero_forward_q_sql):
+    everything that is NOT quantized — input max-abs scaling, the seeded linear
     projections, attention scores, the per-row edge-type message adds
     — is fixed-order per-row double arithmetic, bit-identical across
     engines by IEEE-754 (no order-varying sums, no libm divergence

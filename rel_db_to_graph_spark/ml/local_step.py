@@ -288,7 +288,7 @@ def stack_epoch_local(edges: tuple, feats: tuple, examples: tuple,
     message-passes over the same closure edges). ``feats``:
     (ids int64, X float64 (n, d)). ``examples``: (src, dst, labels).
     ``params``: [(Wl, Wr, a), ...] outermost-first. Layer semantics
-    mirror gat_train._forward_layer: h_l = act(Σ α·s) for nodes with
+    mirror gat.py::attention_layer: h_l = act(Σ α·s) for nodes with
     in-edges, ZERO (not act(0)) otherwise; act = sigmoid, 6-dp HALF_UP
     + decimal sums in ``quantize`` mode. Returns the _stack_epoch stats
     dict ({loss, acc, n, gb[, grads as [(gWl, gWr, [ga])...]]})."""

@@ -14,9 +14,17 @@ parts" observation from SURVEY.md §3.2.
 Model: logistic edge scorer p = sigmoid(w·phi + b) over per-edge feature
 vectors (the L6 decoder with learnable weights). Loss: BCE (L7,
 model.py:118). Metrics per epoch (L8). Best-epoch weight checkpointing
-on val accuracy (L11, train.py:63-68). Full-batch gradient descent:
-deterministic, no per-row randomness — reproducibility is a property,
-not a seed-hope (the reference pins seeds everywhere, setup.py:7-21).
+on val accuracy (L11, train.py:63-68). Full-batch gradient descent
+with no per-row randomness: the split is content-addressed and every
+parameter is seeded (the reference pins seeds everywhere,
+setup.py:7-21). It is NOT bit-deterministic: the unquantized DataFrame
+trainers' gradient and loss sums add partitions in shuffle-fetch order,
+so their weights can differ in the last ulp between runs. The
+hash-gated configurations are the quantized, integer-derived ones —
+plain GD, integer-derived accuracy histories and, for the GNN
+trainers, 6-dp quantized forwards (``link_pred_train``,
+``gat_stack_train_q``, the ``*_sampled_q`` trainers) — which that
+last-ulp drift cannot reach.
 
 ``fit`` is the one fit loop every trainer runs on (this module's two
 and the five GNN trainers in ml/gat_train.py): hash split, optimizer,

@@ -3459,7 +3459,7 @@ def _gat_stack_emitters(parts: list, hidden: int, d_in: int,
         """Quantized stack forward over ``edges_cte`` starting from
         ``base`` embeddings under weights ``w`` → fe{tag}_L per layer.
         ``closure``: emit a row for EVERY closure node (zeros where no
-        in-edges — the _forward_layer coalesce); None = inner shape
+        in-edges — the attention_layer coalesce); None = inner shape
         (full graph: every node has in-edges)."""
         prev = base
         for L in range(layers):
@@ -3683,7 +3683,7 @@ def _gat_stack_train_q_sql(hidden: int = 2, d_in: int = 2,
       * per weight state w_t, ONE quantized forward (both layers:
         round(exp(e-max), 6) + DECIMAL softmax sums, round(α·s, 6) +
         DECIMAL message sums, round(sigmoid, 6) outputs — the
-        _forward_layer quantize=True contract), shared between epoch
+        attention_layer quantize=True contract), shared between epoch
         t's train stats and epoch t-1's val stats;
       * per epoch, the FULL backprop as CTE algebra mirroring
         ml/gat_train.py::_backward_layer_frames: decoder grads
@@ -3754,7 +3754,7 @@ def _gat_stack_train_sampled_q_sql(hidden: int = 2, d_in: int = 2,
         previous hop's sampled srcs;
       * the quantized forward over the sampled edge set, emitting
         ZERO-vector embeddings for closure nodes without sampled
-        in-edges (the _forward_layer coalesce convention — leaf nodes
+        in-edges (the attention_layer coalesce convention — leaf nodes
         feed s = W·0 into the next layer, exactly like Spark);
       * the full backprop restricted to the batch + sampled edges and
         a plain-GD update per BATCH (w advances inside the epoch);

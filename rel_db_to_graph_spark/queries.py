@@ -783,7 +783,7 @@ def q_gat_stack_train_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     GD-retrained scorer): the same 2-layer homogeneous GATv2 stack,
     ring+self-loop customer graph and stride-pair labels as
     q_gat_stack_train, but with 6-dp QUANTIZED forwards
-    (_forward_layer quantize=True), plain full-batch GD, the md5 split
+    (attention_layer quantize=True), plain full-batch GD, the md5 split
     draw, and an INTEGER-DERIVED accuracy history (train acc at the
     pre-step weights, val acc at the post-step weights — the
     link_pred_train timeline). The DuckDB twin RETRAINS the model
@@ -893,7 +893,8 @@ def q_hetero_forward_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     every node type, every edge type incl. REVERSE_/SELF_LOOP, seeded
     weights — but with the repo's 6-dp float-parity quantization at
     each order-dependent reduction (softmax partition sums, α-weighted
-    message sums, sigmoid outputs; ml/gat.py::gat_layer(quantize=True)).
+    message sums, sigmoid outputs; ml/gat.py::attention_layer
+    (quantize=True) under gat_layer).
     That makes the forward cross-engine exact, so the DuckDB twin
     REPLAYS it over the same graph (oracle.py::_hetero_forward_q_sql
     re-derives degrees, max-abs feature scaling, the per-edge-type
