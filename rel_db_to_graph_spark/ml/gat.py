@@ -14,9 +14,11 @@ Graph Attention Networks?", public arXiv):
     h'_j = σ( Σ_i α_ij · s_i )
 
 ``attention_layer`` is the one DataFrame form of this layer: the frozen
-forwards (``gat_layer`` → ``gat_forward``, ml/hetero.py) and the
-full-batch trainers (ml/gat_train.py: ``_gat_epoch``, ``_stack_epoch``)
-all run on it. Spark decomposition, per layer:
+forward (``gat_layer`` → ``gat_forward``) and the full-batch trainers
+(ml/gat_train.py: ``_gat_epoch``, ``_stack_epoch``) all run on it. The
+heterogeneous model runs the same math for every edge type at once as
+one tagged-union plan (ml/hetero.py::hetero_layer). Spark
+decomposition, per layer:
     * projections: per-row linear maps (codegen);
     * e_ij: per-edge expression after two endpoint joins;
     * softmax: one unordered window over each dst's in-edges computes
@@ -77,10 +79,10 @@ def attention_layer(edges: DataFrame, emb: DataFrame, Wl: np.ndarray,
     the per-edge frame (src, dst, _s, _q, _r, _alpha) and ``H`` is
     (node_id, _m, _h) for ALL dst-side nodes — zeros for nodes with no
     in-edges (they receive no messages, which also zeroes their
-    gradient). ``dst_emb`` switches to the bipartite / hetero
-    per-edge-type case (src projected from ``emb``, dst from
-    ``dst_emb``); ``activation`` 'sigmoid', anything else is the
-    identity (hetero edge-type messages combine pre-activation).
+    gradient). ``dst_emb`` switches to the bipartite case (src
+    projected from ``emb``, dst from ``dst_emb``); ``activation``
+    'sigmoid', anything else is the identity (pre-activation
+    messages).
 
     ``dropout`` is PyG's attention-coefficient dropout (GATConfig
     dropout=0.15, params.yaml): each normalized α_ij is zeroed with
@@ -97,8 +99,7 @@ def attention_layer(edges: DataFrame, emb: DataFrame, Wl: np.ndarray,
     6) message terms + DECIMAL sum, round(sigmoid, 6) output. Everything
     else on the path is fixed-order per-row double arithmetic, already
     bit-identical across engines — this is what lets a DuckDB twin
-    REPLAY the forwards (oracle.py::_hetero_forward_q_sql,
-    _gat_stack_train_q_sql)."""
+    REPLAY the forwards (oracle.py::_gat_stack_train_q_sql)."""
     h = Wl.shape[0]
     a_lit = _arr_lit(a)
     demb = emb if dst_emb is None else dst_emb
@@ -170,12 +171,11 @@ def gat_layer(edges: DataFrame, feats: DataFrame, w_l: np.ndarray,
               quantize: bool = False) -> DataFrame:
     """One GATv2 attention layer: (node_id, emb) -> (node_id, emb').
 
-    Homogeneous by default; pass ``dst_feats`` for the bipartite /
-    heterogeneous case (src endpoints projected from ``feats``, dst
-    endpoints from ``dst_feats`` — the to_hetero per-edge-type shape).
-    Nodes with no in-edges keep a zero embedding of the output width
-    (they receive no messages — callers concat or sum self features,
-    as gat_forward / hetero_forward do). ``activation=None`` returns the
+    Homogeneous by default; pass ``dst_feats`` for the bipartite case
+    (src endpoints projected from ``feats``, dst endpoints from
+    ``dst_feats``). Nodes with no in-edges keep a zero embedding of the
+    output width (they receive no messages — callers concat or sum
+    self features). ``activation=None`` returns the
     pre-activation messages. This is ``attention_layer``'s ``H`` output;
     ``dropout``/``dropout_seed``/``quantize`` are its options."""
     _, H = attention_layer(edges, feats, w_l, w_r, a, dst_emb=dst_feats,

@@ -41,9 +41,10 @@ all partially aggregated map-side; no feature matrix is ever collected;
 per-epoch driver traffic is the gradient cells (h·d values). The
 forward is ml/gat.py::attention_layer, the same DataFrame layer the
 frozen forwards run (one window shuffle for the softmax, one groupBy
-for the messages); its backward is ``_backward_layer_frames``.
-Cross-checked against a from-scratch numpy forward/backward twin in
-tests/test_gat_train.py.
+for the messages); its backward is ``_backward_layer_frames``. The
+hetero epoch's forward is ml/hetero.py::hetero_layer, the frozen hetero
+forward's tagged-union layer. Cross-checked against a from-scratch
+numpy forward/backward twin in tests/test_gat_train.py.
 
 Every trainer here runs on ml/train.py::fit, the one fit loop (split,
 optimizer, per-epoch train hook, val stats, history row, best-val
@@ -66,12 +67,19 @@ from concurrent.futures import ThreadPoolExecutor
 from functools import reduce
 
 import numpy as np
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rel_db_to_graph_spark.functions.vector import dot, sigmoid
 from rel_db_to_graph_spark.ml.gat import _LEAKY, _arr_lit, attention_layer
 from rel_db_to_graph_spark.ml.gnn import linear_layer
+from rel_db_to_graph_spark.ml.hetero import (
+    _case,
+    _cut,
+    hetero_layer,
+    input_projection,
+    tag_nodes,
+)
 from rel_db_to_graph_spark.ml.local_step import (
     hetero_epoch_local,
     stack_epoch_local,
@@ -215,8 +223,7 @@ def _backward_layer_frames(al: DataFrame, H: DataFrame, G: DataFrame,
     GM = (G.join(H, "node_id")
           .withColumn("_gm", gm_expr)
           .withColumn("_c", dot(F.col("_gm"), F.col("_m")))
-          .select(F.col("node_id").alias("dst"), "_gm", "_c")
-          .localCheckpoint(eager=False))
+          .select(F.col("node_id").alias("dst"), "_gm", "_c"))
     eb = (al.join(GM, "dst")
           .withColumn("_ge", F.col("_alpha")
                       * (dot(F.col("_gm"), F.col("_s")) - F.col("_c")))
@@ -474,19 +481,6 @@ def train_gat_stack(edges: DataFrame, feats: DataFrame,
                weight_decay, val_frac, seed, split_draw)
 
 
-def _cut(df: DataFrame) -> DataFrame:
-    """Lineage cut inside the tagged hetero epoch — MEASURED both ways
-    (round 8): localCheckpoint(eager=False) on a real plan materializes
-    its AQE shuffle stages at call time (driver-blocking stage-jobs),
-    so cuts LOOK like pure overhead inside a single fused collect — but
-    without them each downstream branch re-derives the shared lineage
-    (branch-specific column pruning makes the duplicated exchanges
-    non-identical, so ReusedExchange does NOT dedup them) and the step
-    got ~2x slower (sf0.001 steady 57 s with the cuts, 116 s
-    without)."""
-    return df.localCheckpoint(eager=False)
-
-
 def _collect_keyed_cells(frames: list) -> dict:
     """ONE driver job for any number of (k, r, c, v) reduction frames
     that carry their OWN key column (the grouped-tag variant of
@@ -516,140 +510,36 @@ def _hetero_epoch(graph_edges: dict, feats: dict, examples: DataFrame,
     Every parameter learns. params = {"W0": {t: h×d_t}, "Wself":
     {t: h×h}, "attn": {(s,rel,d): (Wl, Wr, a)}}.
 
-    TAGGED-UNION PLAN (round-8 stage diet): the per-edge-type attention
-    sub-plans are independent and shape-identical, so rather than ~6
-    shuffle stages × |edge types| (the measured ~45-stage DAG whose
-    per-stage scheduling floor dominated sampled-trainer wall-clock at
-    any SF), ALL edge types run through ONE plan over a tag-unioned
-    edge frame: per-type weights become per-tag CASE expressions
-    (map-side, no extra stages), the softmax window and message/gradient
-    reductions key on (tag, dst) instead of (dst) per type, and the
-    ordered aggr='sum' combine becomes a pivot + fixed-order adds. The
-    whole epoch is ~25 shuffle stages regardless of |edge types| and
-    collects stats + every parameter's cells in ONE driver job. This is
-    also the 100 TB-correct shape: one gradient barrier per step and a
-    bounded stage count, instead of a scheduler-bound forest of tiny
-    per-type stages. Per-group sums are unchanged; cross-path
-    accumulation order changes only within the numpy-twin tolerances
-    (tests/test_gat_train.py pins gradients at rtol 1e-7).
+    The forward is the frozen forward's own layer:
+    ml/hetero.py::input_projection + ``hetero_layer``, the TAGGED-UNION
+    plan that runs every edge type through one tag-unioned edge frame
+    (per-tag CASE weights, a (tag, dt, dst) softmax window, a pivot +
+    sorted-order aggr='sum' combine). The backward keeps that shape:
+    the gradient reductions key on (tag, dst) / (nt, node_id) instead
+    of one sub-plan per type, so the whole epoch is ~25 shuffle stages
+    regardless of |edge types| and collects stats + every parameter's
+    cells in ONE driver job — one gradient barrier per step, instead of
+    a scheduler-bound forest of tiny per-type stages. Per-group sums are
+    unchanged; cross-path accumulation order changes only within the
+    numpy-twin tolerances (tests/test_gat_train.py pins gradients at
+    rtol 1e-7).
 
-    ``quantize=True`` (round 10 — the hetero sampled trainer's turn
-    under the hash gate) applies the repo's 6-dp float-parity
-    convention at every order-dependent reduction, the attention_layer
-    contract carried to the tagged-union plan: round(sigmoid, 6) input
-    projections, round(exp(e-max), 6) softmax numerators + DECIMAL
-    partition sums, round(α·s_i, 6) message terms + DECIMAL sums,
-    round(sigmoid, 6) layer outputs. Gradients stay unquantized (the
-    gated query outputs integer-derived accuracy/counts)."""
+    ``quantize=True`` (the hetero sampled trainer's hash gate) is
+    ``hetero_layer``'s 6-dp float-parity convention on the forward:
+    round(sigmoid, 6) input projections, round(exp(e-max), 6) softmax
+    numerators + DECIMAL partition sums, round(α·s_i, 6) message terms +
+    DECIMAL sums, round(sigmoid, 6) layer outputs. Gradients stay
+    unquantized (the gated query outputs integer-derived
+    accuracy/counts)."""
     hidden = next(iter(params["Wself"].values())).shape[0]
     types = sorted(feats)
     edge_types = sorted(params["attn"])
     etag = {et: "|".join(et) for et in edge_types}
     dims = range(hidden)
 
-    def _case(key_col, exprs: dict):
-        """Per-tag expression via a when-chain (map-side, codegen)."""
-        items = list(exprs.items())
-        out = F.when(key_col == items[0][0], items[0][1])
-        for k, e in items[1:]:
-            out = out.when(key_col == k, e)
-        return out
-
-    # ---- forward: per-type input projection -> tagged node frame ----
-    def _h0_expr(t):
-        raw = linear_layer(F.col("emb"), params["W0"][t],
-                           activation="sigmoid")
-        return (F.transform(raw, lambda x: F.round(x, 6))
-                if quantize else raw)
-
-    h0 = {t: feats[t].select("node_id", _h0_expr(t).alias("emb"))
-          for t in types}
-    N = None
-    for t in types:
-        part = h0[t].select(F.lit(t).alias("nt"), "node_id", "emb")
-        N = part if N is None else N.unionByName(part)
-    N = _cut(N)
-
-    E = None
-    for et in edge_types:
-        s, _rel, d = et
-        part = graph_edges[et].select(
-            F.lit(etag[et]).alias("tag"), F.lit(s).alias("st"),
-            F.lit(d).alias("dt"), "src", "dst")
-        E = part if E is None else E.unionByName(part)
-
-    tag = F.col("tag")
-    ef = (E.join(N.select(F.col("nt").alias("st"),
-                          F.col("node_id").alias("src"),
-                          F.col("emb").alias("_xs")), ["st", "src"])
-          .join(N.select(F.col("nt").alias("dt"),
-                         F.col("node_id").alias("dst"),
-                         F.col("emb").alias("_xd")), ["dt", "dst"])
-          .withColumn("_s", _case(tag, {
-              etag[et]: linear_layer(F.col("_xs"), params["attn"][et][0],
-                                     activation=None)
-              for et in edge_types}))
-          .withColumn("_t", _case(tag, {
-              etag[et]: linear_layer(F.col("_xd"), params["attn"][et][1],
-                                     activation=None)
-              for et in edge_types}))
-          .withColumn("_av", _case(tag, {
-              etag[et]: _arr_lit(params["attn"][et][2])
-              for et in edge_types}))
-          .withColumn("_q", F.zip_with("_s", "_t", lambda s, t: s + t))
-          .withColumn("_r", F.transform(
-              "_q", lambda x: F.when(x > 0, x).otherwise(x * F.lit(_LEAKY))))
-          .withColumn("_e", dot(F.col("_r"), F.col("_av"))))
-    # softmax over each (edge type, dst)'s in-edges in ONE shuffle for
-    # every edge type together
-    wd = Window.partitionBy("tag", "dt", "dst")
-    w_raw = F.exp(F.col("_e") - F.col("_mx"))
-    al = (ef.withColumn("_mx", F.max("_e").over(wd))
-          .withColumn("_w", F.round(w_raw, 6) if quantize else w_raw)
-          .withColumn("_z",
-                      F.sum(F.col("_w").cast("decimal(27,6)")).over(wd)
-                      .cast("double") if quantize
-                      else F.sum("_w").over(wd))
-          .withColumn("_alpha", F.col("_w") / F.col("_z")))
-    al = _cut(al)
-
-    def _mterm(i):
-        ax = F.col("_alpha") * F.col("_s").getItem(i)
-        return (F.sum(F.round(ax, 6).cast("decimal(27,6)")).cast("double")
-                if quantize else F.sum(ax))
-
-    msum = (al.groupBy("tag", "dt", "dst").agg(
-        *[_mterm(i).alias(f"_m{i}") for i in dims]))
-    msum = _cut(msum)
-
-    # ordered aggr='sum' combine: pivot the per-tag messages to columns,
-    # then add them in SORTED edge-type order per node type — the same
-    # left-fold association as the old per-type chained zip_with adds
-    # (a missing (tag, dst) contributes +0.0, exactly the old zeroed H)
-    all_tags = [etag[et] for et in edge_types]
-    in_tags = {t: [etag[et] for et in edge_types if et[2] == t]
-               for t in types}
-    piv = (msum.groupBy(F.col("dt").alias("nt"),
-                        F.col("dst").alias("node_id"))
-           .pivot("tag", all_tags)
-           .agg(*[F.first(f"_m{i}").alias(f"m{i}") for i in dims]))
-    npre = N.join(piv, ["nt", "node_id"], "left")
-    pre_exprs = []
-    for i in dims:
-        per_type = {}
-        for t in types:
-            e = dot(F.col("emb"), _arr_lit(params["Wself"][t][i]))
-            for tg in in_tags[t]:
-                e = e + F.coalesce(F.col(f"`{tg}_m{i}`"), F.lit(0.0))
-            per_type[t] = e
-        pre_exprs.append(_case(F.col("nt"), per_type))
-    pre = _cut(npre.select("nt", "node_id",
-                           F.array(*pre_exprs).alias("_pre")))
-    _act = ((lambda x: F.round(sigmoid(x), 6)) if quantize
-            else (lambda x: sigmoid(x)))
-    h1 = _cut(pre.select(
-        "nt", "node_id",
-        F.transform("_pre", _act).alias("emb")))
+    N = input_projection(feats, params["W0"], quantize)
+    al, msum, h1 = hetero_layer(graph_edges, N, params["attn"],
+                                params["Wself"], quantize)
 
     zeros = F.array_repeat(F.lit(0.0), hidden)
     ex = (examples
@@ -768,16 +658,12 @@ def _hetero_epoch(graph_edges: dict, feats: dict, examples: DataFrame,
                  for i in dims])
            .select("nt", "node_id",
                    F.array(*[F.col(f"_g{i}") for i in dims]).alias("_g")))
-    NF = None
-    for t in types:
-        part = feats[t].select(F.lit(t).alias("nt"), "node_id", "emb")
-        NF = part if NF is None else NF.unionByName(part)
     gm0 = (Gh0.join(N, ["nt", "node_id"])
            .select("nt", "node_id", F.expr(
                "zip_with(_g, emb, (g, hh) -> g * hh * (1d - hh))")
                .alias("_d")))
     keyed.append(_outer_keyed(
-        gm0, NF, F.concat(F.lit("W0:"), F.col("nt"))))
+        gm0, tag_nodes(feats), F.concat(F.lit("W0:"), F.col("nt"))))
 
     got = _collect_keyed_cells(keyed)
     stats = _parse_stats(got["stats"])

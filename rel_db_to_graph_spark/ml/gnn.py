@@ -70,45 +70,13 @@ def aggregate_messages(edges: DataFrame, embeddings: DataFrame,
 def linear_layer(emb_col: F.Column, weights: np.ndarray,
                  activation: str = "sigmoid") -> F.Column:
     """Apply a fixed (out, in) weight matrix to an array<double> column —
-    unrolled per output dim (fine for hidden≤~64; use a pandas_udf matmul
-    beyond that)."""
+    unrolled per output dim (one dot expression per output)."""
     outs = []
     for o in range(weights.shape[0]):
         w = F.array(*[F.lit(float(v)) for v in weights[o]])
         z = dot(emb_col, w)
         outs.append(sigmoid(z) if activation == "sigmoid" else z)
     return F.array(*outs)
-
-
-def linear_layer_pandas(df: DataFrame, emb_col: str, weights: np.ndarray,
-                        activation: str = "sigmoid",
-                        out_col: str = "emb") -> DataFrame:
-    """Arrow-batched matmul for wide layers: one vectorized numpy GEMM
-    per record batch instead of ``out_dim`` unrolled fold expressions.
-    Crossover vs ``linear_layer`` is around hidden ~64; beyond that the
-    unrolled expression tree grows quadratically while the pandas_udf
-    stays one BLAS call. Self-contained closure (worker-safe)."""
-    import pandas as pd
-    from pyspark.sql.pandas.functions import pandas_udf
-
-    w_list = [[float(v) for v in row] for row in weights]
-    act = activation
-
-    def _matmul(embs):
-        import numpy as _np
-        import pandas as _pd
-        W = _np.array(w_list)
-        X = _np.stack(embs.to_numpy())          # (batch, in_dim)
-        Z = X @ W.T                             # (batch, out_dim)
-        if act == "sigmoid":
-            Z = 1.0 / (1.0 + _np.exp(-Z))
-        return _pd.Series(list(Z))
-
-    # explicit hints via __annotations__: `from __future__ import
-    # annotations` stringizes inline hints, which pandas_udf rejects
-    _matmul.__annotations__ = {"embs": pd.Series, "return": pd.Series}
-    matmul = pandas_udf(_matmul, "array<double>")
-    return df.withColumn(out_col, matmul(F.col(emb_col)))
 
 
 def gnn_forward(edges: DataFrame, features: DataFrame, hidden: int = 4,

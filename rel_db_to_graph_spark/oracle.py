@@ -3092,7 +3092,8 @@ def _hetero_forward_q_sql(hidden: int = 2, seed: int = 42,
                           recommend_k: int | None = None) -> str:
     """Twin of queries.q_hetero_forward_q — DuckDB REPLAYS the full
     heterogeneous GATv2 forward (ml/hetero.py::hetero_gat_forward
-    quantize=True, hidden=2, layers=1) over the raw parquet tables:
+    quantize=True, hidden=2, layers=1: one input projection and one
+    tagged-union ``hetero_layer``) over the raw parquet tables:
 
       * degrees from the forward edge types (+1, isolated=1 — the
         C:217-241 semantics, before reverse/self-loop edges);
@@ -3101,11 +3102,13 @@ def _hetero_forward_q_sql(hidden: int = 2, seed: int = 42,
         default_rng sequence and inlined as full-precision literals);
       * per edge type (incl. REVERSE_* and SELF_LOOP): the GATv2
         attention pass — w_l/w_r projections, e = a·LeakyReLU(s+t),
-        per-dst softmax with round(exp(e-max), 6) numerators and a
+        per-dst softmax (the engine's per-(tag, dst) window over the
+        tag-unioned edges) with round(exp(e-max), 6) numerators and a
         DECIMAL(27,6) partition sum, α-weighted message sums with
         round(α·s_i, 6) terms (the engine's quantize=True contract);
       * per node type: W_self projection + messages added in sorted
-        edge-type order (aggr='sum'), round(sigmoid, 6);
+        edge-type order (aggr='sum'; the engine's pivot + fixed-order
+        adds), round(sigmoid, 6);
       * the per-type (n_nodes, decimal-sum dim1, dim2) summary.
 
     Natural pks stand in for dense node ids — the id permutation only

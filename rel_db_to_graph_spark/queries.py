@@ -893,8 +893,8 @@ def q_hetero_forward_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     every node type, every edge type incl. REVERSE_/SELF_LOOP, seeded
     weights — but with the repo's 6-dp float-parity quantization at
     each order-dependent reduction (softmax partition sums, α-weighted
-    message sums, sigmoid outputs; ml/gat.py::attention_layer
-    (quantize=True) under gat_layer).
+    message sums, sigmoid outputs; ml/hetero.py::hetero_layer
+    (quantize=True), the one tagged-union hetero layer).
     That makes the forward cross-engine exact, so the DuckDB twin
     REPLAYS it over the same graph (oracle.py::_hetero_forward_q_sql
     re-derives degrees, max-abs feature scaling, the per-edge-type

@@ -435,7 +435,8 @@ def _np_hetero_epoch(params, b):
         gm0 = {i: Gh0[t][i] * h0[t][i] * (1 - h0[t][i]) for i in h0[t]}
         grads["W0"][t] = sum(
             np.outer(gm0[i], x[t][i]) for i in h0[t]) / n
-    return {"loss": loss / n, "acc": acc / n, "gb": gb, "grads": grads}
+    return {"loss": loss / n, "acc": acc / n, "gb": gb, "grads": grads,
+            "h1": h1}
 
 
 def _hetero_params(seed=17):
@@ -452,14 +453,36 @@ def _hetero_params(seed=17):
     }
 
 
-def test_hetero_gradients_match_numpy(spark):
-    from rel_db_to_graph_spark.ml.gat_train import _hetero_epoch
-
+def _hetero_frames(spark):
     edges = {et: spark.createDataFrame(rows, "src long, dst long")
              for et, rows in H_EDGES.items()}
     feats = {t: spark.createDataFrame(list(d.items()),
                                       "node_id long, emb array<double>")
              for t, d in H_TYPES.items()}
+    return edges, feats
+
+
+def test_hetero_layer_matches_numpy(spark):
+    """The one hetero layer under the frozen forward and the trainer:
+    its per-type output equals the numpy twin's h1."""
+    from rel_db_to_graph_spark.ml.hetero import hetero_layer, input_projection
+
+    edges, feats = _hetero_frames(spark)
+    params = _hetero_params()
+    N = input_projection(feats, params["W0"])
+    _al, _msum, h1 = hetero_layer(edges, N, params["attn"], params["Wself"])
+    got = {(r.nt, r.node_id): r.emb for r in h1.collect()}
+    want = _np_hetero_epoch(params, 0.1)["h1"]
+    assert set(got) == {(t, i) for t in want for i in want[t]}
+    for t in want:
+        for i, v in want[t].items():
+            assert np.allclose(got[(t, i)], v, rtol=1e-10, atol=0), (t, i)
+
+
+def test_hetero_gradients_match_numpy(spark):
+    from rel_db_to_graph_spark.ml.gat_train import _hetero_epoch
+
+    edges, feats = _hetero_frames(spark)
     ex = spark.createDataFrame(H_EX, "src long, dst long, label int")
     params = _hetero_params()
     b = 0.1

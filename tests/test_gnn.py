@@ -42,25 +42,6 @@ def test_forward_deterministic(spark):
     assert all(len(r["emb"]) == 3 for r in a)
 
 
-def test_pandas_matmul_matches_unrolled(spark):
-    import math
-
-    import numpy as np
-
-    from rel_db_to_graph_spark.ml.gnn import linear_layer, linear_layer_pandas
-
-    df = spark.createDataFrame(
-        [(i, [float(i), float(i) + 1, 0.5]) for i in range(50)],
-        "id long, emb array<double>")
-    W = np.random.default_rng(7).normal(0, 0.3, size=(4, 3))
-    a = {r.id: r.e for r in
-         df.select("id", linear_layer(F.col("emb"), W).alias("e")).collect()}
-    b = {r.id: r.emb for r in
-         linear_layer_pandas(df, "emb", W).select("id", "emb").collect()}
-    assert all(all(math.isclose(x, y, rel_tol=1e-12) for x, y in zip(a[i], b[i]))
-               for i in a)
-
-
 def test_decoder_probability_range(spark):
     edges, feats = _toy(spark)
     emb = gnn_forward(edges, feats, hidden=3, layers=1, seed=1)
