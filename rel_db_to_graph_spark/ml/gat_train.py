@@ -51,7 +51,7 @@ optimizer, per-epoch train hook, val stats, history row, best-val
 checkpoint over the flat parameter vector). The full-batch trainers
 plug in one epoch pass (``_gat_epoch``, ``_stack_epoch``,
 ``_hetero_epoch``); the two sampled trainers share ``_sampled_fit``,
-the sampled-epoch driver (batch membership, edge-store prefetch,
+the sampled-epoch driver (batch membership, fused-sampling prefetch,
 closure fetch, val-closure collect, per-batch local steps), and plug
 in their sampler, closure frame, row parser and local epoch. The stack
 and hetero parameters each have one flat/unflat codec
@@ -91,7 +91,18 @@ from rel_db_to_graph_spark.ml.train import (
     _unflat,
     fit,
 )
-from rel_db_to_graph_spark.operators.split import check_draw
+from rel_db_to_graph_spark.operators.sampling import (
+    _forced_bucketed_scan,
+    sample_incoming,
+    sample_incoming_hetero,
+    sample_incoming_hetero_store_multi,
+    sample_incoming_store_multi,
+)
+from rel_db_to_graph_spark.operators.split import (
+    check_draw,
+    draw_bucket,
+    draw_key,
+)
 
 #: phase tracer for the sampled-trainer scale audits (SPARK_GRAFT_TRACE=1):
 #: prints wall-clock per trainer phase so the per-step scheduling floor
@@ -900,10 +911,10 @@ def _closure_union(samp: DataFrame, seeds: dict, edge_types: list,
 _VAL_COLLECT_ROWS = 5_000_000
 
 
-def _sampled_fit(examples: DataFrame, prep, codec, sample_store,
+def _sampled_fit(examples: DataFrame, prep, codec, sample,
                  closure_frame, parse, local_epoch, val_closure, *,
-                 seed_types: tuple, n_edge_types: int, store: bool,
-                 epochs: int, batch_size: int, max_batches: int | None,
+                 seed_types: tuple, n_edge_types: int, epochs: int,
+                 batch_size: int, max_batches: int | None,
                  lr: float, val_frac: float, seed: int,
                  weight_decay: float, optimizer: str, split_draw: str,
                  batch_draw: str, sample_draw: str) -> TrainResult:
@@ -915,14 +926,15 @@ def _sampled_fit(examples: DataFrame, prep, codec, sample_store,
       seeded initial parameters, run before the split (``fit``'s
       prepare); ``codec = (flat, unflat)`` maps them to and from the
       flat vector the stepper updates.
-    * ``sample_store(frontiers, seeds) -> {tag: sampled edges}``: the
-      fused multi-batch edge-store sampler call (``store=True`` only).
-      ``frontiers`` is {tag: {node type: ids}}, an example's endpoints
-      typed by ``seed_types`` = (src type, dst type).
-    * ``closure_frame(batch, samp, bseed)``: one batch's closure as a
-      tagged-row frame (kind='x' rows carry the batch examples, label
-      riding in node_id); ``samp`` None = sample by direct scan with
-      seed ``bseed``.
+    * ``sample(frontiers, seeds) -> {tag: sampled edges}``: the fused
+      multi-batch sampler call over the trainer's edge source (its
+      frames, or the edge-store tables it was given). ``frontiers`` is
+      {tag: {node type: ids}}, an example's endpoints typed by
+      ``seed_types`` = (src type, dst type); ``seeds`` is {tag: that
+      batch's sampling seed}.
+    * ``closure_frame(batch, samp)``: one batch's closure, given its
+      sampled edges, as a tagged-row frame (kind='x' rows carry the
+      batch examples, label riding in node_id).
     * ``parse(rows)``: collected closure rows → the local engine's
       arrays; ``local_epoch(closure, params, b, with_grads)`` → stats:
       the ml/local_step.py forward(+backward).
@@ -940,7 +952,8 @@ def _sampled_fit(examples: DataFrame, prep, codec, sample_store,
     in the local engine: milliseconds per step instead of the measured
     ~5-6 s of Catalyst re-analysis + ~25-stage scheduling a per-step
     DataFrame job paid, while per-step data stays O(batch ×
-    fanout^layers) by the sampling bound.
+    fanout^layers) by the sampling bound. Sampling and closure fetches
+    run ahead of the steps on a prefetch thread (``prefetch_group``).
 
     Validation forwards the val closure computed ONCE per run (it is
     parameter-independent): collected once and run locally, unless it
@@ -964,16 +977,11 @@ def _sampled_fit(examples: DataFrame, prep, codec, sample_store,
                  else min(n_batches, max_batches))
 
         def member(epoch: int) -> F.Column:
-            if batch_draw == "md5":
-                dig = F.md5(F.concat_ws(
-                    ":", F.col("src").cast("string"),
-                    F.col("dst").cast("string"), F.lit(str(seed + epoch))))
-                return F.pmod(F.conv(F.substring(dig, 1, 8), 16, 10)
-                              .cast("long"), F.lit(n_batches))
-            return F.pmod(F.xxhash64("src", "dst", F.lit(seed + epoch)),
-                          F.lit(n_batches))
+            return draw_bucket(
+                draw_key(("src", "dst"), (seed + epoch,), batch_draw),
+                batch_draw, n_batches)
 
-        def fetch(pairs: list, samp_by_pair: dict | None = None) -> dict:
+        def fetch(pairs: list, samp_by_pair: dict) -> dict:
             """{(epoch, batch): parsed closure} in collect jobs of
             ``fuse`` closures each, chunked ACROSS epochs (the fuse
             width bounds Catalyst analysis like the fused sampler's)."""
@@ -984,10 +992,7 @@ def _sampled_fit(examples: DataFrame, prep, codec, sample_store,
                                               start=lo):
                     part = closure_frame(
                         train.filter(member(ep) == bi),
-                        None if samp_by_pair is None
-                        else samp_by_pair[(ep, bi)],
-                        seed + 7919 * ep + 104729 * bi
-                    ).withColumn("_pi", F.lit(pi))
+                        samp_by_pair[(ep, bi)]).withColumn("_pi", F.lit(pi))
                     u = part if u is None else u.unionByName(part)
                 rows_by_pi: dict = {}
                 for r in u.collect():
@@ -1000,12 +1005,13 @@ def _sampled_fit(examples: DataFrame, prep, codec, sample_store,
             """Round 12: ONE fused sampling + closure-fetch pipeline for
             a GROUP of epochs. Membership and hash draws are
             parameter-independent across epochs exactly as across
-            batches, so the store probe scans ONCE per hop for the
-            union frontier (two concurrent per-epoch pipelines measured
+            batches, so the sampler probes ONCE per hop for the union
+            frontier (two concurrent per-epoch pipelines measured
             17.3+17.7 s overlapped at sf1). Per-(epoch, batch) draws are
-            bit-identical: the store-multi samplers restrict each tag
-            by its own frontier and literal seed whichever tags share
-            the probe (tests/test_edge_store.py). Returns {epoch: {bi:
+            bit-identical to a one-batch ``sample_incoming*`` call with
+            that batch's seed: the fused samplers restrict each tag by
+            its own frontier and literal seed whichever tags share the
+            probe (tests/test_edge_store.py). Returns {epoch: {bi:
             closure}}."""
             tick = _phase_clock()
             label = f"e{list(egroup)} prefetch"
@@ -1029,39 +1035,35 @@ def _sampled_fit(examples: DataFrame, prep, codec, sample_store,
             samp: dict = {}
             for lo in range(0, len(pairs), fuse):
                 chunk = pairs[lo:lo + fuse]
-                res = sample_store(
+                res = sample(
                     {tagof[p]: fr[p] for p in chunk},
                     {tagof[p]: seed + 7919 * p[0] + 104729 * p[1]
                      for p in chunk})
                 samp.update({p: res[tagof[p]] for p in chunk})
-            tick(f"{label}: store sampler")
+            tick(f"{label}: fused sampler")
             got = fetch(pairs, samp)
             tick(f"{label}: closure fetch")
             return {e: {bi: got[(e, bi)] for bi in range(steps)
                         if (e, bi) in got}
                     for e in egroup}
 
-        pool, futs, pending = None, {}, {}
+        # The bucket-scan planner override is held for the WHOLE run
+        # (session confs are not thread-local — per-prefetch set/unset
+        # from the background thread would flicker under the main
+        # thread's planning; inside the trainer the only bucketed-table
+        # scans are edge-store probes, which want it off anyway, and it
+        # has no effect on frames that are not bucketed). The local
+        # steps are milliseconds — nothing to hide sampling behind — so
+        # a TWO-epoch window of sampling + closure fetches stays in
+        # flight as one fused group: epochs 0-1 overlap the val-closure
+        # build below, each later group the epochs before it. Memory
+        # stays bounded: ≤ depth epochs of batch-bounded closures.
+        futs, pending = {}, {}
         depth = min(2, epochs)
-        if store:
-            # The bucket-scan planner override is held for the WHOLE
-            # run (session confs are not thread-local — per-prefetch
-            # set/unset from the background thread would flicker under
-            # the main thread's planning; inside the trainer the only
-            # bucketed-table scans are the store probes, which want it
-            # off anyway). The local steps are milliseconds — nothing
-            # to hide sampling behind — so a TWO-epoch window of
-            # sampling + closure fetches stays in flight as one fused
-            # group: epochs 0-1 overlap the val-closure build below,
-            # each later group the epochs before it. Memory stays
-            # bounded: ≤ depth epochs of batch-bounded closures.
-            from rel_db_to_graph_spark.operators.sampling import (
-                _forced_bucketed_scan,
-            )
-            scope.enter_context(_forced_bucketed_scan(examples.sparkSession))
-            pool = ThreadPoolExecutor(max_workers=1)
-            scope.callback(pool.shutdown, wait=True)
-            futs[0] = pool.submit(prefetch_group, tuple(range(depth)))
+        scope.enter_context(_forced_bucketed_scan(examples.sparkSession))
+        pool = ThreadPoolExecutor(max_workers=1)
+        scope.callback(pool.shutdown, wait=True)
+        futs[0] = pool.submit(prefetch_group, tuple(range(depth)))
 
         # an empty val split scores 0 loss / 0 accuracy, as the
         # distributed forward over no examples does
@@ -1079,20 +1081,15 @@ def _sampled_fit(examples: DataFrame, prep, codec, sample_store,
                 mark("val closure collect (local)")
 
         def train_epoch(epoch, theta, step):
-            if pool is None:
-                closures = {bi: c for (_, bi), c in fetch(
-                    [(epoch, bi) for bi in range(steps)]).items()}
-                mark(f"e{epoch} local closure collect")
-            else:
-                if epoch in futs:
-                    pending.update(futs.pop(epoch).result())
-                    nxt = epoch + depth
-                    if nxt < epochs:
-                        futs[nxt] = pool.submit(
-                            prefetch_group,
-                            tuple(range(nxt, min(nxt + depth, epochs))))
-                closures = pending.pop(epoch)
-                mark(f"e{epoch} prefetch join")
+            if epoch in futs:
+                pending.update(futs.pop(epoch).result())
+                nxt = epoch + depth
+                if nxt < epochs:
+                    futs[nxt] = pool.submit(
+                        prefetch_group,
+                        tuple(range(nxt, min(nxt + depth, epochs))))
+            closures = pending.pop(epoch)
+            mark(f"e{epoch} prefetch join")
             losses, ns = [], []
             for bi, closure in sorted(closures.items()):
                 stats = local_epoch(closure, *unflat(theta, like), True)
@@ -1154,10 +1151,12 @@ def train_hetero_gat_sampled(graph_edges: dict, feats: dict,
     GNN training tractable once the graph no longer fits an epoch.
 
     The epoch loop is ``_sampled_fit`` (content-addressed batches,
-    edge-store prefetch, chunked closure fetch, local steps, val
+    fused-sampling prefetch, chunked closure fetch, local steps, val
     closure). Per batch: seeds = the batch's endpoint nodes; the
-    message graph is ``sample_incoming_hetero`` (≤ fanout in-edges per
-    node per edge type, expanding backward through message flow);
+    message graph is ``sample_incoming_hetero``'s (≤ fanout in-edges
+    per node per edge type, expanding backward through message flow),
+    drawn for many batches at once by
+    ``sample_incoming_hetero_store_multi``;
     features are cut to the sampled closure (``_closure_union``); the
     step runs in ml/local_step.py::hetero_epoch_local, pinned against
     ``_hetero_epoch`` (whose numpy and finite-difference crosschecks
@@ -1175,13 +1174,13 @@ def train_hetero_gat_sampled(graph_edges: dict, feats: dict,
     edges are exactly the zero-gradient ones.
 
     ``edge_tables`` ({edge_type: table_name} from
-    sources.bucketed.write_edge_store) switches the per-batch probe to
-    the bucket-store path: instead of scanning every edge type's full
-    frame per batch (linear in |E| — the sf1 audit's bottleneck), the
-    frontier is pushed as an In(dst) filter into a dst-bucketed+sorted
-    table, pruning the scan to ~|frontier| buckets/row groups. The
-    sampled edges are bit-identical either way (tested), so the
-    exactness anchor carries over unchanged.
+    sources.bucketed.write_edge_store) picks only the sampler probe's
+    source: each hop's frontier is pushed as an In(dst) filter into the
+    dst-bucketed+sorted tables, pruning the scan to ~|frontier|
+    buckets/row groups, instead of filtering ``graph_edges`` (linear
+    in |E| — the sf1 audit's bottleneck). The sampled edges are
+    bit-identical either way (tested), so the exactness anchor carries
+    over unchanged. The val closure always reads ``graph_edges``.
 
     ``optimizer='sgd'`` + ``quantize=True`` + md5 ``split_draw`` /
     ``batch_draw`` / ``sample_draw`` is the cross-engine-replayable
@@ -1194,10 +1193,6 @@ def train_hetero_gat_sampled(graph_edges: dict, feats: dict,
     require non-null src/dst (null-dropped edge frames guarantee it).
     """
     from rel_db_to_graph_spark.ml.local_step import parse_closure_rows
-    from rel_db_to_graph_spark.operators.sampling import (
-        sample_incoming_hetero,
-        sample_incoming_hetero_store_multi,
-    )
 
     fanouts = list(fanouts) if fanouts is not None else [15]
     types = sorted(feats)
@@ -1215,10 +1210,12 @@ def train_hetero_gat_sampled(graph_edges: dict, feats: dict,
             {t: len(feats[t].select("emb").first()["emb"]) for t in types},
             edge_types, hidden, seed)
 
-    def sample_store(frontiers, seeds):
+    def sample(frontiers, seeds):
+        spark = examples.sparkSession
+        src = (graph_edges if edge_tables is None
+               else {et: spark.table(t) for et, t in edge_tables.items()})
         return sample_incoming_hetero_store_multi(
-            examples.sparkSession, edge_tables, frontiers, fanouts, seeds,
-            draw=sample_draw)
+            spark, src, frontiers, fanouts, seeds, draw=sample_draw)
 
     def x_rows(df):
         return df.select(
@@ -1226,12 +1223,9 @@ def train_hetero_gat_sampled(graph_edges: dict, feats: dict,
             F.col("label").cast("bigint").alias("node_id"),
             F.lit(None).cast("array<double>").alias("emb"))
 
-    def closure_frame(batch, samp, bseed):
-        seeds = _typed_seeds(batch, src_type, dst_type)
-        if samp is None:
-            samp = sample_incoming_hetero(graph_edges, seeds, fanouts,
-                                          seed=bseed, draw=sample_draw)
-        return _closure_union(samp.localCheckpoint(eager=False), seeds,
+    def closure_frame(batch, samp):
+        return _closure_union(samp.localCheckpoint(eager=False),
+                              _typed_seeds(batch, src_type, dst_type),
                               edge_types, feats, broadcast_ids=True
                               ).unionByName(x_rows(batch))
 
@@ -1271,14 +1265,14 @@ def train_hetero_gat_sampled(graph_edges: dict, feats: dict,
             with_grads=False, quantize=quantize)
 
     return _sampled_fit(
-        examples, prep, (_hetero_flat, _hetero_unflat), sample_store,
+        examples, prep, (_hetero_flat, _hetero_unflat), sample,
         closure_frame, lambda rows: parse_closure_rows(rows, edge_types,
                                                        types),
         local_epoch, val_closure, seed_types=(src_type, dst_type),
-        n_edge_types=len(edge_types), store=edge_tables is not None,
-        epochs=epochs, batch_size=batch_size, max_batches=max_batches,
-        lr=lr, val_frac=val_frac, seed=seed, weight_decay=weight_decay,
-        optimizer=optimizer, split_draw=split_draw, batch_draw=batch_draw,
+        n_edge_types=len(edge_types), epochs=epochs, batch_size=batch_size,
+        max_batches=max_batches, lr=lr, val_frac=val_frac, seed=seed,
+        weight_decay=weight_decay, optimizer=optimizer,
+        split_draw=split_draw, batch_draw=batch_draw,
         sample_draw=sample_draw)
 
 
@@ -1302,7 +1296,8 @@ def train_gat_stack_sampled(edges: DataFrame, feats: DataFrame,
     complete `[num_neighbors] * num_layers` LinkNeighborLoader shape
     (reference dataloader.py:24-51). Same regime and the same
     ``_sampled_fit`` driver as ``train_hetero_gat_sampled``: per-batch
-    k-hop in-edge closure via ``sample_incoming`` (L2), the
+    k-hop in-edge closure as ``sample_incoming`` (L2) draws it, many
+    batches at once via ``sample_incoming_store_multi``, the
     ml/local_step.py::stack_epoch_local step (pinned against
     ``_stack_epoch`` by tests/test_local_step.py) over the restricted
     closure, one AdamW step per batch, full-neighborhood validation
@@ -1315,9 +1310,10 @@ def train_gat_stack_sampled(edges: DataFrame, feats: DataFrame,
     gradient support.
 
     ``edge_table`` (a dst-bucketed table from
-    sources.bucketed.write_edge_table) switches the per-batch probe to
-    the bucket-store path — identical sampled edges, scan pruned to the
-    frontier's buckets/row groups instead of |E| per batch.
+    sources.bucketed.write_edge_table) picks only the sampler probe's
+    source: identical sampled edges, the scan pruned to the frontier's
+    buckets/row groups instead of filtering ``edges`` (|E|) per hop.
+    The val closure always reads ``edges``.
 
     ``optimizer='sgd'`` + ``quantize=True`` + md5 ``split_draw`` /
     ``batch_draw`` / ``sample_draw`` is the cross-engine-replayable
@@ -1328,10 +1324,6 @@ def train_gat_stack_sampled(edges: DataFrame, feats: DataFrame,
     gate (q_gat_stack_train_sampled_q). md5 draws require non-null
     src/dst (the null-dropped edge frames guarantee it)."""
     from rel_db_to_graph_spark.ml.local_step import parse_stack_closure_rows
-    from rel_db_to_graph_spark.operators.sampling import (
-        sample_incoming,
-        sample_incoming_store_multi,
-    )
 
     fanouts = list(fanouts) if fanouts is not None else [15] * layers
     if len(fanouts) != layers:
@@ -1345,9 +1337,11 @@ def train_gat_stack_sampled(edges: DataFrame, feats: DataFrame,
         return _stack_init(len(feats.select("emb").first()["emb"]), hidden,
                            layers, seed)
 
-    def sample_store(frontiers, seeds):
+    def sample(frontiers, seeds):
+        spark = examples.sparkSession
+        src = edges if edge_table is None else spark.table(edge_table)
         return sample_incoming_store_multi(
-            examples.sparkSession, edge_table,
+            spark, src,
             {tag: fr.get("node", []) for tag, fr in frontiers.items()},
             fanouts, seeds, draw=sample_draw)
 
@@ -1371,14 +1365,10 @@ def train_gat_stack_sampled(edges: DataFrame, feats: DataFrame,
                 .unionAll(samp.select(F.col("dst").alias("node_id")))
                 ).distinct()
 
-    def closure_frame(batch, samp, bseed):
+    def closure_frame(batch, samp):
         seeds = (batch.select(F.col("src").alias("node_id"))
                  .unionAll(batch.select(F.col("dst").alias("node_id")))
                  .distinct())
-        if samp is None:
-            samp = sample_incoming(edges, seeds, fanouts, seed=bseed,
-                                   draw=sample_draw
-                                   ).localCheckpoint(eager=False)
         # batch-bounded id set -> force the broadcast join (see
         # _closure_union's broadcast_ids note)
         return tagged_rows(
@@ -1406,10 +1396,10 @@ def train_gat_stack_sampled(edges: DataFrame, feats: DataFrame,
             sub, fcut, val, params, b, with_grads=False, quantize=quantize)
 
     return _sampled_fit(
-        examples, prep, (_stack_flat, _stack_unflat), sample_store,
+        examples, prep, (_stack_flat, _stack_unflat), sample,
         closure_frame, parse_stack_closure_rows, local_epoch, val_closure,
         seed_types=("node", "node"), n_edge_types=1,
-        store=edge_table is not None, epochs=epochs, batch_size=batch_size,
+        epochs=epochs, batch_size=batch_size,
         max_batches=max_batches, lr=lr, val_frac=val_frac, seed=seed,
         weight_decay=weight_decay, optimizer=optimizer,
         split_draw=split_draw, batch_draw=batch_draw,

@@ -17,7 +17,7 @@ Spark re-expression:
         sum offsets — no total sort, ids still dense 0..N-1, a pure
         function of the pk set (partitioning-independent), and SQL-
         expressible (row_number OVER (ORDER BY bucket, pk)) so the path
-        is oracle-pinned. This is ``build_graph``'s DEFAULT: at 100 TB
+        is oracle-pinned. This is what ``build_graph`` uses: at 100 TB
         the total sort is the thing that falls over.
   * edge endpoint remap — the reference's dict lookups (C:44-45) become
     two equi-joins against the id maps (J5). AQE broadcasts the id map
@@ -117,8 +117,7 @@ def dense_ids_scalable(df: DataFrame, pk: str,
          rescanning the source.
 
     ``assume_unique=True`` skips the defensive ``distinct()`` (one whole
-    shuffle) — correct whenever ``pk`` is an actual primary key, which
-    is how ``node_frame`` calls it.
+    shuffle) — correct whenever ``pk`` is an actual primary key.
 
     Fully deterministic (a pure function of the pk set, independent of
     partitioning), dense, and oracle-checkable: the DuckDB twin is the
@@ -149,8 +148,8 @@ def dense_ids_scalable(df: DataFrame, pk: str,
 def _node_frame_bucketed(df: DataFrame, table: str,
                          num_buckets: int = DEFAULT_ID_BUCKETS) -> DataFrame:
     """Fused scan → bucket → rank → offset node frame: the build_graph
-    fast path. Produces EXACTLY ``node_frame(scalable_ids=True)`` (same
-    id formula: bucket offset + in-bucket rank - 1) but as ONE plan:
+    node frame. Its ids are EXACTLY ``dense_ids_scalable``'s (same id
+    formula: bucket offset + in-bucket rank - 1), built as ONE plan:
 
       * the feature columns ride along through the bucket shuffle, so
         there is no separate id subplan and no id-map join back (the
@@ -184,26 +183,21 @@ def _node_frame_bucketed(df: DataFrame, table: str,
 
 
 def node_frame(spark: SparkSession, sf_dir: str, table: str,
-               scalable_ids: bool = False, df: DataFrame | None = None,
-               ids: DataFrame | None = None) -> DataFrame:
-    """G2: (node_id, pk, <numeric feature cols as double>) for one table.
+               df: DataFrame | None = None) -> DataFrame:
+    """G2: (node_id, pk, <numeric feature cols as double>) for one
+    table, with the sorted ``dense_ids`` (node_id = pk rank).
 
     Pass ``df`` to reuse an existing scan — every spark.read.parquet
     costs a file-listing/schema job, which adds up across 9 tables.
-    Pass ``ids`` to reuse a precomputed id map (build_graph's batched
-    offsets path).
     """
     if df is None:
         df = load_table(spark, sf_dir, table)
     pk = pk_cols_of(table)[0]
     feats = numeric_feature_cols(df, table)
-    if ids is None:
-        ids = (dense_ids_scalable(df, pk, assume_unique=True) if scalable_ids
-               else dense_ids(df, pk))
     return (
         df.select(F.col(pk).alias("pk"),
                   *[F.col(c).cast("double").alias(c) for c in feats])
-        .join(ids, "pk")
+        .join(dense_ids(df, pk), "pk")
         .select("node_id", "pk", *feats)
     )
 
@@ -311,7 +305,7 @@ def self_loops(node_ids: DataFrame) -> DataFrame:
                            F.col("node_id").alias("dst"))
 
 
-#: (applicationId, sf_dir, scalable_ids) -> built graph dict. The frames
+#: (applicationId, sf_dir, edge_attrs) -> built graph dict. The frames
 #: inside are persisted; several driver queries (hetero_counts,
 #: hetero_forward, recommend_gnn) need the same graph, and rebuilding it
 #: per query would redo every dense-id sort and edge remap. On insert,
@@ -336,7 +330,6 @@ def _evict_graph(key: tuple) -> None:
 
 
 def build_graph(spark: SparkSession, sf_dir: str, out_dir: str | None = None,
-                scalable_ids: bool = True,
                 edge_attrs: dict[tuple[str, str, str], list[str]] | None = None,
                 ) -> dict:
     """G8: full assembly. Returns {'nodes': {t: DF}, 'edges': {(s,r,d): DF}}.
@@ -346,11 +339,11 @@ def build_graph(spark: SparkSession, sf_dir: str, out_dir: str | None = None,
     Results are memoized per (session, sf_dir) — callers treat the
     returned dict as read-only (copy before mutating, as mutate.py does).
 
-    ``scalable_ids`` defaults to True: the bucketed dense-id path has no
-    total sort (the sorted ``dense_ids`` variant is a single-partition
-    sort per node table — the known 100x scale-up killer). Both id
-    assignments are deterministic and oracle-pinned; they differ only in
-    the id<->pk permutation, which graph semantics never depend on.
+    Node ids are ``dense_ids_scalable``'s bucketed dense ids: no total
+    sort (the sorted ``dense_ids`` is a single-partition sort per node
+    table — the known 100x scale-up killer). Both id assignments are
+    deterministic and oracle-pinned; they differ only in the id<->pk
+    permutation, which graph semantics never depend on.
 
     ``edge_attrs`` maps an edge type (src, rel, dst) to the pair-table
     columns to carry as per-edge double features (C:48-53); reverse and
@@ -359,8 +352,7 @@ def build_graph(spark: SparkSession, sf_dir: str, out_dir: str | None = None,
     attr_key = (tuple(sorted((k, tuple(v))
                              for k, v in edge_attrs.items()))
                 if edge_attrs else None)
-    cache_key = (spark.sparkContext.applicationId, sf_dir, scalable_ids,
-                 attr_key)
+    cache_key = (spark.sparkContext.applicationId, sf_dir, attr_key)
     if out_dir is None and cache_key in _GRAPH_CACHE:
         return _GRAPH_CACHE[cache_key]
     from rel_db_to_graph_spark.plans.inference import edge_catalog_py, node_tables_py
@@ -388,13 +380,11 @@ def build_graph(spark: SparkSession, sf_dir: str, out_dir: str | None = None,
         # edge remap, the degree join, and self-loops — without a cache
         # each consumer would redo the dense-id assignment. (At 100 TB
         # this cache is the out_dir parquet sink instead.)
-        # scalable path: the fused bucketed frame — one pass, one
-        # shuffle, exchange-reused offsets, no id-map join (ids are
-        # bit-identical to node_frame(scalable_ids=True), pinned by
-        # tests). No driver-side offset collect.
-        nf = (_node_frame_bucketed(tbl(t), t) if scalable_ids
-              else node_frame(spark, sf_dir, t, scalable_ids=False,
-                              df=tbl(t))).persist()
+        # the fused bucketed frame — one pass, one shuffle,
+        # exchange-reused offsets, no id-map join (ids are
+        # bit-identical to dense_ids_scalable, pinned by tests). No
+        # driver-side offset collect.
+        nf = _node_frame_bucketed(tbl(t), t).persist()
         ids[t] = nf.select("pk", "node_id")
         nodes[t] = nf
 

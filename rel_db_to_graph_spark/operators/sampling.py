@@ -20,6 +20,8 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from rel_db_to_graph_spark.operators.split import draw_bucket, draw_key
+
 
 def sample_neighbors(edges: DataFrame, frontier: DataFrame, fanout: int,
                      seed: int = 42, hop: int = 0,
@@ -38,12 +40,7 @@ def sample_neighbors(edges: DataFrame, frontier: DataFrame, fanout: int,
     joined = edges.join(frontier.select("src").distinct(), "src")
     if fanout < 0:
         return joined.select("src", "dst")
-    if draw == "md5":
-        rank_key = F.md5(F.concat_ws(
-            ":", F.col("src").cast("string"), F.col("dst").cast("string"),
-            F.lit(str(seed + hop))))
-    else:
-        rank_key = F.xxhash64("src", "dst", F.lit(seed + hop))
+    rank_key = draw_key(("src", "dst"), (seed + hop,), draw)
     w = Window.partitionBy("src").orderBy(rank_key, F.col("dst"))
     return (
         joined.withColumn("_rk", F.row_number().over(w))
@@ -53,27 +50,20 @@ def sample_neighbors(edges: DataFrame, frontier: DataFrame, fanout: int,
 
 
 def sample_subgraph(edges: DataFrame, seeds: DataFrame, fanouts: list[int],
-                    seed: int = 42, hop0: int = 0,
-                    draw: str = "xxhash64") -> DataFrame:
+                    seed: int = 42, draw: str = "xxhash64") -> DataFrame:
     """Multi-hop neighborhood: union of per-hop sampled edges with the
-    next frontier = sampled dst set. Returns (src, dst, hop).
-
-    ``hop0`` offsets the hop index fed into the hash draw — it lets the
-    bucket-store sampler run one hop at a time while producing draws
-    bit-identical to a single multi-hop call."""
+    next frontier = sampled dst set. Returns (src, dst, hop)."""
     frontier = seeds.select("src")
     layers = []
-    for i, fanout in enumerate(fanouts):
-        hop = hop0 + i
+    for hop, fanout in enumerate(fanouts):
         hop_edges = sample_neighbors(edges, frontier, fanout, seed, hop,
                                      draw=draw)
         layers.append(hop_edges.withColumn("hop", F.lit(hop)))
-        if i == len(fanouts) - 1:
+        if hop == len(fanouts) - 1:
             # the next frontier is never read after the last hop — and
             # building it is not free: the lazy localCheckpoint below
             # materializes the window+join's shuffle stages AT CALL
-            # TIME (driver-blocking stage-jobs), a pure per-call floor
-            # for the store path's one-hop-at-a-time calls
+            # TIME (driver-blocking stage-jobs)
             break
         frontier = hop_edges.select(F.col("dst").alias("src")).distinct()
         # lineage cut between hops: each hop's plan otherwise nests the
@@ -95,7 +85,6 @@ def _edge_type_seed(seed: int, edge_type: tuple[str, str, str]) -> int:
 
 def sample_hetero_subgraph(graph: dict, seeds: dict[str, DataFrame],
                            fanouts: list[int], seed: int = 42,
-                           hop0: int = 0,
                            draw: str = "xxhash64") -> DataFrame:
     """L2, heterogeneous (LinkNeighborLoader parity, dataloader.py:24-51):
     per hop, EVERY edge type whose src type is in the current frontier
@@ -117,8 +106,7 @@ def sample_hetero_subgraph(graph: dict, seeds: dict[str, DataFrame],
     frontier: dict[str, DataFrame] = {
         t: df.select("node_id") for t, df in seeds.items()}
     layers: list[DataFrame] = []
-    for i, fanout in enumerate(fanouts):
-        hop = hop0 + i
+    for hop, fanout in enumerate(fanouts):
         nxt: dict[str, list[DataFrame]] = {}
         for (s, rel, d), edges in sorted(graph["edges"].items()):
             if s not in frontier:
@@ -133,7 +121,7 @@ def sample_hetero_subgraph(graph: dict, seeds: dict[str, DataFrame],
                 F.lit(hop).alias("hop")))
             nxt.setdefault(d, []).append(
                 hop_edges.select(F.col("dst").alias("node_id")))
-        if i == len(fanouts) - 1:
+        if hop == len(fanouts) - 1:
             break     # dead after the last hop — see sample_subgraph
         frontier = {}
         for d, parts in nxt.items():
@@ -149,34 +137,38 @@ def sample_hetero_subgraph(graph: dict, seeds: dict[str, DataFrame],
     return out
 
 
-def sample_incoming_store_multi(spark, table: str,
+def sample_incoming_store_multi(spark, edges: DataFrame,
                                 frontiers: dict[int, list],
                                 fanouts: list[int],
                                 seeds: dict[int, int],
                                 draw: str = "xxhash64") -> dict:
-    """Fused multi-batch ``sample_incoming_store``: sample EVERY
-    mini-batch's in-edge closure in one driver job per hop instead of
-    one per batch per hop (VERDICT r8 item 7 — the sampled trainers'
-    residual cost is per-step scheduling floor, and batch membership +
-    draws are parameter-INDEPENDENT, so nothing forces the sampling
-    into the sequential optimizer loop).
+    """``sample_incoming`` for MANY mini-batches at once: every batch's
+    in-edge closure in one driver job per hop instead of one per batch
+    per hop (VERDICT r8 item 7 — the sampled trainers' residual cost is
+    per-step scheduling floor, and batch membership + draws are
+    parameter-INDEPENDENT, so nothing forces the sampling into the
+    sequential optimizer loop).
 
-    ``frontiers`` maps a batch tag -> seed node ids; ``seeds`` maps the
-    same tags -> the per-batch sampling seed. Per hop: ONE bucket-pruned
-    probe whose In(dst) filter is the union of every batch's frontier,
-    ONE join against the tagged frontier frame, and ONE window over
-    (_tag, dst) whose rank key is a per-tag CASE of exactly the
-    per-batch hash expressions (same literals, same literal TYPES —
-    xxhash64 is type-sensitive), so the drawn edges are bit-identical
-    to per-batch calls (pinned by tests/test_sampling.py) —
-    materialized by ONE eager localCheckpoint. Round 12 replaced the
-    union-of-per-batch-branches form: that form re-planned the probe
-    scan and paid one window SHUFFLE per branch (measured ~17 s/epoch
-    at sf1 — the sampled trainers' dominant exposed cost), where this
-    form pays one scan and one shuffle per hop REGARDLESS of the
-    branch count. Next frontiers for all batches come from one tagged
-    collect. Returns {tag: sampled frame}, each a RAM-resident
-    filter."""
+    ``edges`` is the (src, dst) edge source: a plain frame, or a
+    dst-bucketed table (``spark.table`` of a
+    sources.bucketed.write_edge_table name) whose probe is bucket- and
+    row-group-pruned — see ``_probe_incoming``. ``frontiers`` maps a
+    batch tag -> seed node ids; ``seeds`` maps the same tags -> the
+    per-batch sampling seed. Per hop: ONE probe whose dst filter is the
+    union of every batch's frontier, ONE join against the tagged
+    frontier frame, and ONE window over (_tag, dst) whose rank key is a
+    per-tag CASE of exactly ``sample_incoming``'s hash expression (same
+    literals, same literal TYPES — xxhash64 is type-sensitive), so each
+    tag's edges are bit-identical to ``sample_incoming(edges, that
+    tag's frontier, fanouts, seed=seeds[tag])`` (pinned by
+    tests/test_edge_store.py) — materialized by ONE eager
+    localCheckpoint. Round 12 replaced the union-of-per-batch-branches
+    form: that form re-planned the probe scan and paid one window
+    SHUFFLE per branch (measured ~17 s/epoch at sf1 — the sampled
+    trainers' dominant exposed cost), where this form pays one scan and
+    one shuffle per hop REGARDLESS of the branch count. Next frontiers
+    for all batches come from one tagged collect. Returns {tag: sampled
+    (src, dst, hop) frame}, each a RAM-resident filter."""
     cur = {tag: sorted(ids) for tag, ids in frontiers.items() if ids}
     layers: dict = {tag: [] for tag in frontiers}
     last = len(fanouts) - 1
@@ -185,27 +177,19 @@ def sample_incoming_store_multi(spark, table: str,
             if not cur:
                 break
             union_ids = sorted({i for ids in cur.values() for i in ids})
-            pruned = _probe_incoming(spark, table, union_ids)
+            pruned = _probe_incoming(edges, union_ids)
             tags = sorted(cur)
             tf = spark.createDataFrame(
                 [(int(tag), int(i)) for tag in tags for i in cur[tag]],
                 "_tag int, dst bigint")
             j = pruned.join(tf, "dst")
             if fanout >= 0:
-                # per-tag rank key: the EXACT per-branch expression
-                # (reversed orientation — sample_incoming hashes
-                # (orig dst, orig src, seed+hop) and tie-breaks on the
-                # original src)
+                # per-tag rank key: sample_incoming's EXACT expression
+                # (reversed orientation — it hashes (orig dst, orig
+                # src, seed+hop) and tie-breaks on the original src)
                 key = None
                 for tag in tags:
-                    if draw == "md5":
-                        k = F.md5(F.concat_ws(
-                            ":", F.col("dst").cast("string"),
-                            F.col("src").cast("string"),
-                            F.lit(str(seeds[tag] + hop))))
-                    else:
-                        k = F.xxhash64("dst", "src",
-                                       F.lit(seeds[tag] + hop))
+                    k = draw_key(("dst", "src"), (seeds[tag] + hop,), draw)
                     key = (F.when(F.col("_tag") == int(tag), k)
                            if key is None
                            else key.when(F.col("_tag") == int(tag), k))
@@ -238,24 +222,27 @@ def sample_incoming_store_multi(spark, table: str,
     return out
 
 
-def sample_incoming_hetero_store_multi(spark, tables: dict,
+def sample_incoming_hetero_store_multi(spark, graph_edges: dict,
                                        frontiers: dict[int, dict],
                                        fanouts: list[int],
                                        seeds: dict[int, int],
                                        draw: str = "xxhash64") -> dict:
-    """Hetero twin of ``sample_incoming_store_multi``: per hop, ONE
-    bucket-pruned probe per edge type (shared by every batch), ONE join
-    of their tagged union against the tagged frontier frame, and ONE
-    window over (_tag, edge type, dst) whose rank key is a per-tag CASE
-    of exactly the per-(batch, edge-type) hash expressions — same
-    per-edge-type seed derivation, same literal types — so the draws
-    are bit-identical to per-batch ``sample_incoming_hetero_store``
-    calls (tests/test_sampling.py, tests/test_edge_store.py). Round 12
-    replaced the union-of-branches form, which paid one window shuffle
-    per (batch, edge type); this pays one shuffle per hop regardless of
-    the batch count. ``frontiers``: tag -> {node_type: ids}. Raises the
-    per-batch path's ValueError for a tag whose seeds match no edge
-    type."""
+    """Hetero twin of ``sample_incoming_store_multi``: ``graph_edges``
+    maps each edge type (s, rel, d) to its edge source (a plain frame or
+    a ``spark.table`` of sources.bucketed.write_edge_store). Per hop:
+    ONE probe per edge type (shared by every batch), ONE join of their
+    tagged union against the tagged frontier frame, and ONE window over
+    (_tag, edge type, dst) whose rank key is a per-tag CASE of exactly
+    ``sample_incoming_hetero``'s per-edge-type hash expressions — same
+    per-edge-type seed derivation, same literal types — so each tag's
+    edges are bit-identical to ``sample_incoming_hetero(graph_edges,
+    that tag's frontier, fanouts, seed=seeds[tag])``
+    (tests/test_edge_store.py). Round 12 replaced the union-of-branches
+    form, which paid one window shuffle per (batch, edge type); this
+    pays one shuffle per hop regardless of the batch count.
+    ``frontiers``: tag -> {node_type: ids}. Raises
+    ``sample_incoming_hetero``'s ValueError for a tag whose nonempty
+    seeds match no edge type."""
     cur = {tag: {t: sorted(ids) for t, ids in fr.items() if ids}
            for tag, fr in frontiers.items()}
     layers: dict = {tag: [] for tag in frontiers}
@@ -264,7 +251,7 @@ def sample_incoming_hetero_store_multi(spark, tables: dict,
         for hop, fanout in enumerate(fanouts):
             union_ids: dict = {}
             for fr in cur.values():
-                for et, tbl in tables.items():
+                for et in graph_edges:
                     if fr.get(et[2]):
                         union_ids.setdefault(et, set()).update(fr[et[2]])
             if not union_ids:
@@ -279,7 +266,7 @@ def sample_incoming_hetero_store_multi(spark, tables: dict,
                 "_tag int, _t string, node_id bigint")
             parts = []
             for et in sorted(union_ids):
-                pruned = _probe_incoming(spark, tables[et],
+                pruned = _probe_incoming(graph_edges[et],
                                          sorted(union_ids[et]))
                 et_tags = [tag for tag in sorted(cur)
                            if cur[tag].get(et[2])]
@@ -293,19 +280,12 @@ def sample_incoming_hetero_store_multi(spark, tables: dict,
                 if fanout >= 0:
                     key = None
                     for tag in et_tags:
-                        # the reversed-graph per-edge-type seed the
-                        # per-batch pipeline derives (the rev tuple is
-                        # (dst_table, relation, src_table))
+                        # the reversed-graph per-edge-type seed
+                        # sample_incoming_hetero derives (the rev tuple
+                        # is (dst_table, relation, src_table))
                         ets = _edge_type_seed(
                             seeds[tag], (et[2], et[1], et[0]))
-                        if draw == "md5":
-                            k = F.md5(F.concat_ws(
-                                ":", F.col("dst").cast("string"),
-                                F.col("src").cast("string"),
-                                F.lit(str(ets + hop))))
-                        else:
-                            k = F.xxhash64("dst", "src",
-                                           F.lit(ets + hop))
+                        k = draw_key(("dst", "src"), (ets + hop,), draw)
                         key = (F.when(F.col("_tag") == int(tag), k)
                                if key is None
                                else key.when(F.col("_tag") == int(tag),
@@ -348,9 +328,9 @@ def sample_incoming_hetero_store_multi(spark, tables: dict,
     for tag in frontiers:
         if not layers[tag]:
             if any(ids for ids in frontiers[tag].values()):
-                # a NONEMPTY frontier no edge type reaches is the
-                # per-batch path's structural error; an empty batch is
-                # not — the trainers skip it via stats n == 0
+                # a NONEMPTY frontier no edge type reaches is
+                # sample_incoming_hetero's structural error; an empty
+                # batch is not — the trainers skip it via stats n == 0
                 raise ValueError("no edge type matched any seed node type")
             out[tag] = hempty
             continue
@@ -377,17 +357,8 @@ def negative_sample(positives: DataFrame, node_ids: DataFrame,
     pos = positives.select("src", "dst", F.lit(1).alias("label"))
     negs = []
     for i in range(ratio):
-        if draw == "md5":
-            digest = F.md5(F.concat_ws(
-                ":", F.col("src").cast("string"),
-                F.col("dst").cast("string"), F.lit(str(i)),
-                F.lit(str(seed))))
-            corrupt = F.pmod(
-                F.conv(F.substring(digest, 1, 8), 16, 10).cast("long"),
-                F.lit(n)).cast("long")
-        else:
-            corrupt = F.pmod(F.xxhash64("src", "dst", F.lit(i), F.lit(seed)),
-                             F.lit(n)).cast("long")
+        corrupt = draw_bucket(draw_key(("src", "dst"), (i, seed), draw),
+                              draw, n).cast("long")
         negs.append(
             positives.select(
                 "src",
@@ -404,7 +375,6 @@ def negative_sample(positives: DataFrame, node_ids: DataFrame,
 
 def sample_incoming_hetero(graph_edges: dict, seeds: dict,
                            fanouts: list[int], seed: int = 42,
-                           hop0: int = 0,
                            draw: str = "xxhash64") -> DataFrame:
     """L2 in the MESSAGE-DEPENDENCY direction (LinkNeighborLoader,
     dataloader.py:24-51): ≤ fanout IN-edges per target node per edge
@@ -424,8 +394,7 @@ def sample_incoming_hetero(graph_edges: dict, seeds: dict,
         (d, rel, s): df.select(F.col("dst").alias("src"),
                                F.col("src").alias("dst"))
         for (s, rel, d), df in graph_edges.items()}}
-    samp = sample_hetero_subgraph(rev, seeds, fanouts, seed=seed, hop0=hop0,
-                                  draw=draw)
+    samp = sample_hetero_subgraph(rev, seeds, fanouts, seed=seed, draw=draw)
     return samp.select(
         F.col("dst_table").alias("src_table"), "relation",
         F.col("src_table").alias("dst_table"),
@@ -434,7 +403,7 @@ def sample_incoming_hetero(graph_edges: dict, seeds: dict,
 
 def sample_incoming(edges: DataFrame, seeds: DataFrame,
                     fanouts: list[int], seed: int = 42,
-                    hop0: int = 0, draw: str = "xxhash64") -> DataFrame:
+                    draw: str = "xxhash64") -> DataFrame:
     """Homogeneous twin of ``sample_incoming_hetero``: ≤ fanout IN-edges
     per node per hop, frontier expanding backward through message flow
     (what a k-layer GNN reads to embed the seeds). Composes
@@ -446,34 +415,32 @@ def sample_incoming(edges: DataFrame, seeds: DataFrame,
     rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     samp = sample_subgraph(
         rev, seeds.select(F.col("node_id").alias("src")), fanouts, seed,
-        hop0=hop0, draw=draw)
+        draw=draw)
     return samp.select(F.col("dst").alias("src"),
                        F.col("src").alias("dst"), "hop")
 
 
-# ---------------------------------------------------------------- store path
-# Bucket-store probes (VERDICT r5 item 3): the samplers above join the
-# frontier against the FULL edge frame — correct, but every mini-batch
-# pays a scan linear in |E| even though it reads O(fanout x batch)
-# edges. The store path replaces that scan with a probe of a
-# dst-bucketed+sorted edge table (sources/bucketed.py): the frontier
-# ids (bounded by batch_size x prod(fanouts) — the same bound as the
-# sampled closure itself) are collected driver-side and pushed as an
-# In(dst, ...) filter, which Spark turns into BUCKET pruning
-# (SelectedBucketsCount k out of n) plus parquet row-group pruning
-# (sortBy clusters each key into few row groups). Per batch the scan
-# reads ~|frontier| row groups instead of |E| rows. Sampling itself is
-# the SAME code (sample_incoming* with hop0=h), so the drawn edges are
-# bit-identical to the direct path — pinned by
-# tests/test_sampling.py::test_store_path_bit_identical.
+# ---------------------------------------------------------------- probes
+# The fused samplers above read each hop's edges through ONE probe of
+# their edge source: the edges whose dst is in the union frontier
+# (bounded by batch_size x prod(fanouts) per batch — the same bound as
+# the sampled closure itself). The source is either the trainer's own
+# edge frame or a dst-bucketed+sorted edge table (sources/bucketed.py,
+# VERDICT r5 item 3). Against a table, Spark turns the probe's
+# In(dst, ...) filter into BUCKET pruning (SelectedBucketsCount k out
+# of n) plus parquet row-group pruning (sortBy clusters each key into
+# few row groups), so a hop reads ~|frontier| row groups instead of
+# |E| rows. The sampling code after the probe is the same for both
+# sources, so the drawn edges are too.
 
 
 @contextmanager
 def _forced_bucketed_scan(spark):
     """Scope in which bucketed reads stay bucketed. autoBucketedScan
-    would silently turn the probe's bucketed read back into a plain
+    would silently turn a table probe's bucketed read back into a plain
     file scan (no bucket pruning) because no join consumes the bucket
-    partitioning — force it off, and RESTORE the previous value on exit
+    partitioning — force it off (no effect on frames that are not
+    bucketed), and RESTORE the previous value on exit
     so the shared session's planner settings do not leak into queries
     that run after a sampled-trainer run (ADVICE r6: cobucket_pair
     join plans executed under the mutated conf)."""
@@ -505,109 +472,14 @@ def _forced_bucketed_scan(spark):
 _PROBE_IN_MAX = 1024
 
 
-def _probe_incoming(spark, table: str, dst_ids: list) -> DataFrame:
-    """Edges of ``table`` whose dst is in ``dst_ids`` — a
-    bucket+row-group-pruned scan for small frontiers (callers must
-    EXECUTE it inside ``_forced_bucketed_scan``; the conf is read at
-    planning time), a broadcast-joined scan past _PROBE_IN_MAX."""
-    t = spark.table(table)
+def _probe_incoming(edges: DataFrame, dst_ids: list) -> DataFrame:
+    """Rows of ``edges`` whose dst is in ``dst_ids`` — an In(dst) filter
+    for small frontiers (bucket+row-group-pruned on a dst-bucketed
+    table; callers must EXECUTE it inside ``_forced_bucketed_scan``, as
+    the conf is read at planning time), a broadcast join past
+    _PROBE_IN_MAX."""
     if len(dst_ids) <= _PROBE_IN_MAX:
-        return t.filter(F.col("dst").isin(dst_ids))
-    fr = spark.createDataFrame([(int(i),) for i in dst_ids],
-                               "dst bigint")
-    return t.join(F.broadcast(fr), "dst").select(*t.columns)
-
-
-def _collect_ids(df: DataFrame, col: str) -> list:
-    return [r[0] for r in df.select(col).distinct().collect()]
-
-
-def sample_incoming_store(spark, table: str, seeds: DataFrame,
-                          fanouts: list[int], seed: int = 42) -> DataFrame:
-    """``sample_incoming`` against a dst-bucketed edge table written by
-    sources.bucketed.write_edge_table. Bit-identical rows; per-hop scan
-    cost ~|frontier| row groups, not |E|."""
-    frontier = _collect_ids(seeds, "node_id")
-    layers = []
-    last = len(fanouts) - 1
-    with _forced_bucketed_scan(spark):
-        for hop, fanout in enumerate(fanouts):
-            if not frontier:
-                break
-            pruned = _probe_incoming(spark, table, frontier)
-            fr_df = spark.createDataFrame(
-                [(int(i),) for i in frontier], "node_id bigint")
-            # every hop (incl. the last) localCheckpoints INSIDE the
-            # scoped conf: the probe's plan is resolved at execution
-            # time, so a lazily-returned last hop would re-plan under
-            # the restored conf and silently lose bucket pruning
-            hop_edges = sample_incoming(pruned, fr_df, [fanout], seed,
-                                        hop0=hop).localCheckpoint(
-                                            eager=True)
-            layers.append(hop_edges)
-            if hop == last:    # no next frontier needed — skip the job
-                break
-            frontier = _collect_ids(hop_edges, "src")
-    if not layers:
-        return spark.createDataFrame([], "src bigint, dst bigint, hop int")
-    out = layers[0]
-    for df in layers[1:]:
-        out = out.unionAll(df)
-    return out
-
-
-def sample_incoming_hetero_store(spark, tables: dict, seeds: dict,
-                                 fanouts: list[int],
-                                 seed: int = 42) -> DataFrame:
-    """``sample_incoming_hetero`` against per-edge-type dst-bucketed
-    tables ({(s, rel, d): table_name} from
-    sources.bucketed.write_edge_store). Bit-identical rows (same
-    sample_incoming_hetero draws via hop0); the per-batch probe is
-    bucket- and row-group-pruned instead of scanning every edge type's
-    full frame. Driver state per hop: the frontier id lists, bounded by
-    batch_size x prod(fanouts).
-
-    The seed frontier collects in ONE tagged-union job (round-8 step
-    diet: one driver job per seed TYPE was pure scheduling floor —
-    the per-hop next-frontier collect was already fused this way)."""
-    su = None
-    for t, df in seeds.items():
-        part = df.select(F.lit(t).alias("_t"), "node_id").distinct()
-        su = part if su is None else su.unionByName(part)
-    frontier: dict[str, list] = {}
-    for r in su.collect():
-        frontier.setdefault(r["_t"], []).append(r["node_id"])
-    frontier = {t: sorted(ids) for t, ids in frontier.items()}
-    layers = []
-    last = len(fanouts) - 1
-    with _forced_bucketed_scan(spark):
-        for hop, fanout in enumerate(fanouts):
-            live = {et: tbl for et, tbl in tables.items()
-                    if et[2] in frontier and frontier[et[2]]}
-            if not live:
-                break
-            pruned = {et: _probe_incoming(spark, tbl, frontier[et[2]])
-                      for et, tbl in live.items()}
-            fr_dfs = {t: spark.createDataFrame([(int(i),) for i in ids],
-                                               "node_id bigint")
-                      for t, ids in frontier.items() if ids}
-            # checkpoint every hop inside the scoped conf — see
-            # sample_incoming_store for why the last hop must not
-            # escape the scope lazily
-            hop_edges = sample_incoming_hetero(
-                pruned, fr_dfs, [fanout], seed,
-                hop0=hop).localCheckpoint(eager=True)
-            layers.append(hop_edges)
-            if hop == last:    # no next frontier needed — skip the job
-                break
-            nxt: dict[str, set] = {}
-            for r in hop_edges.select("src_table",
-                                      "src").distinct().collect():
-                nxt.setdefault(r["src_table"], set()).add(r["src"])
-            frontier = {t: sorted(ids) for t, ids in nxt.items()}
-    if not layers:
-        raise ValueError("no edge type matched any seed node type")
-    out = layers[0]
-    for df in layers[1:]:
-        out = out.unionAll(df)
-    return out
+        return edges.filter(F.col("dst").isin(dst_ids))
+    fr = edges.sparkSession.createDataFrame([(int(i),) for i in dst_ids],
+                                            "dst bigint")
+    return edges.join(F.broadcast(fr), "dst").select(*edges.columns)

@@ -18,7 +18,7 @@ partitioning — the choice at 100 TB).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 #: the content-addressed hash draws every split, batch-membership and
@@ -31,6 +31,35 @@ def check_draw(draw: str) -> None:
     any Column is built, so a typo never runs as the default hash."""
     if draw not in DRAWS:
         raise ValueError(f"unknown draw {draw!r}; expected one of {DRAWS}")
+
+
+def draw_key(cols: tuple, salts: tuple, draw: str) -> Column:
+    """The content-addressed hash of a row: the key columns ``cols``
+    salted by ``salts``. 'md5' hashes the ':'-joined string forms with
+    each salt as ``str(salt)`` — the recipe DuckDB replays bit-for-bit,
+    which needs NON-NULL key columns (concat_ws drops NULLs where the
+    twin's '||' propagates them). Any other draw is xxhash64 over the
+    columns and ``F.lit(salt)``; xxhash64 is type-sensitive, so an int
+    salt must stay an int literal. Sorting by the key is a uniform
+    per-row rank; ``draw_bucket`` turns it into a bucket number."""
+    if draw == "md5":
+        return F.md5(F.concat_ws(
+            ":", *[F.col(c).cast("string") for c in cols],
+            *[F.lit(str(s)) for s in salts]))
+    return F.xxhash64(*[F.col(c) for c in cols], *[F.lit(s) for s in salts])
+
+
+def _draw_long(key: Column, draw: str) -> Column:
+    """``draw_key`` as a long: md5 keeps its first 8 hex chars (32
+    bits, as operators/sample.py::hash_draw does); xxhash64 is one."""
+    if draw == "md5":
+        return F.conv(F.substring(key, 1, 8), 16, 10).cast("long")
+    return key
+
+
+def draw_bucket(key: Column, draw: str, n: int) -> Column:
+    """The bucket in [0, n) a ``draw_key`` falls in (``pmod``)."""
+    return F.pmod(_draw_long(key, draw), F.lit(n))
 
 
 def hash_split(edges: DataFrame, val_frac: float = 0.15,
@@ -51,15 +80,12 @@ def hash_split(edges: DataFrame, val_frac: float = 0.15,
     queries feed null-dropped edge frames, and the xxhash64 default
     has no such precondition."""
     check_draw(draw)
+    key = draw_key((src, dst), (seed,), draw)
     if draw == "md5":
-        digest = F.md5(F.concat_ws(
-            ":", F.col(src).cast("string"), F.col(dst).cast("string"),
-            F.lit(str(seed))))
-        u = (F.conv(F.substring(digest, 1, 8), 16, 10).cast("long")
-             / F.lit(float(2 ** 32)))
+        u = _draw_long(key, draw) / F.lit(float(2 ** 32))
     else:
-        h = F.xxhash64(F.col(src), F.col(dst), F.lit(seed))
-        u = (F.pmod(h, F.lit(1_000_000)).cast("double") / F.lit(1_000_000.0))
+        u = (draw_bucket(key, draw, 1_000_000).cast("double")
+             / F.lit(1_000_000.0))
     train_cut = 1.0 - val_frac - test_frac
     val_cut = 1.0 - test_frac
     return edges.withColumn(

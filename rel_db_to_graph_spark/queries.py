@@ -583,7 +583,7 @@ def q_hetero_link_train_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     sub_edges, feats, labeled = _hetero_link_fixture(spark, sf_dir)
     # dst-bucketed store (VERDICT r5 item 3): one write per snapshot,
-    # then every per-batch probe is an In(dst, frontier) bucket-pruned
+    # then every sampler probe is an In(dst, frontier) bucket-pruned
     # scan instead of a full |E| pass — the sampled edges are
     # bit-identical (tests/test_edge_store.py)
     from rel_db_to_graph_spark.sources.bucketed import write_edge_store
@@ -719,7 +719,7 @@ def q_gat_stack_train_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rel_db_to_graph_spark.ml.gat_train import train_gat_stack_sampled
 
     edges, feats, ex = _ring_stride_fixture(spark, sf_dir)
-    # dst-bucketed store: per-batch probes prune to the frontier's
+    # dst-bucketed store: the sampler probes prune to the frontier's
     # buckets/row groups instead of scanning |E| (bit-identical draws,
     # tests/test_edge_store.py)
     from rel_db_to_graph_spark.sources.bucketed import write_edge_table

@@ -78,8 +78,10 @@ def write_edge_table(edges: DataFrame, table: str,
 def write_edge_store(graph_edges: dict, num_buckets: int = 16,
                      prefix: str = "edgestore") -> dict:
     """Persist every edge type of a build_graph edges dict as a
-    dst-bucketed table; returns {edge_type: table_name} for
-    operators.sampling.sample_incoming_hetero_store."""
+    dst-bucketed table; returns {edge_type: table_name}, the
+    ``edge_tables`` of ml/gat_train.py::train_hetero_gat_sampled (whose
+    fused sampler, operators.sampling.sample_incoming_hetero_store_multi,
+    probes their ``spark.table`` reads)."""
     tables = {}
     for (s, rel, d), df in sorted(graph_edges.items()):
         name = f"{prefix}_{s}_{rel}_{d}".lower()

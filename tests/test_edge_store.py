@@ -1,13 +1,22 @@
-"""Bucket-store sampling path (VERDICT r5 item 3): the sampled GNN
-trainers' per-batch probe against a dst-bucketed+sorted edge table must
-(a) draw BIT-IDENTICAL edges to the direct full-frame path, (b) produce
-a bucket- and row-group-pruned scan plan, and (c) leave the sampled
-trainers' histories unchanged when switched on."""
+"""The fused multi-batch samplers and their edge sources (VERDICT r5
+item 3): probing the trainer's own edge frames or a dst-bucketed+sorted
+edge table must (a) draw, per batch tag, BIT-IDENTICAL edges to the
+direct one-batch samplers, (b) produce a bucket- and row-group-pruned
+scan plan against a table, and (c) leave the sampled trainers'
+histories unchanged when the table source is switched on."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
+from rel_db_to_graph_spark.operators.sampling import (
+    _PROBE_IN_MAX,
+    sample_incoming,
+    sample_incoming_hetero,
+    sample_incoming_hetero_store_multi,
+    sample_incoming_store_multi,
+)
 from rel_db_to_graph_spark.sources.bucketed import (
     write_edge_store,
     write_edge_table,
@@ -28,98 +37,106 @@ def _edges(spark, n=500, deg=6):
     return out.filter(F.col("src") != F.col("dst")).distinct()
 
 
-def test_store_path_bit_identical_homogeneous(spark):
-    from rel_db_to_graph_spark.operators.sampling import (
-        sample_incoming,
-        sample_incoming_store,
-    )
-    edges = _edges(spark).localCheckpoint(eager=True)
-    write_edge_table(edges, "t_edge_store_homo", num_buckets=8)
-    seeds = spark.range(10).select((F.col("id") * 37 % 500)
-                                   .alias("node_id")).distinct()
-    direct = sample_incoming(edges, seeds, [3, 2], seed=7)
-    stored = sample_incoming_store(spark, "t_edge_store_homo", seeds,
-                                   [3, 2], seed=7)
-    d = {tuple(r) for r in direct.collect()}
-    s = {tuple(r) for r in stored.collect()}
-    assert d == s and len(d) > 10
+def _ids_frame(spark, ids):
+    return spark.createDataFrame([(int(i),) for i in ids], "node_id bigint")
 
 
-def test_store_path_bit_identical_hetero(spark):
-    from rel_db_to_graph_spark.operators.sampling import (
-        sample_incoming_hetero,
-        sample_incoming_hetero_store,
-    )
-    e1 = _edges(spark, n=300, deg=4).localCheckpoint(eager=True)
-    e2 = (_edges(spark, n=300, deg=3)
-          .select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-          .localCheckpoint(eager=True))
-    graph = {("a", "r1", "b"): e1, ("b", "r2", "a"): e2}
-    tables = write_edge_store(graph, num_buckets=8, prefix="t_es_het")
-    seeds = {"b": spark.range(8).select((F.col("id") * 31 % 300)
-                                        .alias("node_id")).distinct()}
-    direct = sample_incoming_hetero(graph, seeds, [3, 2], seed=11)
-    stored = sample_incoming_hetero_store(spark, tables, seeds, [3, 2],
-                                          seed=11)
-    d = {tuple(r) for r in direct.collect()}
-    s = {tuple(r) for r in stored.collect()}
-    assert d == s and len(d) > 10
+def _assert_tags_match(multi, fronts, direct):
+    """Every tag of a fused sampler result equals ``direct(tag)``, the
+    one-batch reference sample (an empty set for an empty frontier)."""
+    assert set(multi) == set(fronts)
+    for tag in fronts:
+        got = {tuple(r) for r in multi[tag].collect()}
+        assert got == (direct(tag) if fronts[tag] else set()), f"tag {tag}"
 
 
-def test_store_multi_bit_identical_homogeneous(spark):
-    """The fused multi-batch sampler (one probe + one union-of-branches
-    job per hop for ALL batches — VERDICT r8 item 7's scheduling-floor
-    fix) must draw exactly the per-batch store path's edges for every
-    tag, including tags with empty frontiers."""
-    from rel_db_to_graph_spark.operators.sampling import (
-        sample_incoming_store,
-        sample_incoming_store_multi,
-    )
-    edges = _edges(spark).localCheckpoint(eager=True)
+@pytest.fixture(scope="module", params=["frame", "table"])
+def homo_edges(request, spark):
+    """(edge frame, the fused sampler's source for it): the frame
+    itself, or its dst-bucketed table. Wider than _PROBE_IN_MAX."""
+    edges = _edges(spark, n=_PROBE_IN_MAX + 200).localCheckpoint(eager=True)
+    if request.param == "frame":
+        return edges, edges
     write_edge_table(edges, "t_edge_store_multi", num_buckets=8)
-    fronts = {0: [7, 44, 81, 155], 1: [3, 81, 200, 301, 499], 2: []}
-    seeds = {0: 101, 1: 202, 2: 303}
-    multi = sample_incoming_store_multi(
-        spark, "t_edge_store_multi", fronts, [3, 2], seeds)
-    for tag, ids in fronts.items():
-        want = set()
-        if ids:
-            one = sample_incoming_store(
-                spark, "t_edge_store_multi",
-                spark.createDataFrame([(int(i),) for i in ids],
-                                      "node_id bigint"),
-                [3, 2], seed=seeds[tag])
-            want = {tuple(r) for r in one.collect()}
-        got = {tuple(r) for r in multi[tag].collect()}
-        assert got == want, f"tag {tag}"
-    assert len({tuple(r) for r in multi[0].collect()}) > 4
+    return edges, spark.table("t_edge_store_multi")
 
 
-def test_store_multi_bit_identical_hetero(spark):
-    from rel_db_to_graph_spark.operators.sampling import (
-        sample_incoming_hetero_store,
-        sample_incoming_hetero_store_multi,
-    )
-    e1 = _edges(spark, n=300, deg=4).localCheckpoint(eager=True)
-    e2 = (_edges(spark, n=300, deg=3)
+@pytest.fixture(scope="module", params=["frame", "table"])
+def hetero_edges(request, spark):
+    """Hetero twin of ``homo_edges``: (graph edges dict, its source)."""
+    n = _PROBE_IN_MAX + 100
+    e1 = _edges(spark, n=n, deg=4).localCheckpoint(eager=True)
+    e2 = (_edges(spark, n=n, deg=3)
           .select(F.col("dst").alias("src"), F.col("src").alias("dst"))
           .localCheckpoint(eager=True))
     graph = {("a", "r1", "b"): e1, ("b", "r2", "a"): e2}
+    if request.param == "frame":
+        return graph, graph
     tables = write_edge_store(graph, num_buckets=8, prefix="t_es_multi")
-    fronts = {0: {"b": [8, 39, 101]}, 1: {"b": [39, 250], "a": [17, 60]}}
-    seeds = {0: 11, 1: 12}
-    multi = sample_incoming_hetero_store_multi(
-        spark, tables, fronts, [3, 2], seeds)
-    for tag, fr in fronts.items():
-        sdfs = {t: spark.createDataFrame([(int(i),) for i in ids],
-                                         "node_id bigint")
-                for t, ids in fr.items()}
-        one = sample_incoming_hetero_store(spark, tables, sdfs, [3, 2],
-                                           seed=seeds[tag])
-        got = {tuple(r) for r in multi[tag].collect()}
-        want = {tuple(r) for r in one.collect()}
-        assert got == want, f"tag {tag}"
-        assert len(got) > 4
+    return graph, {et: spark.table(t) for et, t in tables.items()}
+
+
+@pytest.mark.parametrize("draw", ["xxhash64", "md5"])
+def test_fused_sampler_matches_direct_homogeneous(spark, homo_edges, draw):
+    """The fused multi-batch sampler (one probe + one window shuffle per
+    hop for ALL batches — VERDICT r8 item 7's scheduling-floor fix) must
+    draw, for every tag, exactly the edges of a one-batch
+    ``sample_incoming`` call with that tag's seed — from the trainer's
+    own frame or from a dst-bucketed table, for a tag with an empty
+    frontier, and for a frontier past _PROBE_IN_MAX (the broadcast-join
+    probe)."""
+    edges, src = homo_edges
+    seeds = {0: 101, 1: 202, 2: 303, 3: 404}
+
+    def direct(fronts):
+        return lambda tag: {tuple(r) for r in sample_incoming(
+            edges, _ids_frame(spark, fronts[tag]), [3, 2],
+            seed=seeds[tag], draw=draw).collect()}
+
+    small = {0: [7, 44, 81, 155], 1: [3, 81, 200, 301, 499], 2: []}
+    multi = sample_incoming_store_multi(spark, src, small, [3, 2], seeds,
+                                        draw=draw)
+    _assert_tags_match(multi, small, direct(small))
+    assert len({tuple(r) for r in multi[0].collect()}) > 4
+    wide = {3: list(range(_PROBE_IN_MAX + 1))}
+    multi = sample_incoming_store_multi(spark, src, wide, [3, 2], seeds,
+                                        draw=draw)
+    _assert_tags_match(multi, wide, direct(wide))
+
+
+@pytest.mark.parametrize("draw", ["xxhash64", "md5"])
+def test_fused_sampler_matches_direct_hetero(spark, hetero_edges, draw):
+    """Hetero twin: every tag equals a one-batch
+    ``sample_incoming_hetero`` call with that tag's seed, from frames or
+    an edge store, including an empty tag and a frontier past
+    _PROBE_IN_MAX; a nonempty frontier no edge type reaches raises the
+    direct sampler's ValueError."""
+    graph, src = hetero_edges
+    seeds = {0: 11, 1: 12, 2: 13, 3: 14}
+
+    def direct(fronts):
+        return lambda tag: {tuple(r) for r in sample_incoming_hetero(
+            graph, {t: _ids_frame(spark, ids)
+                    for t, ids in fronts[tag].items()},
+            [3, 2], seed=seeds[tag], draw=draw).collect()}
+
+    small = {0: {"b": [8, 39, 101]}, 1: {"b": [39, 250], "a": [17, 60]},
+             2: {}}
+    multi = sample_incoming_hetero_store_multi(spark, src, small, [3, 2],
+                                               seeds, draw=draw)
+    _assert_tags_match(multi, small, direct(small))
+    assert all(len({tuple(r) for r in multi[t].collect()}) > 4
+               for t in (0, 1))
+    wide = {3: {"a": list(range(_PROBE_IN_MAX + 1))}}
+    multi = sample_incoming_hetero_store_multi(spark, src, wide, [3, 2],
+                                               seeds, draw=draw)
+    _assert_tags_match(multi, wide, direct(wide))
+    with pytest.raises(ValueError, match="no edge type matched"):
+        sample_incoming_hetero_store_multi(spark, src, {0: {"c": [1]}},
+                                           [3, 2], seeds, draw=draw)
+    with pytest.raises(ValueError, match="no edge type matched"):
+        sample_incoming_hetero(graph, {"c": _ids_frame(spark, [1])},
+                               [3, 2], seed=seeds[0], draw=draw)
 
 
 def test_store_probe_plan_is_bucket_pruned(spark):
@@ -134,7 +151,8 @@ def test_store_probe_plan_is_bucket_pruned(spark):
     edges = _edges(spark, n=2000, deg=6)
     write_edge_table(edges, "t_edge_store_plan", num_buckets=16)
     with _forced_bucketed_scan(spark):
-        probe = _probe_incoming(spark, "t_edge_store_plan", [5, 77, 123])
+        probe = _probe_incoming(spark.table("t_edge_store_plan"),
+                                [5, 77, 123])
         plan = probe._jdf.queryExecution().executedPlan().toString()
     assert "In(dst" in plan, plan
     assert "SelectedBucketsCount" in plan, plan

@@ -195,13 +195,14 @@ def test_graph_cache_eviction_unpersists(spark):
     persisted frames are freed (VERDICT r4 nit: eviction used to leak
     persisted RDDs in long-lived multi-sf processes)."""
     Q.clear_caches()
-    g1 = build_graph(spark, SF_SMOKE, scalable_ids=True)
+    g1 = build_graph(spark, SF_SMOKE)
     first_frames = (list(g1["nodes"].values()) + list(g1["edges"].values()))
     assert any(df.storageLevel.useMemory for df in first_frames)
-    build_graph(spark, SF_SMOKE, scalable_ids=False)
-    build_graph(spark, "/root/testdata/sf0.01", scalable_ids=True)
+    build_graph(spark, SF_SMOKE,
+                edge_attrs={("orders", "hasPart", "part"): ["l_quantity"]})
+    build_graph(spark, "/root/testdata/sf0.01")
     assert len(gb._GRAPH_CACHE) == gb._GRAPH_CACHE_MAX_PER_APP
-    key1 = (spark.sparkContext.applicationId, SF_SMOKE, True, None)
+    key1 = (spark.sparkContext.applicationId, SF_SMOKE, None)
     assert key1 not in gb._GRAPH_CACHE
     assert not any(df.storageLevel.useMemory or df.storageLevel.useDisk
                    for df in first_frames), "evicted frames still persisted"
