@@ -338,6 +338,10 @@ def build_graph(spark: SparkSession, sf_dir: str, out_dir: str | None = None,
     degree -> reverse -> self loops (-> parquet sink if out_dir).
     Results are memoized per (session, sf_dir) — callers treat the
     returned dict as read-only (copy before mutating, as mutate.py does).
+    The one sanctioned exception is ``"dst_tables"``: ``pipeline.recommend``
+    keeps its per-graph serve tables (driver-side numpy, keyed on
+    (dst type, hidden, layers, seed)) there, so they are dropped with the
+    cache entry. Code that copies or iterates the dict sees that key too.
 
     Node ids are ``dense_ids_scalable``'s bucketed dense ids: no total
     sort (the sorted ``dense_ids`` is a single-partition sort per node

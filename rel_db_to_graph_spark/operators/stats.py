@@ -129,10 +129,11 @@ def tfidf_keywords(docs: DataFrame, k: int = 3, id_col: str = "doc_id",
     The classic two-pass shape: one groupBy((doc, term)) for term
     frequencies, one groupBy(term) for document frequencies (distinct
     docs per term — partial-aggregated, shuffles (term, doc) pairs
-    once), a broadcast-sized N, then a per-doc window rank. At corpus
-    scale the df table is vocabulary-sized (millions, not billions) and
-    broadcast-joins back onto the tf table; nothing reshuffles the
-    corpus itself.
+    once), a broadcast-sized N, then a per-doc window rank. The df
+    table is vocabulary-sized; it joins back onto the tf table as a
+    broadcast when its size is under ``autoBroadcastJoinThreshold``
+    (statically, or at runtime through AQE's join conversion), and as a
+    shuffled join otherwise — no hint forces an unbounded broadcast.
 
     idf is INTEGER-QUANTIZED — idf_milli = (1000·N) div df, score =
     tf · idf_milli — rather than a float log: the ranking must be
@@ -151,18 +152,20 @@ def tfidf_keywords(docs: DataFrame, k: int = 3, id_col: str = "doc_id",
     #   * document frequency is a groupBy(term) of the tf table — its
     #     OWN exchange carries VOCABULARY-sized partial counts (map-side
     #     combine makes a stopword-grade hot term one row per partition,
-    #     not one giant buffered group), and the result broadcast-joins
-    #     back. The r12 window-df shape shuffled the FULL tf table by
-    #     term with no partial aggregation, so one hot term became a
-    #     single unsplittable WindowExec group (AQE skew handling never
-    #     applies to windows) — fine at test SF, a straggler cliff at
-    #     corpus scale.
-    # Net: 1 corpus-sized shuffle instead of the r12 shape's 3 (tf by
-    # (doc, term), by term, by doc), skew-safe at every key. df values
-    # are identical (tf is one row per (doc, term), so count-per-term
-    # over tf IS the distinct-doc count); the broadcast side is the
-    # vocabulary aggregate — millions of rows at corpus scale, the
-    # documented-safe broadcast band.
+    #     not one giant buffered group), and the result joins back.
+    #     The r12 window-df shape shuffled the FULL tf table by term
+    #     with no partial aggregation, so one hot term became a single
+    #     unsplittable WindowExec group (AQE skew handling never applies
+    #     to windows) — fine at test SF, a straggler cliff at corpus
+    #     scale.
+    # Net, while df broadcasts: 1 corpus-sized shuffle instead of the r12
+    # shape's 3 (tf by (doc, term), by term, by doc), skew-safe at every
+    # key. df values are identical (tf is one row per (doc, term), so
+    # count-per-term over tf IS the distinct-doc count). The df join
+    # carries no broadcast hint: the vocabulary aggregate has no size
+    # bound, so the threshold (and AQE's runtime conversion on the
+    # materialized size) decides, and above it the join falls back to a
+    # shuffle of tf by term. The one-row n_docs stays hinted.
     terms = (docs.select(
         F.col(id_col).alias("doc_id"),
         F.explode(tokens(normalize(F.col(text_col)))).alias("term"))
@@ -173,7 +176,7 @@ def tfidf_keywords(docs: DataFrame, k: int = 3, id_col: str = "doc_id",
     n_docs = docs.select(F.countDistinct(F.col(id_col)).alias("_n"))
     from pyspark.sql import Window
     w = Window.partitionBy("doc_id").orderBy(F.desc("score"), F.asc("term"))
-    return (tf.join(F.broadcast(df_), "term")
+    return (tf.join(df_, "term")
             .crossJoin(F.broadcast(n_docs))
             .withColumn("score",
                         F.col("tf")

@@ -1,24 +1,49 @@
 """End-to-end pipeline — the reference's three entry points composed
 (SURVEY.md §3): convert (graph build) → train (split/sample/train) →
-inference (mutate + score + top-k), each stage a function over the same
+inference (embed + score + top-k), each stage a function over the same
 node/edge frames.
 
 This is the integration surface a user of the reference would migrate
 to: ``convert()`` replaces `python convert_to_graph.py`, ``train()``
 replaces `python train.py`, ``recommend()`` replaces the Streamlit
 `predict_songs` call.
+
+Serving splits the work the Modularis way: Spark moves the data once,
+the driver does the small dense math. The reference mutates the graph
+with the request's new src node and runs a full forward per request
+(I:44-76). For a cross-type edge that mutation
+(``operators.mutate.mutate_for_inference``) rewrites only the target
+edge type, its REVERSE and the src SELF_LOOP — never a dst→dst edge —
+so the dst-type embedding the request is scored against cannot depend
+on the basket. ``recommend`` therefore computes it once per graph,
+collects it into a float64 matrix indexed by the dense node id, kept in
+the graph dict (``graph["dst_tables"]``), and scores every request from
+that table in numpy. The collect is bounded by
+``DST_TABLE_MAX_BYTES``. The table lives and dies with the
+graph: evicting the ``graph_build._GRAPH_CACHE`` entry or
+``queries.clear_caches()`` drops it, and being plain numpy it has
+nothing to unpersist. The served embedding is a frozen, seeded forward
+(``ml.gnn.gnn_forward``), not the model ``train()`` fits; the reference
+serves its trained checkpoint instead (SURVEY.md I:12-41).
 """
 
 from __future__ import annotations
 
+from decimal import ROUND_HALF_UP, Decimal
+from functools import reduce
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from rel_db_to_graph_spark.functions.vector import dot, sigmoid, to_double
 from rel_db_to_graph_spark.ml.gnn import gnn_forward
 from rel_db_to_graph_spark.ml.train import TrainResult, train_edge_scorer
 from rel_db_to_graph_spark.operators.graph_build import build_graph
-from rel_db_to_graph_spark.operators.mutate import mutate_for_inference
+# not called here since serving reads the per-graph dst table; kept as a
+# module attribute because perfbench's pipeline workload wraps
+# ``pipeline.mutate_for_inference`` in its ``mutate`` span
+from rel_db_to_graph_spark.operators.mutate import mutate_for_inference  # noqa: F401
 from rel_db_to_graph_spark.operators.sampling import negative_sample
 from rel_db_to_graph_spark.operators.split import random_link_split
 
@@ -80,41 +105,113 @@ def train(graph: dict, edge_type: tuple, epochs: int = 5,
     return train_edge_scorer(examples, dim=dim, epochs=epochs, seed=seed)
 
 
+# the per-graph dst table is collected to the driver: past this many
+# bytes of float64 rows (8.4M dst rows at hidden=4) serving refuses
+# rather than overrun ``spark.driver.maxResultSize``
+DST_TABLE_MAX_BYTES = 256 << 20
+
+
+def _dst_table(graph: dict, dst_t: str, hidden: int, layers: int,
+               seed: int) -> np.ndarray:
+    """float64 embedding rows of ``dst_t``, row ``i`` for node id ``i``
+    (ids are ``dense_ids_scalable``'s 0..N-1): one GNN forward over its
+    own-type edges (SELF_LOOP + any dst→dst edge types), collected once
+    per graph and kept in ``graph["dst_tables"]``."""
+    tables = graph.setdefault("dst_tables", {})
+    key = (dst_t, hidden, layers, seed)
+    if key not in tables:
+        n = graph["nodes"][dst_t].count()
+        if n * hidden * 8 > DST_TABLE_MAX_BYTES:
+            raise ValueError(
+                f"{n} {dst_t} rows x {hidden} doubles exceed the "
+                f"{DST_TABLE_MAX_BYTES}-byte driver budget of the serve "
+                f"table (pipeline.DST_TABLE_MAX_BYTES)")
+        edges = reduce(DataFrame.unionAll,
+                       [df for (s, _r, d), df in graph["edges"].items()
+                        if s == dst_t and d == dst_t])
+        emb = node_embeddings(graph, dst_t, edges,
+                              hidden=hidden, layers=layers, seed=seed)
+        pdf = emb.select("node_id", *[F.col("emb")[j].alias(f"e{j}")
+                                      for j in range(hidden)]).toPandas()
+        ids = pdf.pop("node_id").to_numpy()
+        mat = np.empty((n, hidden))
+        mat[ids] = pdf.to_numpy(np.float64)
+        tables[key] = mat
+    return tables[key]
+
+
+def _round6(p: np.ndarray) -> np.ndarray:
+    """Spark's ``round(p, 6)`` on doubles: HALF_UP on each value's
+    shortest decimal string. ``rint`` of the scaled value picks the same
+    integer except within float error of a half; those few values take
+    the decimal rounding itself."""
+    scaled = p * 1e6
+    out = np.rint(scaled) / 1e6
+    for i in np.flatnonzero(np.abs(scaled - np.floor(scaled) - 0.5) < 1e-6):
+        out[i] = float(Decimal(repr(float(p[i]))).quantize(
+            Decimal("1e-6"), rounding=ROUND_HALF_UP))
+    return out
+
+
 def recommend(graph: dict, edge_type: tuple, selected_dst_ids: list[int],
               k: int = 10, hidden: int = 4, layers: int = 2,
               seed: int = 42) -> DataFrame:
-    """Stage 3 (inference.py analog): mutate the graph with a new node
-    whose neighbors are ``selected_dst_ids``, embed the dst nodes with a
-    GNN forward over their own-type graph (SELF_LOOP + any same-type
-    edges — the homogeneous slice the encoder operates on), then score
-    every candidate with the dot decoder against the new node's
-    embedding (= mean of its selected neighbors), top-k."""
+    """Stage 3 (inference.py analog): rank the dst nodes for one new src
+    node whose neighbors are ``selected_dst_ids``.
+
+    The new node's embedding is the mean of its selected neighbors' dst
+    embeddings; every other dst node is scored with the dot decoder,
+    ``round(sigmoid(new · emb), 6)``, and the top ``k`` by (prob desc,
+    dst asc) are returned as a ``DataFrame(dst bigint, prob double)``.
+
+    The dst embeddings come from a frozen, seeded GNN forward over the
+    dst type's own edges (not the model ``train`` fits). The reference's
+    graph mutation for the request touches no dst→dst edge, so that
+    forward cannot depend on the basket: it runs once per graph and is
+    kept in ``graph["dst_tables"]`` (dropped with the graph's cache entry
+    and by ``queries.clear_caches()``). Scoring and top-k then run in
+    numpy on the driver, and the result frame is built from pandas
+    through Arrow (which ``get_spark`` enables), so a warm request
+    submits no Spark job. The mean is
+    over the distinct selected ids; the dot is a left fold in column
+    order, as ``functions.vector.dot`` computes it.
+
+    The table is ``|dst| x hidden`` doubles on the driver; a dst type
+    past ``DST_TABLE_MAX_BYTES`` raises ``ValueError`` before the forward
+    runs (one count of the cached node frame) instead of failing the
+    collect.
+
+    Raises ``ValueError`` for a same-type edge type (the basket would
+    then change the dst graph; no edge type of the catalog is one),
+    ``layers < 1``, an empty basket, ids that are not ``dst`` nodes
+    (checked against the table before any scoring), or a dst table over
+    the driver budget.
+    """
     src_t, _rel, dst_t = edge_type
-    m = mutate_for_inference(graph, edge_type, selected_dst_ids)
+    if src_t == dst_t:
+        raise ValueError(f"recommend serves cross-type edge types; {edge_type} "
+                         f"links {src_t} to itself")
+    if layers < 1:
+        raise ValueError(f"recommend embeds with at least one GNN layer, "
+                         f"not {layers}")
+    sel = np.unique(np.asarray(selected_dst_ids, np.int64))
+    if not len(sel):
+        raise ValueError("recommend needs at least one selected dst id")
+    mat = _dst_table(graph, dst_t, hidden, layers, seed)
+    unknown = sel[(sel < 0) | (sel >= len(mat))]
+    if len(unknown):
+        raise ValueError(f"unknown {dst_t} ids: {unknown.tolist()}")
 
-    # homogeneous dst-type subgraph: self loops + any dst→dst edge types
-    same_type = [df for (s, r, d), df in m["edges"].items()
-                 if s == dst_t and d == dst_t]
-    edges_dd = same_type[0]
-    for df in same_type[1:]:
-        edges_dd = edges_dd.unionAll(df)
-    emb_dst = node_embeddings(graph, dst_t, edges_dd,
-                              hidden=hidden, layers=layers, seed=seed)
-    emb_dst = emb_dst.localCheckpoint(eager=True)
+    new_emb = mat[sel].sum(axis=0) / len(sel)
+    logit = np.zeros(len(mat))
+    for j in range(hidden):
+        logit = logit + mat[:, j] * new_emb[j]
+    prob = _round6(1.0 / (1.0 + np.exp(-logit)))
 
-    # new-node embedding = mean of its selected neighbors' embeddings
-    sel = [int(x) for x in selected_dst_ids]
-    sel_emb = (emb_dst.filter(F.col("node_id").isin(sel))
-               .select(F.posexplode("emb").alias("pos", "x"))
-               .groupBy("pos").agg(F.avg("x").alias("m"))
-               .orderBy("pos").collect())
-    new_emb = F.array(*[F.lit(float(r.m)) for r in sel_emb])
-
-    scored = (
-        m["candidates"]
-        .join(emb_dst.select(F.col("node_id").alias("dst"), "emb"), "dst")
-        .select("dst",
-                F.round(sigmoid(dot(to_double(F.col("emb")), new_emb)), 6)
-                .alias("prob"))
-    )
-    return scored.orderBy(F.desc("prob"), F.col("dst")).limit(k)
+    cand = np.ones(len(mat), bool)
+    cand[sel] = False
+    cand = np.flatnonzero(cand)
+    top = cand[np.lexsort((cand, -prob[cand]))[:k]]
+    spark = graph["nodes"][dst_t].sparkSession
+    return spark.createDataFrame(pd.DataFrame({"dst": top, "prob": prob[top]}),
+                                 schema="dst bigint, prob double")

@@ -159,9 +159,10 @@ def test_tfidf_is_skew_safe_single_corpus_shuffle(spark):
     exchange reuse) and the rank window all ride that exchange. The
     skew pins: NO term-partitioned window anywhere (the r12 df window
     buffered a hot term's full posting list in one unsplittable
-    WindowExec group), and the df re-attach is a BROADCAST join, never
-    a shuffled one — so no corpus-sized term-keyed repartition exists
-    in the plan at all."""
+    WindowExec group), and while the vocabulary is under the broadcast
+    threshold (it is at this SF) the df re-attach is a BROADCAST join,
+    never a shuffled one — so no corpus-sized term-keyed repartition
+    exists in the plan at all."""
     import re
 
     p = plan_of(Q.q_tfidf_keywords(spark, SF_ORACLE))
@@ -176,22 +177,26 @@ def test_tfidf_is_skew_safe_single_corpus_shuffle(spark):
 
 
 def test_tfidf_ranking_is_join_strategy_independent(spark):
-    """Successor of the r7 broadcast-fallback pin: the df join is
-    hint-forced broadcast (the build side is the vocabulary aggregate,
-    not a corpus-sized frame), so disabling auto-broadcast outright
-    (threshold -1 — the knob that used to force the SortMergeJoin
-    fallback) must leave both the broadcast plan shape and every
-    keyword rank byte-identical."""
+    """Successor of the r7 broadcast-fallback pin: the df join carries
+    no broadcast hint (the vocabulary aggregate has no size bound), so
+    disabling auto-broadcast outright (threshold -1, which also turns
+    off AQE's runtime conversion) must leave df un-broadcast — the
+    executed plan re-attaches it with a shuffled join, and only the
+    one-row n_docs is broadcast — and every keyword rank
+    byte-identical."""
     expected = sorted(
         tuple(r) for r in Q.q_tfidf_keywords(spark, SF_ORACLE).collect())
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         df = Q.q_tfidf_keywords(spark, SF_ORACLE)
-        p = plan_of(df)
-        assert "SortMergeJoin" not in p and "ShuffledHashJoin" not in p
         got = sorted(tuple(r) for r in df.collect())
+        final = df._jdf.queryExecution().executedPlan().toString()
     finally:
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    assert "isFinalPlan=true" in final
+    assert "BroadcastHashJoin" not in final      # df is not broadcast
+    assert "SortMergeJoin" in final              # the term-keyed fallback
+    assert "BroadcastNestedLoopJoin" in final    # n_docs stays broadcast
     assert got == expected
 
 
